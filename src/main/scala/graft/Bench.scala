@@ -165,6 +165,18 @@ object Bench {
 
   private def r3(x: Double) = math.rint(x * 1000) / 1000
 
+  /** Wall seconds of one query run; NaN when it throws, so a fast failure
+    * can never pass for a timing. */
+  def timeRun(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    try { body; (System.nanoTime() - t0) / 1e9 }
+    catch { case _: Throwable => Double.NaN }
+  }
+
+  /** Fastest successful sample; NaN when every sample failed. */
+  def bestOf(samples: Seq[Double]): Double =
+    samples.filterNot(_.isNaN).minOption.getOrElse(Double.NaN)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -207,16 +219,16 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadBefore = osBean.getSystemLoadAverage
     val qHostCpuBefore = if (skipQueries) 0.0 else cpuOps(cpus)
-    val results =
+    val samples =
       if (skipQueries) Seq.empty
       else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val runs = (1 to queryRuns).map { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
-        }
-        name -> runs.min
+        name -> (1 to queryRuns).map(_ => timeRun(fn(spark, sfDir).count()))
       }
+    // a query whose every run failed is NaN: null in the JSON, out of the
+    // total and the slowest list, and counted in failed_runs
+    val results = samples.map { case (name, runs) => name -> bestOf(runs) }
+    val timedOk = results.filterNot(_._2.isNaN)
+    val failedRuns = samples.map(_._2.count(_.isNaN)).sum
     val qHostCpuAfter = if (skipQueries) 0.0 else cpuOps(cpus)
     val loadAfter = osBean.getSystemLoadAverage
     spark.stop()
@@ -264,9 +276,10 @@ object Bench {
     }
     val full = if (blockedFull) Some(blockedShape(cpus, fullA, fullB)) else None
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) =>
+      "\"" + k + "\":" + (if (v.isNaN) "null" else v.toString) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = timedOk.map(_._2).sum
     def levelJson(l: Level) =
       s""""local${l.cores}":{"sec":${r3(l.wall)},"pairs_per_sec":${l.pairsPerSec.toLong},"host_cpu_ops":${l.cpu.toLong},"host_mem_gbps":${r3(l.memGb)}}"""
     // Skipped runs emit an explicit marker instead of placeholder levels —
@@ -319,7 +332,7 @@ object Bench {
       s""""host_cpu_ops_after":${qHostCpuAfter.toLong},""" +
       s""""loadavg_before":${r3(loadBefore)},"loadavg_after":${r3(loadAfter)}}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_env":$queriesEnv,"sf":"$sfDir",""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","failed_runs":$failedRuns,"queries":$qs,"queries_env":$queriesEnv,"sf":"$sfDir",""" +
       s""""scaling":$scaling,"blocked":$blockedJson$blockedFullJson}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
@@ -334,7 +347,7 @@ object Bench {
     // line is this small self-contained object, asserted < 1900 bytes so
     // it can never straddle the driver's capture boundary again.
     val headline: String = {
-      val top = results.sortBy(-_._2).take(3)
+      val top = timedOk.sortBy(-_._2).take(3)
         .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
       val scalingHead = if (skipScaling) """{"skipped":true}""" else {
         val validSweeps = sweeps.filter(s =>
@@ -355,7 +368,7 @@ object Bench {
         full.map { case (w, e, _) =>
           s""","shape_${fullA / 1000}Kx${fullB / 1000}K_sec":${r3(w)},"full_edges":$e"""
         }.getOrElse("") + "}"
-      s"""{"metric":"queries_total","value":${r3(total)},"unit":"sec","n_queries":${results.size},""" +
+      s"""{"metric":"queries_total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"failed_runs":$failedRuns,""" +
       s""""slowest_queries":$top,"queries_env":$queriesEnv,"sf":"$sfDir",""" +
       s""""scaling":$scalingHead,"blocked":$blockedHead,"detail":"$outFile"}"""
     }

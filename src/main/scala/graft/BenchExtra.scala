@@ -61,16 +61,16 @@ object BenchExtra {
         java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), plan)
       }
       val samples = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          raw.println(s"ERROR $name: ${e.getMessage.take(300)}"); -1L }
-        (System.nanoTime() - t0) / 1e9
+        Bench.timeRun(try fn(spark, sfDir).count() catch { case e: Throwable =>
+          raw.println(s"ERROR $name: ${e.getMessage.take(300)}"); throw e })
       }
-      raw.println(f"$name%-28s min=${samples.min}%8.3f  samples=${samples.map(s => f"$s%.3f").mkString(",")}")
-      name -> samples.min
+      val best = Bench.bestOf(samples)
+      raw.println(f"$name%-28s min=$best%8.3f  samples=${samples.map(s => f"$s%.3f").mkString(",")}")
+      (name, best, samples.count(_.isNaN))
     }
-    val total = results.map(_._2).sum
-    raw.println(f"TOTAL ${results.size} queries: $total%.3f s")
+    val total = results.map(_._2).filterNot(_.isNaN).sum
+    val failed = results.map(_._3).sum
+    raw.println(f"TOTAL ${results.size} queries: $total%.3f s  failed_runs=$failed")
     spark.stop()
   }
 }

@@ -2788,7 +2788,7 @@ object SparkEntry {
           "l_partkey", "l_suppkey", bucketBits = 8)
         .orderBy(col("bucket"))),
     // the two-level salting PLAN itself, driver-visible: per block, the
-    // (k1, k2) fan-out Salting.fanout picks at aim=50/maxK=16 plus the
+    // (k1, k2) fan-out Salting.fanoutCol picks at aim=50/maxK=16 plus the
     // chunk-task and pair estimates — the skew-handling decision is
     // oracle-checked, not just exercised (ceil/sqrt/div are IEEE-exact
     // in both engines, so the replay is bit-for-bit)
@@ -2796,7 +2796,7 @@ object SparkEntry {
       val b = docs(s, dir)
         .groupBy(element_at(split(col("text"), " "), 1).as("block_key"))
         .agg(count(lit(1)).as("n"))
-      val (k1, k2) = graft.link.Salting.fanout(col("n"), aim = 50L, maxK = 16)
+      val (k1, k2) = graft.link.Salting.fanoutCol(col("n"), lit(50L), 16)
       b.select(col("block_key"), col("n"), k1.as("k1"), k2.as("k2"))
         .withColumn("eff_k", (col("k1") * col("k2")).cast("long"))
         .withColumn("n_chunk_tasks",
@@ -4558,7 +4558,7 @@ object SparkEntry {
                 CAST(min(qx) AS INT) AS min_qx, CAST(max(qx) AS INT) AS max_qx,
                 CAST(min(qy) AS INT) AS min_qy, CAST(max(qy) AS INT) AS max_qy
          FROM z GROUP BY 1""",
-    // Salting.fanout replayed: needK = ceil(n/sqrt(aim)), k1 = min(needK,
+    // Salting.fanoutCol replayed: needK = ceil(n/sqrt(aim)), k1 = min(needK,
     // maxK), k2 = min(ceil(needK/k1), maxK) — same IEEE double ops
     "q_skew_plan" ->
       """WITH b AS (SELECT str_split(text, ' ')[1] AS block_key,

@@ -48,7 +48,10 @@ object SoftTfidf {
 
   /** Σ over a-tokens of the thresholded best-JW contribution; `wl0`/`wl1`
     * are array<struct<t: string, w: long>> weight lists (field order as
-    * built by softTfidfPairs), `theta6` the 1e-6-scaled JW threshold. */
+    * built by softTfidfPairs), `theta6` the 1e-6-scaled JW threshold.
+    * Null tokens are skipped as the tree's null lambda results were: a null
+    * b-token never wins the argmax (array_max ignores nulls), and a null
+    * a-token — or one with no non-null partner — contributes 0. */
   def sum6(wl0: ArrayData, wl1: ArrayData, theta6: Long): Long = {
     val n0 = wl0.numElements()
     val n1 = wl1.numElements()
@@ -58,19 +61,24 @@ object SoftTfidf {
       val sa = wl0.getStruct(i, 2)
       val ta = sa.getUTF8String(0)
       val wa = sa.getLong(1)
-      if (n1 > 0) {
+      if (ta != null) {
         var best = Long.MinValue
+        var found = false
         var j = 0
         while (j < n1) {
           val sb = wl1.getStruct(j, 2)
-          val jw = StringSim.jaroWinkler(ta, sb.getUTF8String(0))
-          val j6 = roundHalfUp(jw * 1000000.0).toLong
-          val packed = j6 * 4294967296L + sb.getLong(1)
-          if (packed > best) best = packed
+          val tb = sb.getUTF8String(0)
+          if (tb != null) {
+            val jw = StringSim.jaroWinkler(ta, tb)
+            val j6 = roundHalfUp(jw * 1000000.0).toLong
+            val packed = j6 * 4294967296L + sb.getLong(1)
+            if (packed > best) best = packed
+            found = true
+          }
           j += 1
         }
         val j6 = best >> 32
-        if (j6 >= theta6) {
+        if (found && j6 >= theta6) {
           val wb = best & 0xFFFFFFFFL
           sum += roundHalfUp(
             (j6.toDouble * wa.toDouble) * wb.toDouble / 1000000.0).toLong

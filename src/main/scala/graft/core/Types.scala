@@ -50,16 +50,12 @@ object NodeId {
   * `database/models/models.py:33-93`). */
 case class LinkConfig(
     threshold: Double,
-    encodingSize: Int = 128,
     maxScoredPairs: Long = 500000000L, // settings.py:112
     maxSolverPairs: Long = 100000000L, // settings.py:111
-    saltBuckets: Int = 0, // 0 = auto from block stats
     // candidate cap per left record (anonlink's `k`; the reference passes
     // k=min(|A|,|B|) — i.e. uncapped — `tasks/comparing.py:343`). None =
     // pure threshold (the reference-test-accepted superset, SURVEY §7.0).
     topKPerRecord: Option[Int] = None
 ) {
   require(threshold > 0 && threshold <= 1.0, s"threshold must be in (0,1]: $threshold")
-  require(encodingSize >= 1 && encodingSize <= 1024 && encodingSize % 8 == 0,
-    s"encoding size must be 8..1024 and a multiple of 8: $encodingSize") // settings.py:124-125
 }

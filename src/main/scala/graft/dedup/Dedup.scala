@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ingest.Blocking
+import graft.link.Salting
 import scala.util.hashing.MurmurHash3
 
 /** Deduplication operators for a training-data pipeline: exact
@@ -14,8 +15,8 @@ import scala.util.hashing.MurmurHash3
   *
   * Scale design: every pair-generating path routes through
   * [[saltedSelfPairs]] — per-bucket two-sided salt fan-out sized from
-  * bucket stats, the same square-chunk decomposition as the linkage hot
-  * path (graft.link.Linker) — so a single hot block/bucket key is never
+  * bucket stats by the square-chunk generator the linkage hot path also
+  * uses (graft.link.Salting) — so a single hot block/bucket key is never
   * one quadratic task.
   */
 object Dedup {
@@ -35,78 +36,34 @@ object Dedup {
   /** Two-sided salted self-join pair generator — the generic skew-proof
     * replacement for `l.join(r, "bk").where(id0 < id1)`.
     *
-    * Input: columns (bk, id, payload...). Per bucket, a composite fan-out
-    * k = k1*k2 >= ceil(n/sqrt(aim)) is computed from bucket stats
-    * (graft.link.Salting — two digits so a 10^9-row bucket splits past
-    * the old single-digit 4096 cap); each row gets salt = hash(id) % k,
-    * the left side replicates over the right salt range (two chained
-    * explodes, each bounded by maxK) and vice versa, and the equi-join on
-    * (bk, salt0, salt1) meets every unordered pair exactly once (id0<id1
-    * keeps one orientation). k=1 for normal buckets, so replication is
-    * paid only where skew exists; a hot bucket becomes k^2 ~ n^2/aim
-    * well-sized tasks instead of one quadratic straggler.
-    *
-    * Only SKEWED buckets (k > 1 — typically few) ride the broadcast; the
-    * exploded LSH-band paths have O(n·bands) distinct bucket keys and a
-    * full-stats broadcast would collect O(n) rows to the driver at scale.
-    * Normal buckets default to k=1 via the left join + coalesce.
+    * Input: columns (bk, id, payload...). The fan-out, salt and two-sided
+    * meet are graft.link.Salting's square-chunk generator (the one the
+    * linkage kernel uses, salted on hash(id)); this method owns only the
+    * job total, which rides the plan as a 1-row scalar broadcast — a
+    * driver action here taxed every sub-second salted query ~0.3-0.5 s —
+    * and the bucket-stats persist. A hot bucket becomes k^2 ~ n^2/aim
+    * well-sized tasks instead of one quadratic straggler; id0 < id1 keeps
+    * one orientation of every unordered pair.
     *
     * Output: bk, id0, id1, and payload columns suffixed 0/1.
     */
   def saltedSelfPairs(base: DataFrame, aim: Long = PairAim,
-      maxK: Int = 4096): DataFrame = {
-    val payload = base.columns.filterNot(c => c == "bk" || c == "id")
-    // Adaptive aim (the Linker.scoreCandidatesChunked rule, guide §2):
-    // when the WHOLE job is smaller than aim·parallelism, a fixed aim
-    // leaves the comparison work in a handful of bucket-keyed tasks —
-    // measured round 6: 25 brand buckets hashed into 32 partitions put
-    // 2-3 buckets on one core while half the box idled. Targeting
-    // ~3 waves per core splits small jobs across the cluster; big jobs
-    // (totalPairs >= 6·parallelism·aim) keep the caller's aim, so scale
-    // behavior and shuffle replication (~n²·bytes/sqrt(aim) per bucket)
-    // are unchanged where they matter. The 1M floor stops small jobs
-    // from over-salting (a 100K floor was measured to slow the FS family
-    // ~1 s: 16 salt cells per uniform 800-row bucket, 4x join-input
-    // replication for nothing). The job total rides the plan as a
-    // 1-row scalar broadcast — an earlier draft used a driver action
-    // here, which taxed every sub-second salted query ~0.3-0.5 s.
-    val parallelism =
-      math.max(base.sparkSession.sparkContext.defaultParallelism, 1)
+      maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     // slot-cached (NO eager action — it materializes inside the
     // broadcast build): the stats frame feeds both the job-total scalar
     // and the per-bucket fan-out rows; without the cache the base
     // subtree (which can be an expensive signature pipeline) is scanned
     // once per consumer
-    val stats0 = persistLatest("salted_stats",
+    val stats = persistLatest("salted_stats",
       base.groupBy(col("bk")).agg(count(lit(1)).as("n")))
-    val tot = stats0.agg(
+    val tot = stats.agg(
       coalesce(sum(col("n").cast("decimal(38,0)") * col("n")), lit(0))
         .cast("double").as("__tp"))
-    val aimCol = greatest(lit(1000000.0),
-      least(lit(aim.toDouble), col("__tp") / lit(6.0 * parallelism) + 1))
-    val (k1c, k2c) = graft.link.Salting.fanoutCol(col("n"), aimCol, maxK)
-    val stats = stats0.crossJoin(broadcast(tot))
-      .select(col("bk"), k1c.as("k1"), k2c.as("k2"))
-      .where(col("k1") > 1 || col("k2") > 1)
-    val salted = base.join(broadcast(stats), Seq("bk"), "left")
-      .withColumn("k1", coalesce(col("k1"), lit(1)))
-      .withColumn("k2", coalesce(col("k2"), lit(1)))
-      .withColumn("s",
-        pmod(xxhash64(col("id")), (col("k1") * col("k2")).cast("long")).cast("int"))
-    def side(own: String, other: String, idAs: String, sfx: String) =
-      salted.select(
-        Seq(col("bk"), col("s").as(own),
-          explode(sequence(lit(0), col("k1") - 1)).as("ta"),
-          col("k1"), col("k2"), col("id").as(idAs)) ++
-          payload.map(c => col(c).as(c + sfx)): _*)
-        .withColumn("tb", explode(sequence(lit(0), col("k2") - 1)))
-        .withColumn(other, col("ta") + col("k1") * col("tb"))
-        .drop("ta", "tb", "k1", "k2")
-    val l = side("salt0", "salt1", "id0", "0")
-    val r = side("salt1", "salt0", "id1", "1")
-    l.join(r, Seq("bk", "salt0", "salt1"))
-      .where(col("id0") < col("id1"))
-      .drop("salt0", "salt1")
+    val aimCol = Salting.adaptiveAim(col("__tp"), aim,
+      base.sparkSession.sparkContext.defaultParallelism)
+    val salted = Salting.assignSalt(base, stats.crossJoin(broadcast(tot)),
+      "bk", aimCol, maxK, col("id"))
+    Salting.meet(salted, "bk").where(col("id0") < col("id1"))
   }
 
   // Signature tables feeding a pair join are referenced 2-3x in one plan
@@ -203,13 +160,13 @@ object Dedup {
     * before their arrays are ever fetched; the per-pair confirm is the
     * codegen'd long merge scan. */
   def jaccardPairsBy(df: DataFrame, id: String, elems: Column, blockKey: Column,
-      threshold: Double, aim: Long = PairAim, maxK: Int = 4096): DataFrame =
+      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame =
     jaccardPairsHashed(df, id, hashedSet(elems), blockKey, threshold, aim, maxK)
 
   /** Jaccard pairs over a PRE-HASHED sorted long-set column (e.g.
     * [[graft.expr.hashedCharNgrams]] — the one-pass gram signature). */
   def jaccardPairsHashed(df: DataFrame, id: String, toks: Column, blockKey: Column,
-      threshold: Double, aim: Long = PairAim, maxK: Int = 4096): DataFrame = {
+      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     val sig = persistLatest("jaccard",
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
@@ -244,7 +201,7 @@ object Dedup {
     * key carries the entire pruning burden by design. */
   def containmentPairsHashed(df: DataFrame, id: String, toks: Column,
       blockKey: Column, threshold: Double, aim: Long = PairAim,
-      maxK: Int = 4096): DataFrame = {
+      maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     val sig = persistLatest("containment",
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
@@ -281,7 +238,7 @@ object Dedup {
     * containment does). */
   def tverskyPairsHashed(df: DataFrame, id: String, toks: Column,
       blockKey: Column, alphaTenths: Int, betaTenths: Int,
-      threshold: Double, aim: Long = PairAim, maxK: Int = 4096): DataFrame = {
+      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     require(alphaTenths >= 0 && betaTenths >= 0
       && alphaTenths + betaTenths > 0, "need nonneg weights, not both 0")
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
@@ -330,11 +287,13 @@ object Dedup {
     * rank is a window over single-record partitions (bounded by doc
     * length); candidates route through [[saltedSelfPairs]] keyed on the
     * prefix token (a pathological corpus where one token is rare AND
-    * shared by millions of records still fans out); the confirm is the
-    * codegen sorted-long merge scan on per-document hashed sets
-    * computed once. Prefixes shuffle (id, sz) only — never the arrays. */
+    * shared by millions of records still fans out). Each record's hashed
+    * token set (computed once per document) rides the salted prefix
+    * fan-out with it, so the merge-scan verify runs inside the generation
+    * stage and only accepted pairs shuffle, into a final dropDuplicates
+    * that collapses pairs generated through more than one shared token. */
   def prefixFilterPairs(df: DataFrame, id: String, text: String,
-      threshold: Double, aim: Long = PairAim, maxK: Int = 4096): DataFrame = {
+      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
     val D = 10000L
     val tnum = math.ceil(threshold * D).toLong
@@ -414,7 +373,7 @@ object Dedup {
     * [[jaccardPairsHashed]]. */
   def weightedJaccardPairs(df: DataFrame, id: String, text: String,
       blockKey: Column, threshold: Double, aim: Long = PairAim,
-      maxK: Int = 4096): DataFrame = {
+      maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     val thr = math.round(threshold * 1000000L)
     // tf-map build is an interpreted-HOF projection — persist it once so
     // the pair generator's stats subtree and both join sides reuse it

@@ -7,8 +7,9 @@ import graft.expr.dicePre
 
 /** Candidate generation + scoring: the reference's
   * `create_comparison_jobs` / `compute_filter_similarity` stages
-  * (`backend/entityservice/tasks/comparing.py:44-99,265-413`) re-expressed
-  * as one declarative Spark plan:
+  * (`backend/entityservice/tasks/comparing.py:44-99,265-413`).
+  *
+  * The semantics are one declarative Spark plan, [[scoreCandidatesJoin]]:
   *
   *   blocked ⋈ blocked on block key  →  dice  →  sim >= t  →  dedup
   *
@@ -16,15 +17,12 @@ import graft.expr.dicePre
   * the hash join (the reference intersects block sets per provider pair,
   * `comparing.py:173-187` — the equi-join does this implicitly).
   *
-  * Skew: the reference splits big blocks into ~square chunks of
-  * `CHUNK_SIZE_AIM`=3e8 comparisons (`comparing.py:102-170`,
-  * `settings.py:103`). The no-blocking default puts EVERYTHING in one
-  * block, so a plain join would make one partition. We reproduce the
-  * square decomposition as two-sided salting: per block compute a salt
-  * fan-out k from block-size stats; each pair (u,v) meets exactly once at
-  * join key (block, salt(u), salt(v)); the left input is replicated over
-  * the second salt component, the right over the first. k=1 for normal
-  * blocks, so replication cost is paid only where skew exists.
+  * The hot path, [[scoreCandidatesChunked]], computes the same edges from
+  * the reference's square-chunk work packages (`comparing.py:102-170`):
+  * the no-blocking default puts EVERYTHING in one block, so a plain join
+  * would make one partition. Blocks are split by the shared two-sided
+  * salting generator (graft.link.Salting); k=1 for normal blocks, so
+  * replication cost is paid only where skew exists.
   */
 object Linker {
 
@@ -36,14 +34,14 @@ object Linker {
     * session — the returned edges Dataset is lazy, so both must outlive
     * this call until the caller's first action; the NEXT call is the
     * earliest safe unpersist point). */
-  private def registerRunCaches(chunks: Option[DataFrame], stats: DataFrame): Unit =
+  private def registerRunCaches(chunks: DataFrame, stats: DataFrame): Unit =
     Linker.synchronized {
       (lastChunksCache.toSeq ++ lastStatsCache.toSeq).foreach { prev =>
         // previous cache may belong to an already-stopped session
         try if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist(false)
         catch { case _: Throwable => }
       }
-      lastChunksCache = chunks
+      lastChunksCache = Some(chunks)
       lastStatsCache = Some(stats)
     }
 
@@ -55,28 +53,26 @@ object Linker {
     * regardless of chunk size, so bigger chunks win back the task-count
     * and shuffle-replication overhead (shuffle is 2k·chunkBytes per
     * block, k ~ 1/sqrt(aim)) — re-measured r2: 256M beat 64M in every
-    * round at local[32]. The adaptive floor below still splits small jobs
-    * across all cores. */
+    * round at local[32]. The adaptive aim (Salting.adaptiveAim) still
+    * splits small jobs across all cores. */
   val ChunkSizeAim: Long = 256000000L
+
+  /** The single salt-digit cap, [[Salting.MaxSaltFanout]]. */
+  val MaxSaltFanout: Int = Salting.MaxSaltFanout
 
   /** Input: columns (dp int, entity_id long, clk binary, popcount int,
     * block_key string). Output: deduplicated scored edges with dp0 < dp1.
     *
     * Default = the chunked kernel (`scoreCandidatesChunked`): the
-    * row-at-a-time join form below is kept as the declarative semantic
-    * spec (and equality-tested against the kernel), but a hash/sort-merge
+    * row-at-a-time join form is kept as the declarative semantic spec
+    * (and equality-tested against the kernel), but a hash/sort-merge
     * join emitting one row per COMPARISON tops out around ~5M rows/s/core
     * — 10-20x below the bit-parallel kernel — so the physical shape of the
     * hot path is chunk-pair nested loops, exactly the reference's work
     * packages (`tasks/comparing.py:102-170`).
     */
-  /** Single salt-digit cap; the composite two-level fan-out reaches
-    * MaxSaltFanout^2 (graft.link.Salting). */
-  val MaxSaltFanout: Int = 4096
-
-  def scoreCandidates(blocked: DataFrame, cfg: LinkConfig,
-      chunkSizeAim: Long = ChunkSizeAim): Dataset[Edge] = {
-    val scored = scoreCandidatesChunked(blocked, cfg, chunkSizeAim)
+  def scoreCandidates(blocked: DataFrame, cfg: LinkConfig): Dataset[Edge] = {
+    val scored = scoreCandidatesChunked(blocked, cfg)
     cfg.topKPerRecord.fold(scored)(k => capTopKPerRecord(scored, k))
   }
 
@@ -95,82 +91,41 @@ object Linker {
       .as[Edge]
   }
 
-  /** Declarative join formulation (semantic spec; see scoreCandidates). */
-  def scoreCandidatesJoin(blocked: DataFrame, cfg: LinkConfig,
-      chunkSizeAim: Long = ChunkSizeAim): Dataset[Edge] = {
+  /** Declarative join formulation — the semantic spec the chunked kernel
+    * is equality-tested against. No salting: it shares no pair-generation
+    * logic with the code it checks. */
+  def scoreCandidatesJoin(blocked: DataFrame, cfg: LinkConfig): Dataset[Edge] = {
     val spark = blocked.sparkSession
     import spark.implicits._
-
-    // Per-block fan-out k ~ sqrt(comparisons / aim): block stats are tiny
-    // relative to data (one row per distinct block) -> broadcast join.
-    // (B3 block-metadata agg, database/insertions.py:50-67, doubles as the
-    // skew detector.) The aim adapts downward when the whole job is smaller
-    // than aim * parallelism, so a single huge block still fans out across
-    // every core instead of one 3e8-comparison task pinning one core
-    // (reference behavior: CHUNK_SIZE_AIM splits work into >= #workers
-    // packages only when the job is big; we always target full
-    // parallelism).
-    val statsRaw = blocked.groupBy($"block_key")
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    registerRunCaches(None, statsRaw)
-    // decimal agg + saturating cap: at 10^12-row blocks n^2 exceeds Long
-    val totalPairsUb = statsRaw
-      .agg(coalesce(sum($"n".cast("decimal(38,0)") * $"n"), lit(0)))
-      .head().getDecimal(0).toBigInteger.min(
-        java.math.BigInteger.valueOf(Long.MaxValue)).longValue()
-    val parallelism = math.max(spark.sparkContext.defaultParallelism, 1)
-    // effective tasks ~= totalPairs/(2*aim) (the dp0<dp1 filter halves the
-    // k^2 chunk pairs) -> divisor 6 targets ~3 waves per core
-    val aim = math.max(1000000L,
-      math.min(chunkSizeAim, totalPairsUb / (6L * parallelism) + 1))
-    val stats = statsRaw
-      .withColumn("k",
-        least(
-          greatest(
-            ceil($"n".cast("double") / math.sqrt(aim.toDouble)),
-            lit(1L)),
-          lit(1024L)).cast("int"))
-      .select($"block_key", $"k")
-
-    val salted = blocked.join(broadcast(stats), Seq("block_key"))
-      .withColumn("salt", pmod(xxhash64($"dp", $"entity_id"), $"k").cast("int"))
-
-    val left = salted.select(
-      $"block_key", $"k",
-      $"salt".as("salt0"),
-      explode(sequence(lit(0), $"k" - 1)).as("salt1"),
-      $"dp".as("dp0"), $"entity_id".as("rec0"), $"clk".as("clk0"), $"popcount".as("pc0"))
-    val right = salted.select(
-      $"block_key",
-      explode(sequence(lit(0), $"k" - 1)).as("salt0"),
-      $"salt".as("salt1"),
-      $"dp".as("dp1"), $"entity_id".as("rec1"), $"clk".as("clk1"), $"popcount".as("pc1"))
-
-    val scored = left.join(right, Seq("block_key", "salt0", "salt1"))
+    def side(sfx: String) = blocked.select($"block_key",
+      $"dp".as(s"dp$sfx"), $"entity_id".as(s"rec$sfx"),
+      $"clk".as(s"clk$sfx"), $"popcount".as(s"pc$sfx"))
+    side("0").join(side("1"), "block_key")
       .where($"dp0" < $"dp1")
       .select(
         dicePre($"clk0", $"clk1", $"pc0" + $"pc1").as("sim"),
         $"dp0", $"rec0", $"dp1", $"rec1")
       .where($"sim" >= cfg.threshold)
-
-    // A pair can co-occur in multiple shared blocks -> collapse
-    // (reference dedups during merge, comparing.py:475-483).
-    scored
+      // A pair can co-occur in multiple shared blocks -> collapse
+      // (reference dedups during merge, comparing.py:475-483).
       .dropDuplicates("dp0", "rec0", "dp1", "rec1")
       .as[Edge]
   }
 
+  /** Broadcast cap for the cross-block keep-list (8-byte hashed keys +
+    * overhead; 8M longs ≈ 64 MB — safe at default driver memory). */
+  private val MaxCrossBlockBroadcast = 8000000L
+
   /** The hot path. Physical design = the reference's square-chunk work
     * packages re-expressed in Spark:
     *
-    *  1. per-block fan-out k from block stats (broadcast);
-    *  2. records grouped into chunks keyed (block, dp, salt) with
-    *     salt = hash(dp, id) % k — chunk byte size is bounded by the
-    *     comparison aim, so no task sees more than ~2 chunks of data;
-    *  3. left chunks replicated over the right salt range and vice versa,
-    *     equi-join on (block, salt0, salt1): each chunk PAIR meets exactly
-    *     once, and the sort-merge join buffers only one chunk per key;
+    *  1. per-block fan-out from block stats (Salting.assignSalt);
+    *  2. records grouped into chunks keyed (block, dp, salt) — chunk byte
+    *     size is bounded by the comparison aim, so no task sees more than
+    *     ~2 chunks of data;
+    *  3. the two-sided meet (Salting.meet): each chunk PAIR meets exactly
+    *     once per orientation, and the sort-merge join buffers only one
+    *     chunk per key;
     *  4. a tight array nested loop scores each chunk pair with the
     *     popcount kernel, emitting only >= threshold edges (nothing below
     *     threshold is ever materialized — parity with the reference
@@ -180,10 +135,6 @@ object Linker {
     * block at the 3e8 aim that is ~16 GB for 10^12 comparisons, i.e. the
     * kernel, not the shuffle, is the bottleneck at cluster scale.
     */
-  /** Broadcast cap for the cross-block keep-list (8-byte hashed keys +
-    * overhead; 8M longs ≈ 64 MB — safe at default driver memory). */
-  private val MaxCrossBlockBroadcast = 8000000L
-
   def scoreCandidatesChunked(blocked: DataFrame, cfg: LinkConfig,
       chunkSizeAim: Long = ChunkSizeAim, maxK: Int = MaxSaltFanout): Dataset[Edge] = {
     val spark = blocked.sparkSession
@@ -245,20 +196,8 @@ object Linker {
     // inflate the aim (which would under-split what remains).
     val totalPairsUb = if (prefilter) pairsUbCross else pairsUbAll
 
-    val parallelism = math.max(spark.sparkContext.defaultParallelism, 1)
-    // effective tasks ~= totalPairs/(2*aim) (the dp0<dp1 filter halves the
-    // k^2 chunk pairs) -> divisor 6 targets ~3 waves per core
-    val aim = math.max(1000000L,
-      math.min(chunkSizeAim, totalPairsUb / (6L * parallelism) + 1))
-    // composite two-level fan-out k1*k2 >= n/sqrt(aim) (Salting): one salt
-    // digit caps at maxK, so a block needing more splits on a second digit
-    // instead of silently under-splitting into ~(needK/maxK)^2-times-aim
-    // tasks. Only skewed blocks (k > 1) ride the broadcast; k=1 defaults
-    // via the left join (block-key cardinality can be O(rows) at scale).
-    val (k1c, k2c) = Salting.fanout($"n", aim, maxK)
-    val stats = statsBase
-      .select($"bkh", k1c.as("k1"), k2c.as("k2"))
-      .where($"k1" > 1 || $"k2" > 1)
+    val aim = Salting.adaptiveAim(lit(totalPairsUb), chunkSizeAim,
+      spark.sparkContext.defaultParallelism)
 
     // Chunks are packed ONCE at aggregation time into primitive arrays
     // (ids, popcounts, one contiguous zero-padded clk buffer, sorted by
@@ -266,11 +205,8 @@ object Linker {
     // measured to generate enough garbage to send later rounds into GC
     // collapse; primitive arrays deserialize with zero boxing and the
     // popcount sort is paid once per chunk instead of once per chunk pair.
-    val chunks = kept.join(broadcast(stats), Seq("bkh"), "left")
-      .withColumn("k1", coalesce($"k1", lit(1)))
-      .withColumn("k2", coalesce($"k2", lit(1)))
-      .withColumn("salt",
-        pmod(xxhash64($"dp", $"entity_id"), ($"k1" * $"k2").cast("long")).cast("int"))
+    val chunks = Salting.assignSalt(kept, statsBase, "bkh", aim, maxK,
+        $"dp", $"entity_id")
       .select($"block_key", $"k1", $"k2", $"dp", $"salt", $"entity_id", $"clk", $"popcount")
       .as[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]
       .groupByKey(r => (r._1, r._2, r._3, r._4, r._5))
@@ -302,30 +238,10 @@ object Linker {
       // the whole scan+encode+pack pipeline runs twice. Bounded to one
       // cached chunk table per session (previous call unpersisted).
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerRunCaches(Some(chunks), statsRaw)
-
-    // other-side salt range = two chained explodes (bounded by maxK each),
-    // composite digit recombined as ta + k1*tb — equivalent to one
-    // sequence(0, k1*k2-1) without ever materializing a k1*k2-long array
-    val left = chunks.select($"block_key",
-      $"salt".as("salt0"), explode(sequence(lit(0), $"k1" - 1)).as("ta"),
-      $"k1", $"k2",
-      $"dp".as("dp0"), $"stride".as("stride0"),
-      $"ids".as("ids0"), $"pcs".as("pcs0"), $"pch".as("pch0"), $"flat".as("flat0"))
-      .withColumn("tb", explode(sequence(lit(0), $"k2" - 1)))
-      .withColumn("salt1", $"ta" + $"k1" * $"tb")
-      .drop("ta", "tb", "k1", "k2")
-    val right = chunks.select($"block_key",
-      $"salt".as("salt1"), explode(sequence(lit(0), $"k1" - 1)).as("ta"),
-      $"k1", $"k2",
-      $"dp".as("dp1"), $"stride".as("stride1"),
-      $"ids".as("ids1"), $"pcs".as("pcs1"), $"pch".as("pch1"), $"flat".as("flat1"))
-      .withColumn("tb", explode(sequence(lit(0), $"k2" - 1)))
-      .withColumn("salt0", $"ta" + $"k1" * $"tb")
-      .drop("ta", "tb", "k1", "k2")
+    registerRunCaches(chunks, statsRaw)
 
     val threshold = cfg.threshold
-    val pairsDs = left.join(right, Seq("block_key", "salt0", "salt1"))
+    val pairsDs = Salting.meet(chunks, "block_key")
       .where($"dp0" < $"dp1")
       .select($"dp0", $"stride0", $"ids0", $"pcs0", $"pch0", $"flat0",
         $"dp1", $"stride1", $"ids1", $"pcs1", $"pch1", $"flat1")

@@ -228,6 +228,35 @@ class FuzzySpec extends SparkSpec {
     assert(!got.keySet.exists(k => k._1 == 6L || k._2 == 6L))
   }
 
+  test("softTfidf sum6: a null token contributes 0 on either side") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def wl(ts: (String, Long)*) = new GenericArrayData(ts.map { case (t, w) =>
+      InternalRow(if (t == null) null else UTF8String.fromString(t), w)
+    }.toArray[Any])
+    val sum6 = graft.core.SoftTfidf.sum6(_, _, 900000L)
+    val a = wl("john" -> 700L, "smith" -> 500L)
+    val b = wl("jon" -> 650L, "smith" -> 500L)
+    val base = sum6(a, b)
+    assert(base > 0)
+    // a null a-token adds nothing; a null b-token never wins the argmax
+    assert(sum6(wl("john" -> 700L, (null, 900L), "smith" -> 500L), b) == base)
+    assert(sum6(a, wl((null, 4000L), "jon" -> 650L, "smith" -> 500L)) == base)
+    assert(sum6(wl((null, 900L)), b) == 0L)
+    assert(sum6(a, wl((null, 4000L))) == 0L)
+    // same through the codegen'd expression over a DataFrame
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val df = Seq((Seq[(String, Long)](("john", 700L), (null, 900L), ("smith", 500L)),
+        Seq[(String, Long)]((null, 4000L), ("jon", 650L), ("smith", 500L))))
+      .toDF("a", "b")
+      .select(transform($"a", x => struct(x("_1").as("t"), x("_2").as("w"))).as("wl0"),
+        transform($"b", x => struct(x("_1").as("t"), x("_2").as("w"))).as("wl1"))
+    assert(df.select(graft.expr.softTfidfSum6($"wl0", $"wl1", 900000L))
+      .as[Long].head() == base)
+  }
+
   test("selfScoreFrequency: rarity weights == brute force; nulls never agree") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
