@@ -31,9 +31,13 @@ object Verify {
     // semantics from (fixed absolute path — oracle SQL is static text).
     // SPARK_GRAFT_SKIP_AUX=1 skips them for single-query iteration where
     // the query under test reads no aux table (the full driver run
-    // never sets it).
+    // never sets it). Under SPARK_GRAFT_ONLY only the dumps the selected
+    // queries' oracle SQL reads are written.
     val skipAux = sys.env.get("SPARK_GRAFT_SKIP_AUX").contains("1")
-    if (!skipAux) SparkEntry.oracleAux.foreach { case (name, fn) =>
+    val selectedSql = SparkEntry.oracleSql.filter(kv => keep(kv._1)).values
+    def keepAux(name: String) = only.isEmpty ||
+      selectedSql.exists(_.contains(s"${SparkEntry.OracleAuxDir}/$name/"))
+    if (!skipAux) SparkEntry.oracleAux.filter(kv => keepAux(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).write.mode("overwrite")
         .parquet(s"${SparkEntry.OracleAuxDir}/$name")
       catch { case e: Throwable =>

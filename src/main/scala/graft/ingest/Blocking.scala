@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.core.Blake2b256
 import scala.util.hashing.MurmurHash3
 
@@ -110,6 +111,23 @@ object Blocking {
       .select(col("block_key"), col("dp0"), col("dp1"))
   }
 
+  /** Distributed 0-based global rank in the total order given by `order`
+    * (must be a TOTAL order — include a unique tiebreaker). Implemented as
+    * sort + zipWithIndex: the one genuinely per-partition-imperative step
+    * (offset accumulation) that the DataFrame API lacks. The rank of a row
+    * in a total order is invariant to partition boundaries, so ranks are
+    * identical at any parallelism. The rank primitive behind
+    * [[sortedNeighborhoodPairs]]. */
+  def withGlobalRank(df: DataFrame, out: String,
+      order: Seq[org.apache.spark.sql.Column]): DataFrame = {
+    val spark = df.sparkSession
+    val sorted = df.orderBy(order: _*)
+    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
+      Row.fromSeq(r.toSeq :+ i)
+    }
+    spark.createDataFrame(indexed, sorted.schema.add(out, LongType, nullable = false))
+  }
+
   /** Sorted-neighborhood blocking (Hernandez & Stolfo's merge/purge):
     * sort all records by a discriminating key and emit every pair whose
     * positions in the total order are within `window` of each other — the
@@ -119,11 +137,10 @@ object Blocking {
     * equi-block over a heavy key is O(n²) in that block; SN is immune).
     *
     * Scale shape: one distributed range-partitioned sort +
-    * per-partition offsets ([[graft.cluster.Permutation.withGlobalRank]]
-    * discipline — never a single-partition window), then a hash
-    * equi-join of the rank column against rank+offset for offsets
-    * 1..window-1. Both join sides are bare (rank, id, key) rows; the
-    * explode factor is window-1, constant per record.
+    * per-partition offsets ([[withGlobalRank]] — never a single-partition
+    * window), then a hash equi-join of the rank column against rank+offset
+    * for offsets 1..window-1. Both join sides are bare (rank, id, key)
+    * rows; the explode factor is window-1, constant per record.
     *
     * The sort key must be made TOTAL with the id tiebreak (done here) so
     * ranks — and therefore the emitted pair set — are deterministic at
@@ -134,7 +151,7 @@ object Blocking {
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String, keyCol: String,
       window: Int): DataFrame = {
     require(window >= 2, "window must cover at least adjacent rows")
-    val ranked = graft.cluster.Permutation.withGlobalRank(
+    val ranked = withGlobalRank(
       df.select(col(idCol).as("_sn_id"), col(keyCol).as("_sn_key")),
       "_sn_rank", Seq(col("_sn_key"), col("_sn_id")))
     val l = ranked.select(col("_sn_id").as("id0"), col("_sn_rank"))
