@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.core.LinkConfig
+import graft.core.{LinkConfig, RunScope}
 import graft.ingest.{Ingest, PagesSynth}
 import graft.link.Linker
 
@@ -206,7 +206,7 @@ object Bench {
       val recs = Ingest.encodePages(warm)
         .select("dp", "entity_id", "clk", "popcount")
         .withColumn("block_key", org.apache.spark.sql.functions.lit("1"))
-      Linker.scoreCandidates(recs, LinkConfig(threshold = 0.9)).toDF().count()
+      RunScope.run(Linker.scoreCandidates(recs, LinkConfig(threshold = 0.9)).toDF().count())
       spark.read.parquet(s"$sfDir/documents.parquet").limit(500)
         .groupBy("lang").count().count()
     }
@@ -222,7 +222,9 @@ object Bench {
     val samples =
       if (skipQueries) Seq.empty
       else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> (1 to queryRuns).map(_ => timeRun(fn(spark, sfDir).count()))
+        // each sample is one run; its release follows timeRun, untimed
+        name -> (1 to queryRuns).map(_ =>
+          RunScope.run(timeRun(fn(spark, sfDir).count())))
       }
     // a query whose every run failed is NaN: null in the JSON, out of the
     // total and the slowest list, and counted in failed_runs

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.core.LinkConfig
+import graft.core.{LinkConfig, RunScope}
 import graft.ingest.{Ingest, PagesSynth}
 import graft.link.Linker
 
@@ -39,7 +39,7 @@ object BenchExtra {
       val recs = Ingest.encodePages(warm)
         .select("dp", "entity_id", "clk", "popcount")
         .withColumn("block_key", org.apache.spark.sql.functions.lit("1"))
-      Linker.scoreCandidates(recs, LinkConfig(threshold = 0.9)).toDF().count()
+      RunScope.run(Linker.scoreCandidates(recs, LinkConfig(threshold = 0.9)).toDF().count())
       spark.read.parquet(s"$sfDir/documents.parquet").limit(500)
         .groupBy("lang").count().count()
     }
@@ -56,13 +56,13 @@ object BenchExtra {
       planTag.foreach { tag =>
         val dir = java.nio.file.Paths.get("plans/r06")
         java.nio.file.Files.createDirectories(dir)
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = RunScope.run(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), plan)
       }
       val samples = (1 to runs).map { _ =>
-        Bench.timeRun(try fn(spark, sfDir).count() catch { case e: Throwable =>
-          raw.println(s"ERROR $name: ${e.getMessage.take(300)}"); throw e })
+        RunScope.run(Bench.timeRun(try fn(spark, sfDir).count() catch { case e: Throwable =>
+          raw.println(s"ERROR $name: ${e.getMessage.take(300)}"); throw e }))
       }
       val best = Bench.bestOf(samples)
       raw.println(f"$name%-28s min=$best%8.3f  samples=${samples.map(s => f"$s%.3f").mkString(",")}")

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.LinkConfig
+import graft.core.{LinkConfig, RunScope}
 import graft.ingest.ClkIO
 import graft.link.{Linker, Pipeline}
 import graft.cluster.Solver
@@ -527,7 +527,7 @@ object SparkEntry {
           col("row_b").cast("long").as("rec1"))
       // 5 per-threshold agg branches all re-read the edge set; the
       // upstream is the scoring kernel — persist so it runs once, not 5x
-      val edges = Dedup.persistLatestPublic("threshold_f1_edges",
+      val edges = RunScope.persist("threshold_f1_edges",
         Pipeline.edges(febrl4Blocked(s), LinkConfig(threshold = 0.7))
           .toDF().select($"rec0", $"rec1", $"sim"))
       val nTrue = truth.count()

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query write
+  * and each aux dump is one RunScope run, so its cached frames are
+  * released before the next one starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir>")
@@ -21,8 +23,8 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     def keep(name: String) = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.core.RunScope.run(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -38,8 +40,8 @@ object Verify {
     def keepAux(name: String) = only.isEmpty ||
       selectedSql.exists(_.contains(s"${SparkEntry.OracleAuxDir}/$name/"))
     if (!skipAux) SparkEntry.oracleAux.filter(kv => keepAux(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite")
-        .parquet(s"${SparkEntry.OracleAuxDir}/$name")
+      try graft.core.RunScope.run(fn(spark, sfDir).write.mode("overwrite")
+        .parquet(s"${SparkEntry.OracleAuxDir}/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] aux $name failed: ${e.getMessage}")
       }

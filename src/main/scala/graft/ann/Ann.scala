@@ -84,7 +84,7 @@ object Ann {
       iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, s"k=$k iters=$iters")
     val spark = df.sparkSession
-    val q = graft.dedup.Dedup.persistLatestPublic("kmeans_uv",
+    val q = graft.core.RunScope.persist("kmeans_uv",
       quantizeInt8(df, id, vec)
         .select(col(id).as("vid"),
           transform(col("qvec"), x => x + lit(127)).as("uv")))
@@ -391,7 +391,7 @@ object Ann {
     require(k >= 1, s"k=$k")
     val spark = df.sparkSession
     import spark.implicits._
-    val q = graft.dedup.Dedup.persistLatestPublic("kcenters",
+    val q = graft.core.RunScope.persist("kcenters",
       quantizeInt8(df, id, vec)
         .select(col(id).cast("long").as("vid"), col("qvec")))
     val first = q.orderBy(col("vid")).select(col("vid"), col("qvec")).head()

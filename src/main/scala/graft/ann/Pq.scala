@@ -144,7 +144,7 @@ object Pq {
   def pqTopK(corpus: DataFrame, id: String, vec: String,
       queryIds: DataFrame, k: Int, numSub: Int = 8, ksub: Int = 16,
       iters: Int = 2): DataFrame = {
-    val uv = graft.dedup.Dedup.persistLatestPublic("pq_uv",
+    val uv = graft.core.RunScope.persist("pq_uv",
       quantizeGlobal(corpus, id, vec))
     val dim = uv.select(size(col("uv"))).head().getInt(0)
     require(dim % numSub == 0, s"dim=$dim not divisible by numSub=$numSub")

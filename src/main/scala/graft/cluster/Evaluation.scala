@@ -203,7 +203,7 @@ object Evaluation {
       shiftleft(col(dp).cast("long"), 40).bitwiseOR(col(rec))
     // consumed by CC and by the per-component edge-stats join; the
     // upstream is the scoring kernel — persist so it runs once
-    val e = graft.dedup.Dedup.persistLatestPublic("cohesion_edges",
+    val e = graft.core.RunScope.persist("cohesion_edges",
       edges.select(node("dp0", "rec0").as("u"),
         node("dp1", "rec1").as("v"), col("sim")))
     val comps = ConnectedComponents.run(e.select($"u", $"v").as[(Long, Long)])
@@ -245,7 +245,7 @@ object Evaluation {
     // the final agg — 3 actions x |cuts|); the upstream is the scoring
     // kernel, so persist once (measured round 6: q_dendrogram_cut ran
     // the kernel chain ~9x for 3 cuts)
-    val packed = graft.dedup.Dedup.persistLatestPublic("dendrogram_edges",
+    val packed = graft.core.RunScope.persist("dendrogram_edges",
       edges.select(node("dp0", "rec0").as("u"),
         node("dp1", "rec1").as("v"), col("sim")))
     thresholds.map { t =>
@@ -430,7 +430,7 @@ object Evaluation {
       col("label").as("l1"))
     // consumed by the edge-stat agg AND the degree agg; the upstream is
     // the scoring kernel — persist so it runs once
-    val le = graft.dedup.Dedup.persistLatestPublic("modularity_edges",
+    val le = graft.core.RunScope.persist("modularity_edges",
       edges
         .join(l0, col("dp0") === col("d0") && col("rec0") === col("r0"), "left")
         .join(l1, col("dp1") === col("d1") && col("rec1") === col("r1"), "left")

@@ -2,7 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.RunScope
 
 /** Fixed-iteration SYNCHRONOUS label propagation (Raghavan et al. 2007)
   * for community detection over co-occurrence / near-dup graphs — the
@@ -23,8 +23,9 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape per round: one shuffle join (symmetric edges × labels,
   * hash-partitioned on the node key) + one partial-aggregated count +
   * one min(struct) argmax agg — never a window over the whole node set.
-  * Lineage truncated per round (localCheckpoint), same discipline as the
-  * CC star rounds.
+  * Each round's labels are persisted in their own RunScope slot, so a
+  * round reads the previous one from cache and the caller's run
+  * releases them all.
   */
 object LabelProp {
 
@@ -37,9 +38,9 @@ object LabelProp {
         least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct()
-    val sym = und.select(col("u").as("node"), col("v").as("nbr"))
-      .union(und.select(col("v").as("node"), col("u").as("nbr")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = RunScope.persist("labelprop_sym",
+      und.select(col("u").as("node"), col("v").as("nbr"))
+        .union(und.select(col("v").as("node"), col("u").as("nbr"))))
     var labels = sym.select(col("node")).distinct()
       .withColumn("label", col("node"))
     for (i <- 1 to iters) {
@@ -51,7 +52,7 @@ object LabelProp {
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
           .as("top"))
         .select(col("node"), col("top.l").as("label"))
-      if (i < iters) labels = labels.localCheckpoint(eager = false)
+      if (i < iters) labels = RunScope.persist(s"labelprop_round$i", labels)
     }
     labels
   }

@@ -103,7 +103,7 @@ object RankEval {
     // the distinct-score table (bounded ~b²/2 rows) feeds both the
     // cumulative window and the totals agg; its upstream is the scoring
     // kernel — persist so the kernel runs once, not twice
-    val byS = graft.dedup.Dedup.persistLatestPublic("rankeval_byscore",
+    val byS = graft.core.RunScope.persist("rankeval_byscore",
       byScore(edges, truth))
     val cum = byS
       .withColumn("cpos", sum(col("n_pos_v")).over(w))
@@ -140,7 +140,7 @@ object RankEval {
       truth: DataFrame): (DataFrame, Long, Long) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val ranged = graft.dedup.Dedup.persistLatestPublic("rank_eval",
+    val ranged = graft.core.RunScope.persist("rank_eval",
       labeled(edges, truth)
         .select(col("rec0").cast("long"), col("rec1").cast("long"),
           col("sim").cast("double"), col("is_true").cast("long"))

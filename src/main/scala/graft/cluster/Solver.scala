@@ -2,7 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{ClusterMember, Edge, LinkConfig, NodeId}
+import graft.core.{ClusterMember, Edge, LinkConfig, NodeId, RunScope}
 import scala.collection.mutable
 
 /** Greedy entity-group solver — Spark-native equivalent of anonlink's
@@ -41,9 +41,9 @@ object Solver {
     // upstream is the whole scoring kernel, and AQE compiles the two
     // consumers as separate stages with no exchange reuse — without a
     // persist the kernel chain runs once per consumer (measured round 6:
-    // 2x the kernel on every clusters pipeline). One-slot discipline via
-    // Dedup.persistLatestPublic; CC's own count() materializes the cache.
-    val nodeEdges = graft.dedup.Dedup.persistLatestPublic("solver_edges",
+    // 2x the kernel on every clusters pipeline). CC's own count()
+    // materializes the cache; the caller's run releases it.
+    val nodeEdges = RunScope.persist("solver_edges",
       edges.map(e =>
         (NodeId(e.dp0, e.rec0), NodeId(e.dp1, e.rec1), e.sim))
         .toDF("u", "v", "sim"))
@@ -151,7 +151,7 @@ object Solver {
     // pairs — but cheap to make unconditional)
     // consumed three times (two argmax aggs + the final join); the
     // upstream is the scoring kernel — persist so it runs once
-    val e = graft.dedup.Dedup.persistLatestPublic("mutual_best_edges",
+    val e = RunScope.persist("mutual_best_edges",
       edges.groupBy("dp0", "rec0", "dp1", "rec1")
         .agg(max(col("sim")).as("sim")))
     // deterministic argmax: min of (-sim, partner) == (sim DESC, id ASC)

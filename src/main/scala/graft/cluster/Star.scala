@@ -2,7 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.RunScope
 
 /** Single-round star clustering — the cheap alternative to connected
   * components when transitive closure over-merges (one spurious edge
@@ -38,19 +38,18 @@ object Star {
         least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .where(col("u") =!= col("v")).distinct()
-    val adj = und.select(col("u").as("id"), col("v").as("nb"))
-      .union(und.select(col("v").as("id"), col("u").as("nb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = RunScope.persist("star_adj",
+      und.select(col("u").as("id"), col("v").as("nb"))
+        .union(und.select(col("v").as("id"), col("u").as("nb"))))
     val deg = adj.groupBy("id").agg(count(lit(1)).as("deg"))
     val nbd = adj
       .join(deg, "id")
       .join(deg.select(col("id").as("nb"), col("deg").as("nb_deg")), "nb")
-    val flagged = nbd.groupBy("id").agg(
+    val flagged = RunScope.persist("star_flagged", nbd.groupBy("id").agg(
         min(col("deg")).as("deg"),
         max(struct(col("nb_deg"), col("nb"))).as("best_nb"))
       .select(col("id"), col("deg"),
-        (struct(col("deg"), col("id")) > col("best_nb")).as("is_center"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        (struct(col("deg"), col("id")) > col("best_nb")).as("is_center")))
     val centers = flagged.where(col("is_center"))
       .select(col("id").as("nb"), col("deg").as("c_deg"))
     val attach = adj.join(centers, "nb")

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.RunScope
 import graft.ingest.Blocking
 import graft.link.Salting
 import scala.util.hashing.MurmurHash3
@@ -54,7 +55,7 @@ object Dedup {
     // and the per-bucket fan-out rows; without the cache the base
     // subtree (which can be an expensive signature pipeline) is scanned
     // once per consumer
-    val stats = persistLatest("salted_stats",
+    val stats = RunScope.persist("salted_stats",
       base.groupBy(col("bk")).agg(count(lit(1)).as("n")))
     val tot = stats.agg(
       coalesce(sum(col("n").cast("decimal(38,0)") * col("n")), lit(0))
@@ -70,31 +71,7 @@ object Dedup {
   // (bucket explode + two confirm-join sides); AQE compiles the branches
   // as separate stages with no exchange reuse, so without persist the
   // whole signature scan+UDF pipeline runs per branch (3x the corpus
-  // scan at 100 TB). One cached table per call site, previous unpersisted
-  // (same discipline as Linker.lastChunksCache).
-  //
-  // CONTRACT: at most ONE in-flight query per slot. A second call on the
-  // same slot unpersists the previous DataFrame immediately, so two
-  // concurrent jobs sharing a slot (e.g. two minhashLshPairs actions in
-  // one session) stay CORRECT but the earlier one silently loses its
-  // cache and recomputes the signature pipeline. Callers needing
-  // concurrent runs should manage persistence explicitly.
-  private val lastSigCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def persistLatest(slot: String, df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastSigCaches.put(slot, p)).foreach { prev =>
-      try if (!(prev eq p) && !prev.sparkSession.sparkContext.isStopped)
-        prev.unpersist(false)
-      catch { case _: Throwable => () }
-    }
-    p
-  }
-
-  /** [[persistLatest]] for other modules' multi-branch subtrees (e.g. the
-    * k-means quantized-vector table); same slot contract. */
-  def persistLatestPublic(slot: String, df: DataFrame): DataFrame =
-    persistLatest(slot, df)
+  // scan at 100 TB). Each call site persists into its own RunScope slot.
 
   /** Project `score` then threshold-filter WITHOUT Catalyst re-evaluating
     * the scoring expression in both Filter and Project: PushDownPredicates
@@ -167,7 +144,7 @@ object Dedup {
     * [[graft.expr.hashedCharNgrams]] — the one-pass gram signature). */
   def jaccardPairsHashed(df: DataFrame, id: String, toks: Column, blockKey: Column,
       threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
-    val sig = persistLatest("jaccard",
+    val sig = RunScope.persist("jaccard",
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
     val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
@@ -202,7 +179,7 @@ object Dedup {
   def containmentPairsHashed(df: DataFrame, id: String, toks: Column,
       blockKey: Column, threshold: Double, aim: Long = PairAim,
       maxK: Int = Salting.MaxSaltFanout): DataFrame = {
-    val sig = persistLatest("containment",
+    val sig = RunScope.persist("containment",
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
     val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
@@ -242,7 +219,7 @@ object Dedup {
     require(alphaTenths >= 0 && betaTenths >= 0
       && alphaTenths + betaTenths > 0, "need nonneg weights, not both 0")
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val sig = persistLatest("tversky",
+    val sig = RunScope.persist("tversky",
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
     val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
@@ -300,7 +277,7 @@ object Dedup {
     val elems = array_distinct(split(col(text), " "))
     val toks = df.select(col(id).cast("long").as("id"),
       explode(elems).as("tok"))
-    val sig = persistLatest("prefixfilter",
+    val sig = RunScope.persist("prefixfilter",
       df.select(col(id).cast("long").as("id"), hashedSet(elems).as("toks"))
         .withColumn("sz", size(col("toks")).cast("long")))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -378,7 +355,7 @@ object Dedup {
     // tf-map build is an interpreted-HOF projection — persist it once so
     // the pair generator's stats subtree and both join sides reuse it
     // (the sig-table discipline of the jaccard paths)
-    val base = persistLatest("wjaccard_tf",
+    val base = RunScope.persist("wjaccard_tf",
       df.select(blockKey.as("bk"), col(id).cast("long").as("id"),
           split(col(text), " ").as("ts"))
         .select(col("bk"), col("id"),
@@ -517,7 +494,7 @@ object Dedup {
       bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed,
       aim: Long = PairAim): DataFrame = {
     val k = bands * rowsPerBand
-    val sig = persistLatest("minhash_acc",
+    val sig = RunScope.persist("minhash_acc",
       minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed)
         .withColumn("shh", hashedSet(col("sh"))))
     val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
@@ -570,7 +547,7 @@ object Dedup {
     require(b >= 1 && b <= 16, s"b out of range: $b")
     val k = bands * rowsPerBand
     val mask = (1 << b) - 1
-    val sig = persistLatest("bbit_minhash",
+    val sig = RunScope.persist("bbit_minhash",
       minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed)
         .withColumn("shh", hashedSet(col("sh"))))
     val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
@@ -609,7 +586,7 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, id: String, text: String,
       threshold: Double, bands: Int = 8, rowsPerBand: Int = 4,
       seed: Int = 0xd5ed, aim: Long = PairAim): DataFrame = {
-    val sig = persistLatest("minhash",
+    val sig = RunScope.persist("minhash",
       minhashSignatures(df, id, text, bands, rowsPerBand, seed)
         .withColumn("shh", hashedSet(col("sh"))))
     val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
@@ -672,7 +649,7 @@ object Dedup {
       rowsPerBand: Int = 4, seed: Int = 0xd5ed,
       aim: Long = PairAim): DataFrame = {
     val thr = math.round(threshold * 1000000L)
-    val sig = persistLatest("wminhash",
+    val sig = RunScope.persist("wminhash",
       weightedMinhashSignatures(df, id, text, tfCap, bands, rowsPerBand, seed)
         .withColumn("memh", hashedSet(col("mem")))
         .withColumn("sz", size(col("mem")).cast("long")))
@@ -723,7 +700,7 @@ object Dedup {
         lit(0).as("nw"))
       .join(newSide.select("__id"), Seq("__id"), "left_anti")
       .unionByName(newSide)
-    val sig = persistLatest("minhash_delta",
+    val sig = RunScope.persist("minhash_delta",
       minhashSignatures(all, "__id", "__t", bands, rowsPerBand, seed)
         .join(all.select(col("__id").as("doc"), col("nw")), "doc")
         .withColumn("shh", hashedSet(col("sh"))))
@@ -908,7 +885,7 @@ object Dedup {
   def embeddingCosinePairsApprox(df: DataFrame, id: String, vec: String,
       threshold: Double, tables: Int = 16, bits: Int = 6, dim: Int = 64,
       seed: Long = 0xa11L, aim: Long = PairAim): DataFrame = {
-    val sig = persistLatest("cosine_lsh",
+    val sig = RunScope.persist("cosine_lsh",
       graft.ann.Ann.signatures(df, id, vec, tables, bits, dim, seed))
     val ids = sig.select(explode(col("bks")).as("bk"), col("vid").as("id"))
     val pairs = saltedSelfPairs(ids, aim)

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.core.Blake2b256
+import graft.core.{Blake2b256, RunScope}
 import scala.util.hashing.MurmurHash3
 
 /** Blocking-key generation + block metadata (SURVEY.md §2 B1-B3).
@@ -234,7 +234,7 @@ object Blocking {
       col("rec").as("rec0"), col("truth").as("t0"))
     val b = mem.where(col("dp") === 1).select(col("pred"), col("key"),
       col("rec").as("rec1"), col("truth").as("t1"))
-    val pairs = graft.dedup.Dedup.persistLatestPublic("blocking_scheme",
+    val pairs = RunScope.persist("blocking_scheme",
       a.join(b, Seq("pred", "key"))
         .select(col("pred"), col("rec0"), col("rec1"),
           (col("t0") === col("t1")).as("istrue"))
@@ -602,8 +602,8 @@ object Blocking {
     // `assigned` feeds BOTH the output union and the orphan anti-join;
     // AQE compiles the branches as separate stages with no exchange
     // reuse, so without a persist the whole token join + aggregation runs
-    // twice (one-slot cache discipline, unpersisted on the next call)
-    val assigned = graft.dedup.Dedup.persistLatestPublic("canopy",
+    // twice (released when the caller's run ends)
+    val assigned = RunScope.persist("canopy",
       toks.join(seedToks, "tok")
         .groupBy("rec", "canopy").agg(count(lit(1)).as("shared"))
         .where(col("shared") >= minShared))

@@ -42,8 +42,8 @@ import java.nio.charset.StandardCharsets
   * error, nothing mixed is blessed.
   *
   * Lineage: one row per output partition (stage, partition_id, rows_out)
-  * plus stage-level counters (e.g. pairs_generated / pairs_scored /
-  * edges_kept), written to `<root>/_lineage/stage=<name>` — the Spark
+  * plus stage-level counters (e.g. pairs_generated / edges_kept),
+  * written to `<root>/_lineage/stage=<name>` — the Spark
   * analogue of the reference's per-task Redis progress counters
   * (`cache/progress.py:34-58`). The per-stage partition directory is
   * OVERWRITTEN on recompute (and deleted on invalidate), so a crash-retry

@@ -43,8 +43,6 @@ import org.apache.spark.sql.types._
   */
 object FellegiSunter {
 
-  @volatile private var lastTfGroupsCache: Option[DataFrame] = None
-
   /** Default probability scale: 1e9 keeps every E-step product and every
     * count-weighted sum inside a signed 64-bit long for corpora up to
     * ~9e9 candidate pairs per pattern; the M-step numerators that exceed
@@ -683,22 +681,12 @@ object FellegiSunter {
     // ONE quadratic pass: the (pattern, value) groups subsume the EM's
     // per-pattern counts (sum over values), so the pair job never runs
     // twice; the grouped frame is bounded by patterns x distinct matched
-    // values — tiny rows, safe to persist
-    val groups = pairs
+    // values — tiny rows, safe to persist. The returned frame reads it
+    // lazily, so it stays cached until the caller's run ends (RunScope).
+    val groups = graft.core.RunScope.persist("fs_tf_groups", pairs
       .groupBy((gammaCols.map(c => coalesce(col(c).cast("int"), lit(0)).as(c))
         :+ col(tfValCol).as("tf_val")): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one-slot cache discipline (same as Linker's run caches): the
-    // returned frame is lazy, so the earliest safe unpersist point for
-    // THIS call's cache is the NEXT call
-    FellegiSunter.synchronized {
-      lastTfGroupsCache.foreach { prev =>
-        try if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist(false)
-        catch { case _: Throwable => }
-      }
-      lastTfGroupsCache = Some(groups)
-    }
+      .agg(count(lit(1)).as("n_pairs")))
     val counts = groups
       .groupBy(gammaCols.map(col): _*)
       .agg(sum(col("n_pairs")).as("n_pairs"))

@@ -93,9 +93,9 @@ object Fuzzy {
       s"idf weights must fit 32 bits for the packed argmax (max $maxW); " +
         "lower idfScale")
     // the weight-list table feeds the pair generator's stats subtree AND
-    // both join sides — persist once (the sig-table discipline of the
-    // jaccard paths; slot-cached, previous call unpersisted)
-    val wl = graft.dedup.Dedup.persistLatestPublic("soft_tfidf_wl",
+    // both join sides — persist once, like the jaccard paths' signature
+    // tables
+    val wl = graft.core.RunScope.persist("soft_tfidf_wl",
       weights.groupBy("id", "bk")
         .agg(sort_array(collect_list(struct(col("t"), col("w")))).as("wl"),
           sqrt(sum(col("w") * col("w")).cast("double")).as("nrm")))

@@ -2,7 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Edge, LinkConfig}
+import graft.core.{Edge, LinkConfig, RunScope}
 import graft.expr.dicePre
 
 /** Candidate generation + scoring: the reference's
@@ -26,25 +26,6 @@ import graft.expr.dicePre
   */
 object Linker {
 
-  @volatile private var lastChunksCache: Option[DataFrame] = None
-  @volatile private var lastStatsCache: Option[DataFrame] = None
-
-  /** Register this run's cached frames, unpersisting the previous run's
-    * (bounded to ONE cached chunk table + ONE cached stats frame per
-    * session — the returned edges Dataset is lazy, so both must outlive
-    * this call until the caller's first action; the NEXT call is the
-    * earliest safe unpersist point). */
-  private def registerRunCaches(chunks: DataFrame, stats: DataFrame): Unit =
-    Linker.synchronized {
-      (lastChunksCache.toSeq ++ lastStatsCache.toSeq).foreach { prev =>
-        // previous cache may belong to an already-stopped session
-        try if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist(false)
-        catch { case _: Throwable => }
-      }
-      lastChunksCache = Some(chunks)
-      lastStatsCache = Some(stats)
-    }
-
   /** Comparisons per task when decomposing blocks (reference
     * CHUNK_SIZE_AIM=3e8, `settings.py:103`, sized for its C++ kernel).
     * 2.56e8 (~16k 128-byte records per side): before the kernel was
@@ -56,9 +37,6 @@ object Linker {
     * round at local[32]. The adaptive aim (Salting.adaptiveAim) still
     * splits small jobs across all cores. */
   val ChunkSizeAim: Long = 256000000L
-
-  /** The single salt-digit cap, [[Salting.MaxSaltFanout]]. */
-  val MaxSaltFanout: Int = Salting.MaxSaltFanout
 
   /** Input: columns (dp int, entity_id long, clk binary, popcount int,
     * block_key string). Output: deduplicated scored edges with dp0 < dp1.
@@ -136,7 +114,7 @@ object Linker {
     * kernel, not the shuffle, is the bottleneck at cluster scale.
     */
   def scoreCandidatesChunked(blocked: DataFrame, cfg: LinkConfig,
-      chunkSizeAim: Long = ChunkSizeAim, maxK: Int = MaxSaltFanout): Dataset[Edge] = {
+      chunkSizeAim: Long = ChunkSizeAim, maxK: Int = Salting.MaxSaltFanout): Dataset[Edge] = {
     val spark = blocked.sparkSession
     import spark.implicits._
 
@@ -151,10 +129,9 @@ object Linker {
     // would trigger Catalyst's Expand-based distinct rewrite and push 2x
     // the rows through the shuffle.
     val withH = blocked.withColumn("bkh", xxhash64($"block_key"))
-    val statsRaw = withH.groupBy($"bkh")
+    val statsRaw = RunScope.persist("link_stats", withH.groupBy($"bkh")
       .agg(count(lit(1)).as("n"),
-        (min($"dp") =!= max($"dp")).as("cross_dp"))
-      .persist()
+        (min($"dp") =!= max($"dp")).as("cross_dp")))
 
     // A block confined to ONE provider can never emit a dp0<dp1 pair.
     // With LSH banding most band values are unique to one document, so at
@@ -205,7 +182,7 @@ object Linker {
     // measured to generate enough garbage to send later rounds into GC
     // collapse; primitive arrays deserialize with zero boxing and the
     // popcount sort is paid once per chunk instead of once per chunk pair.
-    val chunks = Salting.assignSalt(kept, statsBase, "bkh", aim, maxK,
+    val packed = Salting.assignSalt(kept, statsBase, "bkh", aim, maxK,
         $"dp", $"entity_id")
       .select($"block_key", $"k1", $"k2", $"dp", $"salt", $"entity_id", $"clk", $"popcount")
       .as[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]
@@ -233,12 +210,12 @@ object Linker {
         (bk, k1, k2, dp, salt, stride, ids, pcs, pch, flat)
       }
       .toDF("block_key", "k1", "k2", "dp", "salt", "stride", "ids", "pcs", "pch", "flat")
-      // both join branches derive from this subtree and AQE compiles them
-      // as separate query stages (no exchange reuse) — without caching,
-      // the whole scan+encode+pack pipeline runs twice. Bounded to one
-      // cached chunk table per session (previous call unpersisted).
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerRunCaches(chunks, statsRaw)
+    // both join branches derive from this subtree and AQE compiles them
+    // as separate query stages (no exchange reuse) — without caching, the
+    // whole scan+encode+pack pipeline runs twice. The returned edges are
+    // lazy, so the chunk and stats frames stay cached until the caller's
+    // run ends (RunScope).
+    val chunks = RunScope.persist("link_chunks", packed)
 
     val threshold = cfg.threshold
     val pairsDs = Salting.meet(chunks, "block_key")

@@ -289,7 +289,7 @@ object Relational {
   def prefixSum(df: DataFrame, orderCol: String, valueCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ranged = graft.dedup.Dedup.persistLatestPublic("prefix_sum",
+    val ranged = graft.core.RunScope.persist("prefix_sum",
       df.select(col(orderCol).cast("long").as("k"),
           col(valueCol).cast("long").as("v"))
         .repartitionByRange(col("k"))
@@ -339,7 +339,7 @@ object Relational {
     import spark.implicits._
     val g = df.groupBy(col(maxCol).cast("long").as("_sky_x"))
       .agg(min(col(minCol).cast("long")).as("_sky_y"))
-    val ranged = graft.dedup.Dedup.persistLatestPublic("skyline2d",
+    val ranged = graft.core.RunScope.persist("skyline2d",
       g.repartitionByRange(col("_sky_x").desc)
         .sortWithinPartitions(col("_sky_x").desc))
     val partMins = ranged

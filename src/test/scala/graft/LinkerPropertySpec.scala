@@ -100,7 +100,7 @@ class LinkerPropertySpec extends SparkSpec {
     }
     // and at the production cap a 10^9-row block is fully covered
     val (k1, k2) = graft.link.Salting.fanoutScala(1000000000L,
-      Linker.ChunkSizeAim, Linker.MaxSaltFanout)
+      Linker.ChunkSizeAim, graft.link.Salting.MaxSaltFanout)
     val needK = math.ceil(1000000000L / math.sqrt(Linker.ChunkSizeAim.toDouble)).toLong
     assert(k1.toLong * k2 >= needK, s"k1=$k1 k2=$k2 needK=$needK")
     // expected per-chunk rows -> chunk-pair comparisons <= ~2x aim
