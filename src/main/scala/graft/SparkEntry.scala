@@ -1201,7 +1201,7 @@ object SparkEntry {
       graft.io.Checkpoint.invalidate(s, root, "clean")
       graft.io.Checkpoint.invalidate(s, root, "stats")
       val st1 = graft.io.Checkpoint.stage(s, root, "clean",
-        counters = d => Map("rows" -> d.count()))(
+        counters = rows => Map("rows" -> rows))(
         docs(s, dir).where(length(col("text")) >= 20)
           .select(col("doc_id"), col("lang"), col("n_chars")))
       val st1b = graft.io.Checkpoint.stage(s, root, "clean")(

@@ -34,8 +34,8 @@ object Solver {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // A4 solver-stage guardrail (settings.py:111, solver.py:29-34)
-    // enforced by caller via Linker.enforceScoredPairsCap / config.
+    // A4 solver-stage guardrail (settings.py:111, solver.py:29-34) is
+    // the caller's: LinkJob enforces it on the committed edge count.
 
     // nodeEdges feeds BOTH the CC run and the component-tagging join; the
     // upstream is the whole scoring kernel, and AQE compiles the two

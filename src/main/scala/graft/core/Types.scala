@@ -26,17 +26,6 @@ case class Edge(sim: Double, dp0: Int, rec0: Long, dp1: Int, rec1: Long)
   * export (groups schema per `api_def/openapi.yaml:737-754`). */
 case class ClusterMember(clusterId: Long, dp: Int, entityId: Long)
 
-/** Per-partition lineage/counter row persisted with every checkpointed
-  * stage (north-rule requirement; progress parity with the reference's
-  * Redis counters, `cache/progress.py:34-58`). */
-case class LineageRow(
-    stage: String,
-    partitionId: Int,
-    rowsOut: Long,
-    pairsScored: Long,
-    edgesKept: Long,
-    wallMs: Long)
-
 object NodeId {
   /** Globally unique node id `dp << 40 | entityId` (reference uses
     * `dp_id << 32 | entity_id`, `database/util.py:167-173`; 40 bits here

@@ -56,12 +56,6 @@ object Blocking {
     df.withColumn("block_key", explode(keysUdf(col(textCol))))
   }
 
-  /** P3: BLAKE2b-256 block-name hash as a column function. */
-  def hashBlockName(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val u = udf((s: String) => Blake2b256.hashName(if (s == null) "" else s))
-    u(c)
-  }
-
   /** B3: per-(dp, block) record counts (`database/insertions.py:50-67`). */
   def blockStats(blocked: DataFrame): DataFrame =
     blocked.groupBy(col("dp"), col("block_key")).agg(count(lit(1)).as("n"))

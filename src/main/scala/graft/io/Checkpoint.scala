@@ -41,13 +41,19 @@ import java.nio.charset.StandardCharsets
   * manifest-only directory the thief then fails against — both writers
   * error, nothing mixed is blessed.
   *
-  * Lineage: one row per output partition (stage, partition_id, rows_out)
-  * plus stage-level counters (e.g. pairs_generated / edges_kept),
-  * written to `<root>/_lineage/stage=<name>` — the Spark
-  * analogue of the reference's per-task Redis progress counters
-  * (`cache/progress.py:34-58`). The per-stage partition directory is
-  * OVERWRITTEN on recompute (and deleted on invalidate), so a crash-retry
-  * or invalidated recompute never double-counts lineage rows.
+  * Lineage: one row per output partition (partition_id, rows_out),
+  * written to `<root>/_lineage/stage=<name>` — the Spark analogue of the
+  * reference's per-task Redis progress counters (`cache/progress.py:34-58`).
+  * The per-stage partition directory is OVERWRITTEN on recompute (and
+  * deleted on invalidate), so a crash-retry or invalidated recompute never
+  * double-counts lineage rows.
+  *
+  * Counting: the staged table is counted once, by the lineage aggregate.
+  * The stage's `rows` is the sum of its `rows_out`, and the `counters`
+  * callback receives that count, not the table, so stage-level counters
+  * (e.g. pairs_generated / edges_kept) add no Spark job. `rows`, `wall_ms`
+  * and the counters go into `_MANIFEST.json`; a resumed stage reports the
+  * manifest's `rows`.
   */
 object Checkpoint {
 
@@ -71,26 +77,23 @@ object Checkpoint {
 
   /** Run (or resume) a checkpointed stage. `compute` is only invoked when
     * the stage is not yet committed and this writer holds the stage lock.
-    * `counters` are stage-level metrics evaluated after the write (may
-    * read the checkpointed table). */
+    * `counters` are stage-level metrics evaluated after the write; they
+    * receive the stage's row count (the sum of its lineage rows), so a
+    * counter that needs it costs no Spark job. */
   def stage(spark: SparkSession, root: String, name: String,
-      counters: DataFrame => Map[String, Long] = _ => Map.empty,
+      counters: Long => Map[String, Long] = _ => Map.empty,
       lockWaitMs: Long = LockWaitMs, heartbeatMs: Long = HeartbeatMs)
       (compute: => DataFrame): StageResult = {
     val dir = s"$root/$name"
     val mfPath = new Path(s"$dir/_MANIFEST.json")
     val filesystem = fs(spark, mfPath)
 
-    if (filesystem.exists(mfPath)) {
-      val df = spark.read.parquet(dir)
-      return StageResult(df, -1L, resumed = true)
-    }
+    if (filesystem.exists(mfPath)) return resumed(spark, root, name)
 
     val attemptId = java.util.UUID.randomUUID().toString
     if (!acquireLock(spark, root, name, lockWaitMs, attemptId)) {
       // another writer committed while we waited -> serve its result
-      if (filesystem.exists(mfPath))
-        return StageResult(spark.read.parquet(dir), -1L, resumed = true)
+      if (filesystem.exists(mfPath)) return resumed(spark, root, name)
       throw new IllegalStateException(
         s"stage $name: writer lock held by another run and no commit " +
           s"appeared within ${lockWaitMs}ms")
@@ -98,14 +101,19 @@ object Checkpoint {
     try {
       // the lock holder re-checks: the previous holder may have committed
       // between our manifest probe and lock acquisition
-      if (filesystem.exists(mfPath))
-        return StageResult(spark.read.parquet(dir), -1L, resumed = true)
+      if (filesystem.exists(mfPath)) return resumed(spark, root, name)
       doCompute(spark, root, name, counters, compute, attemptId, heartbeatMs)
     } finally releaseLock(spark, root, name, attemptId)
   }
 
+  /** A committed stage, served from Parquet with the manifest's row count. */
+  private def resumed(spark: SparkSession, root: String, name: String): StageResult = {
+    val rows = """"rows":(\d+)""".r.findFirstMatchIn(readManifest(spark, root, name).get).get
+    StageResult(spark.read.parquet(s"$root/$name"), rows.group(1).toLong, resumed = true)
+  }
+
   private def doCompute(spark: SparkSession, root: String, name: String,
-      counters: DataFrame => Map[String, Long],
+      counters: Long => Map[String, Long],
       compute: => DataFrame, attemptId: String, heartbeatMs: Long): StageResult = {
     val dir = s"$root/$name"
     val dataPath = new Path(dir)
@@ -142,16 +150,17 @@ object Checkpoint {
       // per-partition lineage (one row per read partition ~= parquet file
       // split) — materialized from the staged tree BEFORE the rename (the
       // lazy plan is bound to tmpDir's files); per-stage lineage dir is
-      // overwritten, so a recompute replaces (never duplicates) rows
+      // overwritten, so a recompute replaces (never duplicates) rows. The
+      // stage's row count is their sum: the table is counted once.
       val lineageRows = written
         .groupBy(spark_partition_id().as("partition_id"))
         .agg(count(lit(1)).as("rows_out"))
         .select("partition_id", "rows_out")
         .collect()
 
-      val rows = written.count()
+      val rows = lineageRows.map(_.getLong(1)).sum
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val metrics = counters(written)
+      val metrics = counters(rows)
       val metricsJson = metrics.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       val manifest =
         s"""{"stage":"$name","rows":$rows,"wall_ms":$wallMs,"metrics":{$metricsJson}}"""

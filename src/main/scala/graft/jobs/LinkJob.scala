@@ -19,6 +19,12 @@ import graft.cluster.Solver
   * protocol, per-partition lineage + counters). Rerunning the job after a
   * crash resumes from the last committed stage; recomputing an upstream
   * stage invalidates everything downstream (lineage correctness).
+  *
+  * Every number the run records is read from the aggregate that already
+  * computes it, so counting adds no Spark job: a stage's row count is the
+  * sum of its lineage rows (fresh) or the manifest's `rows` (resumed), the
+  * edges stage's `pairs_generated` comes from the kernel's block-stats
+  * round-trip, and the guardrail reads the edges stage's row count.
   */
 object LinkJob {
 
@@ -28,40 +34,40 @@ object LinkJob {
       root: String): DataFrame = RunScope.run {
     var dirty = false
 
-    def chained(name: String, counters: DataFrame => Map[String, Long] = _ => Map.empty)
-        (compute: => DataFrame): DataFrame = {
+    def chained(name: String, counters: Long => Map[String, Long] = _ => Map.empty)
+        (compute: => DataFrame): Checkpoint.StageResult = {
       if (dirty) Checkpoint.invalidate(spark, root, name)
       val r = Checkpoint.stage(spark, root, name, counters)(compute)
       if (!r.resumed) dirty = true
-      r.df
+      r
     }
 
     val blocked = chained("blocked") {
       Ingest.encodeAndBlock(pages)
-    }
+    }.df
 
-    // measured counters: generated = the blocked pair space, kept =
+    // measured counters: generated = the blocked pair space (Σ over blocks
+    // of cross-provider products, from the kernel's block stats), kept =
     // committed rows (the kernel's popcount window skips an unmeasured
     // share of the generated pairs, so no scored count is claimed)
-    val edges = chained("edges", written => Map(
-      "pairs_generated" -> Linker.totalComparisons(blocked),
-      "edges_kept" -> written.count())) {
-      import spark.implicits._
-      val e = Linker.scoreCandidates(blocked, cfg)
+    var pairsGenerated = 0L
+    val edges = chained("edges", kept => Map(
+      "pairs_generated" -> pairsGenerated, "edges_kept" -> kept)) {
+      val (e, pairs) = Linker.scoreCandidatesCounted(blocked, cfg)
+      pairsGenerated = pairs
       e.toDF()
     }
 
     // guardrail (A4): enforced on the committed edge count
-    val edgeCount = edges.count()
-    require(edgeCount <= cfg.maxScoredPairs,
-      s"run aborted: $edgeCount candidate pairs exceeds cap ${cfg.maxScoredPairs}")
-    require(edgeCount <= cfg.maxSolverPairs,
-      s"solver aborted: $edgeCount pairs exceeds cap ${cfg.maxSolverPairs}")
+    require(edges.rows <= cfg.maxScoredPairs,
+      s"run aborted: ${edges.rows} candidate pairs exceeds cap ${cfg.maxScoredPairs}")
+    require(edges.rows <= cfg.maxSolverPairs,
+      s"solver aborted: ${edges.rows} pairs exceeds cap ${cfg.maxSolverPairs}")
 
     chained("clusters") {
       import spark.implicits._
-      Solver.solve(edges.as[Edge], cfg).toDF()
-    }
+      Solver.solve(edges.df.as[Edge], cfg).toDF()
+    }.df
   }
 
   /** spark-submit entry: LinkJob <checkpointRoot> <nA> <nB> <threshold>.
@@ -71,7 +77,7 @@ object LinkJob {
     require(args.length >= 4,
       "usage: LinkJob <checkpointRoot> <nA> <nB> <threshold> [cores]")
     val Array(root, nA, nB, threshold) = args.take(4)
-    val cores = if (args.length > 4) args(4) else "8"
+    val cores = args.lift(4).getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .appName("graft-link")

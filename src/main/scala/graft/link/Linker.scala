@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.core.{Edge, LinkConfig, RunScope}
 import graft.expr.dicePre
@@ -49,9 +49,16 @@ object Linker {
     * hot path is chunk-pair nested loops, exactly the reference's work
     * packages (`tasks/comparing.py:102-170`).
     */
-  def scoreCandidates(blocked: DataFrame, cfg: LinkConfig): Dataset[Edge] = {
-    val scored = scoreCandidatesChunked(blocked, cfg)
-    cfg.topKPerRecord.fold(scored)(k => capTopKPerRecord(scored, k))
+  def scoreCandidates(blocked: DataFrame, cfg: LinkConfig): Dataset[Edge] =
+    scoreCandidatesCounted(blocked, cfg)._1
+
+  /** [[scoreCandidates]]'s edges together with the blocked pair space
+    * (the A5 count [[totalComparisons]] returns), read from the kernel's
+    * own block-stats round-trip: a caller that records both pays no
+    * Spark job for the count. */
+  def scoreCandidatesCounted(blocked: DataFrame, cfg: LinkConfig): (Dataset[Edge], Long) = {
+    val (scored, pairs) = chunked(blocked, cfg, ChunkSizeAim, Salting.MaxSaltFanout)
+    (cfg.topKPerRecord.fold(scored)(k => capTopKPerRecord(scored, k)), pairs)
   }
 
   /** Optional anonlink-`k` parity: keep the k best candidates per left
@@ -114,24 +121,42 @@ object Linker {
     * kernel, not the shuffle, is the bottleneck at cluster scale.
     */
   def scoreCandidatesChunked(blocked: DataFrame, cfg: LinkConfig,
-      chunkSizeAim: Long = ChunkSizeAim, maxK: Int = Salting.MaxSaltFanout): Dataset[Edge] = {
+      chunkSizeAim: Long = ChunkSizeAim, maxK: Int = Salting.MaxSaltFanout): Dataset[Edge] =
+    chunked(blocked, cfg, chunkSizeAim, maxK)._1
+
+  /** Per-block statistics, the one aggregate behind the kernel's plan and
+    * the A5 count: rows are counted per (block, provider) (B3, m = n_dp)
+    * and reduced per block to its size `n` and its cross-provider
+    * comparisons `pairs` = Σ_{dp<dp'} n_dp·n_dp' = (n² − Σ n_dp²) / 2.
+    * A block spans more than one provider iff pairs > 0. Blocks are keyed
+    * by `bkh`, a 64-bit hash of the block key (see [[chunked]]); the
+    * per-block products are Longs, exact below ~3·10^9 rows per block. */
+  private def blockStats(blocked: DataFrame): DataFrame =
+    blocked.groupBy(xxhash64(col("block_key")).as("bkh"), col("dp")).agg(count(lit(1)).as("m"))
+      .groupBy("bkh").agg(sum("m").as("n"), sum(col("m") * col("m")).as("sq"))
+      .select(col("bkh"), col("n"), expr("(n * n - sq) div 2").as("pairs"))
+
+  /** Σ of a stats column as decimal (Σ n² over 10^12-row blocks exceeds a
+    * Long), saturated to Long on the driver. */
+  private def decSum(c: Column): Column = coalesce(sum(c.cast("decimal(38,0)")), lit(0))
+  private def sat(d: java.math.BigDecimal): Long = d.toBigInteger.min(
+    java.math.BigInteger.valueOf(Long.MaxValue)).longValue()
+
+  private def chunked(blocked: DataFrame, cfg: LinkConfig,
+      chunkSizeAim: Long, maxK: Int): (Dataset[Edge], Long) = {
     val spark = blocked.sparkSession
     import spark.implicits._
 
     // Stats ride a 64-bit hash of the block key: the string key (an LSH
     // band value, often ~50 bytes) would dominate this — the widest —
-    // shuffle's bytes, and every consumer of stats is a heuristic
+    // shuffle's bytes. Every kernel consumer of stats is a heuristic
     // (keep-list, salt fan-out, chunk aim) where a hash collision merely
-    // keeps or over-salts one extra block. Chunk packing and the
-    // chunk-pair join below stay on the TRUE key, so a collision can
-    // never cause a cross-block comparison. "spans >1 provider" ==
-    // min(dp) != max(dp): cheap single-pass aggs, where a countDistinct
-    // would trigger Catalyst's Expand-based distinct rewrite and push 2x
-    // the rows through the shuffle.
+    // keeps or over-salts one extra block, and the only exact consumer,
+    // the pair count, can only over-count by a collided block's cross
+    // products. Chunk packing and the chunk-pair join below stay on the
+    // TRUE key, so a collision can never cause a cross-block comparison.
     val withH = blocked.withColumn("bkh", xxhash64($"block_key"))
-    val statsRaw = RunScope.persist("link_stats", withH.groupBy($"bkh")
-      .agg(count(lit(1)).as("n"),
-        (min($"dp") =!= max($"dp")).as("cross_dp")))
+    val statsRaw = RunScope.persist("link_stats", blockStats(blocked))
 
     // A block confined to ONE provider can never emit a dp0<dp1 pair.
     // With LSH banding most band values are unique to one document, so at
@@ -144,25 +169,19 @@ object Linker {
     // no extra shuffle. When most blocks are cross-provider (or the list
     // would be too big to broadcast) the filter buys nothing; skip it.
     // ONE driver round-trip for every block-stat scalar this call needs
-    // (count, cross count, and the n² sums both with and without the
+    // (count, cross count, the n² sums both with and without the
     // single-provider blocks — the prefilter decision picks which sum
-    // applies, so computing both in the same job replaces what used to be
-    // two sequential head() actions; ~25 bench queries pay this latency
-    // per kernel invocation).
-    val (totalBlocks, crossBlocks, pairsUbAll, pairsUbCross) = {
-      val r = statsRaw.agg(count(lit(1)),
-        coalesce(sum(when($"cross_dp", 1L)), lit(0L)),
-        coalesce(sum($"n".cast("decimal(38,0)") * $"n"), lit(0)),
-        coalesce(sum(when($"cross_dp", $"n".cast("decimal(38,0)") * $"n")),
-          lit(0))).head()
-      def sat(d: java.math.BigDecimal): Long = d.toBigInteger.min(
-        java.math.BigInteger.valueOf(Long.MaxValue)).longValue()
-      (r.getLong(0), r.getLong(1), sat(r.getDecimal(2)), sat(r.getDecimal(3)))
-    }
+    // applies — and the pair space Σ pairs the caller may record).
+    val cross = $"pairs" > 0
+    val nSq = $"n".cast("decimal(38,0)") * $"n"
+    val r = statsRaw.agg(count(lit(1)), count(when(cross, 1)),
+      decSum(nSq), decSum(when(cross, nSq)), decSum($"pairs")).head()
+    val (totalBlocks, crossBlocks) = (r.getLong(0), r.getLong(1))
+    val Seq(pairsUbAll, pairsUbCross, pairSpace) = (2 to 4).map(i => sat(r.getDecimal(i)))
     val prefilter = crossBlocks <= MaxCrossBlockBroadcast &&
       crossBlocks * 2 <= totalBlocks
     val statsBase =
-      if (prefilter) statsRaw.where($"cross_dp") else statsRaw
+      if (prefilter) statsRaw.where(cross) else statsRaw
     val kept =
       if (prefilter)
         withH.join(broadcast(statsBase.select($"bkh")), Seq("bkh"))
@@ -295,21 +314,14 @@ object Linker {
       }
     }
 
-    scored.dropDuplicates("dp0", "rec0", "dp1", "rec1").as[Edge]
+    (scored.dropDuplicates("dp0", "rec0", "dp1", "rec1").as[Edge], pairSpace)
   }
 
   /** A5: total comparison estimate = sum over (block, dp-pair) of the
-    * product of per-dp block sizes (`database/selections.py:231-261`). */
-  def totalComparisons(blocked: DataFrame): Long = {
-    val spark = blocked.sparkSession
-    import spark.implicits._
-    val per = blocked.groupBy($"block_key", $"dp").agg(count(lit(1)).as("n"))
-    val l = per.select($"block_key", $"dp".as("dp0"), $"n".as("n0"))
-    val r = per.select($"block_key", $"dp".as("dp1"), $"n".as("n1"))
-    l.join(r, "block_key").where($"dp0" < $"dp1")
-      .agg(coalesce(sum($"n0" * $"n1"), lit(0L)))
-      .head().getLong(0)
-  }
+    * product of per-dp block sizes (`database/selections.py:231-261`):
+    * Σ pairs of [[blockStats]], the aggregate the kernel plans from. */
+  def totalComparisons(blocked: DataFrame): Long =
+    sat(blockStats(blocked).agg(decSum(col("pairs"))).head().getDecimal(0))
 
   /** A4 guardrail: fail the run when scored candidates exceed the cap
     * (`settings.py:112`, enforced `comparing.py:363-372`). Returns count. */
