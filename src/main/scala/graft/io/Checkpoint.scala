@@ -144,8 +144,11 @@ object Checkpoint {
 
     val t0 = System.nanoTime()
     try {
-      compute.write.mode("overwrite").parquet(tmpDir)
-      val written = spark.read.parquet(tmpDir)
+      val df = compute
+      df.write.mode("overwrite").parquet(tmpDir)
+      // both reads of the stage take the written frame's schema:
+      // inferring it back from the Parquet footers costs a job per read
+      val written = spark.read.schema(df.schema).parquet(tmpDir)
 
       // per-partition lineage (one row per read partition ~= parquet file
       // split) — materialized from the staged tree BEFORE the rename (the
@@ -190,7 +193,7 @@ object Checkpoint {
       val out = filesystem.create(mfPath, true)
       out.write(manifest.getBytes(StandardCharsets.UTF_8))
       out.close()
-      StageResult(spark.read.parquet(dir), rows, resumed = false)
+      StageResult(spark.read.schema(df.schema).parquet(dir), rows, resumed = false)
     } finally {
       hb.interrupt()
       try filesystem.delete(tmpPath, true)

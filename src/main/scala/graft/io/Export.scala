@@ -37,11 +37,6 @@ object Export {
   def scoresFrame(edges: Dataset[Edge]): DataFrame =
     edges.toDF().orderBy(desc("sim"), col("dp0"), col("rec0"), col("dp1"), col("rec1"))
 
-  def writeScoresJson(edges: Dataset[Edge], path: String): Unit =
-    scoresFrame(edges)
-      .select(to_json(struct(col("sim"), col("dp0"), col("rec0"), col("dp1"), col("rec1"))).as("value"))
-      .write.mode("overwrite").text(path)
-
   /** 2-party similarity-scores CSV wire format: `rec0,rec1,sim` lines,
     * dataset indices implied (0,1) — the exact shape
     * `similarity_matrix_from_csv_bytes` parses
