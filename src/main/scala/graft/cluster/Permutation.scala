@@ -3,7 +3,7 @@ package graft.cluster
 import java.util.{Arrays, BitSet}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, udf}
 import graft.core.ClusterMember
 
 /** 2-party permutation + mask construction — reference semantics at
@@ -75,10 +75,9 @@ object Permutation {
     * range and a row index matched more than once, since either would
     * make the permutations non-bijective. */
   private def crossPairs(clusters: Dataset[ClusterMember], n0: Int, n1: Int): Array[Long] = {
-    val rows = clusters.toDF().where(col("dp").isin(0, 1))
-      .select(col("clusterId"), col("dp"), col("entityId")).collect()
+    val rows = clusters.collect().filter(m => m.dp == 0 || m.dp == 1)
     // cluster number = rank of the cluster id among the distinct ids
-    val ids = rows.map(_.getLong(0))
+    val ids = rows.map(_.clusterId)
     Arrays.sort(ids)
     var nIds = 0
     ids.indices.foreach { i =>
@@ -87,9 +86,9 @@ object Permutation {
     val count0, count1 = new Array[Int](nIds)
     val rec0, rec1 = new Array[Long](nIds)
     rows.foreach { r =>
-      val c = Arrays.binarySearch(ids, 0, nIds, r.getLong(0))
-      if (r.getInt(1) == 0) { count0(c) += 1; rec0(c) = r.getLong(2) }
-      else { count1(c) += 1; rec1(c) = r.getLong(2) }
+      val c = Arrays.binarySearch(ids, 0, nIds, r.clusterId)
+      if (r.dp == 0) { count0(c) += 1; rec0(c) = r.entityId }
+      else { count1(c) += 1; rec1(c) = r.entityId }
     }
     val partner = Array.fill(n0)(-1L)
     val matchedB = new BitSet(n1)
@@ -161,21 +160,27 @@ object Permutation {
     fill(permB, 1)
 
     // each partition of the permutation frame carries only its own slice
-    // of the arrays, so no task deserializes all n0+n1 slots
+    // of the arrays, so no task deserializes all n0+n1 slots. One frame per
+    // side with a literal dp: a filter on dp prunes the other side in the
+    // optimizer, so both sides' dense lists run the same generated code.
     val step = ((na.toLong + nb) / spark.sparkContext.defaultParallelism + 1)
       .min(Int.MaxValue).toInt
-    val slices = Seq(0 -> permA, 1 -> permB).flatMap { case (dp, slots) =>
-      (0 until slots.length by step).map { start =>
+    def side(dp: Int, slots: Array[Long]) = {
+      val slices = (0 until slots.length by step).map { start =>
         val end = math.min(start.toLong + step, slots.length).toInt
-        (dp, start, Arrays.copyOfRange(slots, start, end))
+        (start, Arrays.copyOfRange(slots, start, end))
       }
+      spark.sparkContext.parallelize(slices, math.max(1, slices.length))
+        .flatMap { case (start, part) =>
+          part.indices.iterator.map(i => (start.toLong + i, part(i)))
+        }.toDF("row_index", "slot")
+        .select(lit(dp).as("dp"), col("row_index"), col("slot"))
     }
-    val perm = spark.sparkContext.parallelize(slices, math.max(1, slices.length))
-      .flatMap { case (dp, start, slots) =>
-        slots.indices.iterator.map(i => (dp, start.toLong + i, slots(i)))
-      }.toDF("dp", "row_index", "slot")
-    val maskDf = spark.range(smaller).map(s => (s.longValue, if (mask.get(s.toInt)) 1 else 0))
-      .toDF("slot", "bit").coalesce(1)
+    val perm = side(0, permA).union(side(1, permB))
+    // a range keeps its slots ordered and range-partitioned, so an
+    // orderBy("slot") of the mask plans neither a sort nor an exchange
+    val bit = udf((s: Long) => if (mask.get(s.toInt)) 1 else 0).asNonNullable()
+    val maskDf = spark.range(smaller).select(col("id").as("slot"), bit(col("id")).as("bit"))
     (perm, maskDf)
   }
 

@@ -3,7 +3,7 @@ package graft.cluster
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{ClusterMember, Edge, LinkConfig, NodeId, RunScope}
-import scala.collection.mutable
+import java.util.Arrays
 
 /** Greedy entity-group solver — Spark-native equivalent of anonlink's
   * `greedy_solve` as used by the reference at
@@ -16,26 +16,66 @@ import scala.collection.mutable
   * are unmatched), because a cross pair within one provider can never be a
   * candidate.
   *
-  * Parallel strategy: greedy consumption is inherently sequential, but
-  * candidate edges never cross connected components — so the global greedy
-  * result equals running the exact sequential algorithm independently
-  * per component. We compute components distributed (large-star/small-star)
-  * and solve each component locally inside `flatMapGroups`. Components are
-  * small at sane thresholds; the reference caps total solver input at 1e8
-  * pairs anyway (`settings.py:111`).
+  * Strategy: greedy consumption is inherently sequential, but a merge
+  * never crosses a connected component, so one pass over ALL edges in
+  * the global order gives the same groups as one pass per component.
+  * Graphs of at most `localSolveMaxEdges` edges (the candidate graph
+  * after thresholding is small; the reference solves the whole graph on
+  * one `highmemory` worker, `backend/entityservice/tasks/solver.py`) are
+  * collected once as primitive `(sim, u, v)` arrays, in at most two
+  * Spark jobs on a materialized input, and solved on the driver; the
+  * result is a local Dataset. Larger graphs compute components distributed
+  * (large-star/small-star, [[ConnectedComponents]]) and solve each
+  * component inside `flatMapGroups`; the reference caps total solver
+  * input at 1e8 pairs anyway (`settings.py:111`).
   *
   * Determinism: edges are processed in (sim DESC, dp0, rec0, dp1, rec1)
   * order; cluster ids are the minimum member node id.
   */
 object Solver {
 
-  /** Solve scored candidate edges into entity clusters. */
-  def solve(edges: Dataset[Edge], cfg: LinkConfig): Dataset[ClusterMember] = {
+  /** Solve scored candidate edges into entity clusters: on the driver
+    * when the graph has at most `localSolveMaxEdges` edges, else through
+    * distributed connected components (which also takes the limit, so a
+    * spec can force every distributed round with 0). */
+  def solve(edges: Dataset[Edge], cfg: LinkConfig,
+      localSolveMaxEdges: Long = ConnectedComponents.LocalSolveMaxEdges): Dataset[ClusterMember] = {
     val spark = edges.sparkSession
     import spark.implicits._
 
     // A4 solver-stage guardrail (settings.py:111, solver.py:29-34) is
     // the caller's: LinkJob enforces it on the committed edge count.
+    collectAtMost(edges, localSolveMaxEdges) match {
+      case Some((sim, u, v)) => spark.createDataset(greedy(sim, u, v).toSeq)
+      case None => solveDistributed(edges, localSolveMaxEdges)
+    }
+  }
+
+  /** The graph as primitive (sim, u, v) arrays when it has at most `limit`
+    * edges. One plan: a limit of `limit + 1` rows gathered into a single
+    * partition and packed there, so the driver receives three arrays and
+    * never more than `limit + 1` edges. On a materialized input that is
+    * two Spark jobs (the gathering shuffle, then the collect), or one when
+    * Spark already knows the input's row count is within the limit. */
+  private def collectAtMost(edges: Dataset[Edge],
+      limit: Long): Option[(Array[Double], Array[Long], Array[Long])] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val parts = edges.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
+      .mapPartitions { it =>
+        val (s, u, v) = (Array.newBuilder[Double], Array.newBuilder[Long], Array.newBuilder[Long])
+        it.foreach { e => s += e.sim; u += NodeId(e.dp0, e.rec0); v += NodeId(e.dp1, e.rec1) }
+        Iterator((s.result(), u.result(), v.result()))
+      }.collect()
+    val sim = parts.flatMap(_._1)
+    Option.when(sim.length <= limit)((sim, parts.flatMap(_._2), parts.flatMap(_._3)))
+  }
+
+  /** Components through distributed CC, then the greedy per component. */
+  private def solveDistributed(edges: Dataset[Edge],
+      localSolveMaxEdges: Long): Dataset[ClusterMember] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
 
     // nodeEdges feeds BOTH the CC run and the component-tagging join; the
     // upstream is the whole scoring kernel, and AQE compiles the two
@@ -49,7 +89,8 @@ object Solver {
         .toDF("u", "v", "sim"))
 
     val cc = ConnectedComponents.run(
-      nodeEdges.select($"u", $"v").as[(Long, Long)])
+      nodeEdges.select($"u", $"v").as[(Long, Long)],
+      localSolveMaxEdges = localSolveMaxEdges)
 
     // Tag each edge with its component (u's component == v's component).
     val tagged = nodeEdges
@@ -60,75 +101,88 @@ object Solver {
     tagged
       .groupByKey(_._1)
       .flatMapGroups { (_: Long, it: Iterator[(Long, Double, Long, Long)]) =>
-        solveComponent(it)
+        val es = it.toArray
+        greedy(es.map(_._2), es.map(_._3), es.map(_._4)).iterator
       }
   }
 
-  /** Exact sequential greedy within one component. */
-  private[cluster] def solveComponent(
-      it: Iterator[(Long, Double, Long, Long)]): Iterator[ClusterMember] = {
-    // Materialize and order: sim DESC, then node ids ASC (deterministic
-    // tie-break; reference stream is sorted desc-sim, ties by indices).
-    val es = it.map { case (_, sim, u, v) =>
-      if (u <= v) (sim, u, v) else (sim, v, u)
+  /** Exact sequential greedy (G1) over edge i = (sim(i), u(i), v(i)),
+    * node ids as [[NodeId]] packs them: any set of whole components, all
+    * of them at once. Every node starts as its own group; in (sim DESC,
+    * min id, max id) order, an edge merges its endpoints' groups when
+    * every cross pair between them is an edge. Groups of two or more come
+    * out, each member tagged with the group's minimum node id.
+    *
+    * Primitive state only, about 100 bytes per edge at the peak
+    * (2M random edges: see [[ConnectedComponents.LocalSolveMaxEdges]]):
+    * nodes are ranked in id order (so index order is id order), a pair
+    * is the long `lo << 32 | hi` of its two ranks, the candidate set is
+    * the sorted array of those longs, and the solve order is one sort of
+    * `simRank << 32 | pairRank` longs. */
+  private[cluster] def greedy(sim: Array[Double], u: Array[Long],
+      v: Array[Long]): Array[ClusterMember] = {
+    val m = sim.length
+    val nodes = Arrays.copyOf(u, 2 * m)
+    System.arraycopy(v, 0, nodes, m, m)
+    Arrays.sort(nodes)
+    var n = 0
+    nodes.indices.foreach { i =>
+      if (n == 0 || nodes(i) != nodes(n - 1)) { nodes(n) = nodes(i); n += 1 }
+    }
+    def rank(id: Long): Long = Arrays.binarySearch(nodes, 0, n, id).toLong
+    def pair(x: Long, y: Long): Long = if (x <= y) (x << 32) | y else (y << 32) | x
+    val pairs = Array.tabulate(m)(i => pair(rank(u(i)), rank(v(i))))
+    val cand = pairs.clone()
+    Arrays.sort(cand)
+    def isCand(x: Int, y: Int): Boolean = Arrays.binarySearch(cand, pair(x, y)) >= 0
+
+    // solve order: sim DESC (Double.compare order), then pair rank, which
+    // is (min id, max id) order because ranks follow ids
+    val sims = sim.clone()
+    Arrays.sort(sims)
+    val order = Array.tabulate(m) { i =>
+      (((m - 1 - Arrays.binarySearch(sims, sim(i))).toLong) << 32) |
+        Arrays.binarySearch(cand, pairs(i))
+    }
+    Arrays.sort(order)
+
+    // group(x): x's group, named by one member; each group is a linked list
+    // of its members (head/next/tail), with its size and minimum rank
+    val group, head, tail, minRank = Array.range(0, n)
+    val next = Array.fill(n)(-1)
+    val size = Array.fill(n)(1)
+    order.foreach { k =>
+      val p = cand((k & 0xFFFFFFFFL).toInt)
+      val (gu, gv) = (group((p >>> 32).toInt), group(p.toInt))
+      if (gu != gv && allCross(head, next, gu, gv, isCand)) {
+        val (big, small) = if (size(gu) >= size(gv)) (gu, gv) else (gv, gu)
+        var x = head(small)
+        while (x >= 0) { group(x) = big; x = next(x) }
+        next(tail(big)) = head(small)
+        tail(big) = tail(small)
+        size(big) += size(small)
+        minRank(big) = math.min(minRank(big), minRank(small))
+      }
+    }
+    (0 until n).iterator.filter(x => size(group(x)) >= 2).map { x =>
+      ClusterMember(nodes(minRank(group(x))), NodeId.dp(nodes(x)), NodeId.entity(nodes(x)))
     }.toArray
-    java.util.Arrays.sort(es, new java.util.Comparator[(Double, Long, Long)] {
-      def compare(a: (Double, Long, Long), b: (Double, Long, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c
-        else {
-          val c2 = java.lang.Long.compare(a._2, b._2)
-          if (c2 != 0) c2 else java.lang.Long.compare(a._3, b._3)
-        }
-      }
-    })
-
-    val candSet = new java.util.HashSet[(Long, Long)](es.length * 2)
-    es.foreach { case (_, u, v) => candSet.add((u, v)) }
-
-    val groupOf = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
-    es.foreach { case (_, u, v) =>
-      val gu = groupOf.get(u)
-      val gv = groupOf.get(v)
-      if ((gu eq null) && (gv eq null)) {
-        val g = mutable.ArrayBuffer(u, v)
-        groupOf.put(u, g); groupOf.put(v, g)
-      } else if (gu eq null) {
-        if (gv.forall(y => candSet.contains(ord(u, y)))) {
-          gv += u; groupOf.put(u, gv)
-        }
-      } else if (gv eq null) {
-        if (gu.forall(x => candSet.contains(ord(x, v)))) {
-          gu += v; groupOf.put(v, gu)
-        }
-      } else if (gu ne gv) {
-        val ok = gu.forall(x => gv.forall(y => candSet.contains(ord(x, y))))
-        if (ok) {
-          val (big, small) = if (gu.size >= gv.size) (gu, gv) else (gv, gu)
-          big ++= small
-          small.foreach(n => groupOf.put(n, big))
-        }
-      }
-      // same group -> nothing to do
-    }
-
-    // Distinct groups; singletons never created. clusterId = min node.
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[mutable.ArrayBuffer[Long], java.lang.Boolean]())
-    val out = mutable.ArrayBuffer[ClusterMember]()
-    val itv = groupOf.values().iterator()
-    while (itv.hasNext) {
-      val g = itv.next()
-      if (seen.add(g) && g.size >= 2) {
-        val cid = g.min
-        g.foreach(n => out += ClusterMember(cid, NodeId.dp(n), NodeId.entity(n)))
-      }
-    }
-    out.iterator
   }
 
-  @inline private def ord(a: Long, b: Long): (Long, Long) =
-    if (a <= b) (a, b) else (b, a)
+  /** True iff every (x in group a, y in group b) pair is a candidate. */
+  private def allCross(head: Array[Int], next: Array[Int], a: Int, b: Int,
+      isCand: (Int, Int) => Boolean): Boolean = {
+    var x = head(a)
+    while (x >= 0) {
+      var y = head(b)
+      while (y >= 0) {
+        if (!isCand(x, y)) return false
+        y = next(y)
+      }
+      x = next(x)
+    }
+    true
+  }
 
   /** Mutual-best (symmetric best-match) 1:1 assignment — the cheap
     * alternative solver to greedy: keep a scored pair iff each endpoint

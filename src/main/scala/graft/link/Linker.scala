@@ -39,7 +39,9 @@ object Linker {
   val ChunkSizeAim: Long = 256000000L
 
   /** Input: columns (dp int, entity_id long, clk binary, popcount int,
-    * block_key string). Output: deduplicated scored edges with dp0 < dp1.
+    * block_key string), `(dp, entity_id)` unique per provider as the
+    * reference's row indices are. Output: scored edges with dp0 < dp1,
+    * each pair once.
     *
     * Default = the chunked kernel (`scoreCandidatesChunked`): the
     * row-at-a-time join form is kept as the declarative semantic spec
@@ -114,7 +116,10 @@ object Linker {
     *  4. a tight array nested loop scores each chunk pair with the
     *     popcount kernel, emitting only >= threshold edges (nothing below
     *     threshold is ever materialized — parity with the reference
-    *     kernel's in-loop threshold, `tasks/comparing.py:340-343`).
+    *     kernel's in-loop threshold, `tasks/comparing.py:340-343`);
+    *  5. a pair shared by several blocks is deduplicated, a shuffle of
+    *     every edge that runs only when more than one block is kept: in
+    *     one block no pair can repeat.
     *
     * Shuffle volume is 2·k²·chunkBytes per block — for a 10^6-record
     * block at the 3e8 aim that is ~16 GB for 10^12 comparisons, i.e. the
@@ -130,9 +135,17 @@ object Linker {
     * comparisons `pairs` = Σ_{dp<dp'} n_dp·n_dp' = (n² − Σ n_dp²) / 2.
     * A block spans more than one provider iff pairs > 0. Blocks are keyed
     * by `bkh`, a 64-bit hash of the block key (see [[chunked]]); the
-    * per-block products are Longs, exact below ~3·10^9 rows per block. */
+    * per-block products are Longs, exact below ~3·10^9 rows per block.
+    *
+    * One exchange: rows are partitioned by block, so both levels run in
+    * the same tasks. There is no map-side combine, so a block's n rows
+    * meet in one task; that is O(n) work next to its O(n²) comparisons,
+    * and LSH blocks, mostly one row per (block, provider), combine to
+    * nothing anyway. */
   private def blockStats(blocked: DataFrame): DataFrame =
-    blocked.groupBy(xxhash64(col("block_key")).as("bkh"), col("dp")).agg(count(lit(1)).as("m"))
+    blocked.select(xxhash64(col("block_key")).as("bkh"), col("dp"))
+      .repartition(col("bkh"))
+      .groupBy("bkh", "dp").agg(count(lit(1)).as("m"))
       .groupBy("bkh").agg(sum("m").as("n"), sum(col("m") * col("m")).as("sq"))
       .select(col("bkh"), col("n"), expr("(n * n - sq) div 2").as("pairs"))
 
@@ -171,15 +184,19 @@ object Linker {
     // ONE driver round-trip for every block-stat scalar this call needs
     // (count, cross count, the n² sums both with and without the
     // single-provider blocks — the prefilter decision picks which sum
-    // applies — and the pair space Σ pairs the caller may record).
+    // applies —, the pair space Σ pairs the caller may record, and the
+    // largest block, which decides whether salting splits anything).
     val cross = $"pairs" > 0
     val nSq = $"n".cast("decimal(38,0)") * $"n"
     val r = statsRaw.agg(count(lit(1)), count(when(cross, 1)),
-      decSum(nSq), decSum(when(cross, nSq)), decSum($"pairs")).head()
+      decSum(nSq), decSum(when(cross, nSq)), decSum($"pairs"),
+      coalesce(max($"n"), lit(0L)), coalesce(max(when(cross, $"n")), lit(0L))).head()
     val (totalBlocks, crossBlocks) = (r.getLong(0), r.getLong(1))
     val Seq(pairsUbAll, pairsUbCross, pairSpace) = (2 to 4).map(i => sat(r.getDecimal(i)))
     val prefilter = crossBlocks <= MaxCrossBlockBroadcast &&
       crossBlocks * 2 <= totalBlocks
+    val keptBlocks = if (prefilter) crossBlocks else totalBlocks
+    val maxBlock = r.getLong(if (prefilter) 6 else 5)
     val statsBase =
       if (prefilter) statsRaw.where(cross) else statsRaw
     val kept =
@@ -192,8 +209,15 @@ object Linker {
     // inflate the aim (which would under-split what remains).
     val totalPairsUb = if (prefilter) pairsUbCross else pairsUbAll
 
-    val aim = Salting.adaptiveAim(lit(totalPairsUb), chunkSizeAim,
+    val aim = Salting.adaptiveAimValue(totalPairsUb, chunkSizeAim,
       spark.sparkContext.defaultParallelism)
+    // Salting splits a block only when it has more than sqrt(aim) rows.
+    // Then the chunk-pair join gets one partition per chunk pair, about
+    // Σ k² ≈ Σ n² / aim + blocks, so the pairs spread over every core
+    // instead of hashing into spark.sql.shuffle.partitions tasks.
+    val chunkPairs =
+      if (maxBlock <= math.sqrt(aim)) 0
+      else math.min(math.ceil(totalPairsUb / aim) + keptBlocks, Int.MaxValue.toDouble).toInt
 
     // Chunks are packed ONCE at aggregation time into primitive arrays
     // (ids, popcounts, one contiguous zero-padded clk buffer, sorted by
@@ -201,11 +225,16 @@ object Linker {
     // measured to generate enough garbage to send later rounds into GC
     // collapse; primitive arrays deserialize with zero boxing and the
     // popcount sort is paid once per chunk instead of once per chunk pair.
-    val packed = Salting.assignSalt(kept, statsBase, "bkh", aim, maxK,
-        $"dp", $"entity_id")
+    // When no block is big enough to split, every block has fan-out 1:
+    // no stats join. Grouping on the key columns (not a key function)
+    // plans no AppendColumns stage.
+    val salted =
+      if (chunkPairs == 0) Salting.assignSalt(kept, 1, 1, $"dp", $"entity_id")
+      else Salting.assignSalt(kept, statsBase, "bkh", lit(aim), maxK, $"dp", $"entity_id")
+    val packed = salted
       .select($"block_key", $"k1", $"k2", $"dp", $"salt", $"entity_id", $"clk", $"popcount")
-      .as[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]
-      .groupByKey(r => (r._1, r._2, r._3, r._4, r._5))
+      .groupBy($"block_key", $"k1", $"k2", $"dp", $"salt")
+      .as[(String, Int, Int, Int, Int), (String, Int, Int, Int, Int, Long, Array[Byte], Int)]
       .mapGroups { (key: (String, Int, Int, Int, Int), it: Iterator[(String, Int, Int, Int, Int, Long, Array[Byte], Int)]) =>
         val (bk, k1, k2, dp, salt) = key
         val recs = it.toArray.sortBy(_._8)
@@ -237,7 +266,7 @@ object Linker {
     val chunks = RunScope.persist("link_chunks", packed)
 
     val threshold = cfg.threshold
-    val pairsDs = Salting.meet(chunks, "block_key")
+    val pairsDs = Salting.meet(chunks, "block_key", chunkPairs)
       .where($"dp0" < $"dp1")
       .select($"dp0", $"stride0", $"ids0", $"pcs0", $"pch0", $"flat0",
         $"dp1", $"stride1", $"ids1", $"pcs1", $"pch1", $"flat1")
@@ -314,7 +343,18 @@ object Linker {
       }
     }
 
-    (scored.dropDuplicates("dp0", "rec0", "dp1", "rec1").as[Edge], pairSpace)
+    // A pair shared by several blocks is scored once per block; collapse
+    // it (the reference dedups during merge, comparing.py:475-483). With
+    // one kept block no pair can repeat: a record sits in exactly one
+    // (dp, salt) chunk of it, and the meet pairs each chunk pair once per
+    // orientation, of which dp0 < dp1 keeps one. So the dedup aggregate (a
+    // shuffle of every edge) runs only on multi-block inputs. This needs
+    // (dp, entity_id) to be unique per provider, as the reference's row
+    // indices are.
+    val edges =
+      if (keptBlocks <= 1) scored
+      else scored.dropDuplicates("dp0", "rec0", "dp1", "rec1").as[Edge]
+    (edges, pairSpace)
   }
 
   /** A5: total comparison estimate = sum over (block, dp-pair) of the

@@ -52,6 +52,11 @@ object Salting {
     least(lit(aim.toDouble), greatest(lit(MinAim.toDouble),
       totalPairs.cast("double") / lit(6.0 * math.max(parallelism, 1)) + 1))
 
+  /** [[adaptiveAim]] for a total the driver holds, as the same double. */
+  def adaptiveAimValue(totalPairs: Long, aim: Long, parallelism: Int): Double =
+    math.min(aim.toDouble, math.max(MinAim.toDouble,
+      totalPairs.toDouble / (6.0 * math.max(parallelism, 1)) + 1))
+
   /** (k1, k2) fan-out columns from a bucket-size column `n`; the aim is a
     * column so it can come from job statistics inside the plan. */
   def fanoutCol(n: Column, aim: Column, maxK: Int): (Column, Column) = {
@@ -80,12 +85,18 @@ object Salting {
     val (k1, k2) = fanoutCol(col("n"), aim, maxK)
     val skewed = stats.select(col(key), k1.as("k1"), k2.as("k2"))
       .where(col("k1") > 1 || col("k2") > 1)
-    rows.join(broadcast(skewed), Seq(key), "left")
-      .withColumn("k1", coalesce(col("k1"), lit(1)))
-      .withColumn("k2", coalesce(col("k2"), lit(1)))
+    withSalt(rows.join(broadcast(skewed), Seq(key), "left"),
+      coalesce(col("k1"), lit(1)), coalesce(col("k2"), lit(1)), ids)
+  }
+
+  /** [[assignSalt]] when every block has the same fan-out (k1, k2). */
+  def assignSalt(rows: DataFrame, k1: Int, k2: Int, ids: Column*): DataFrame =
+    withSalt(rows, lit(k1), lit(k2), ids)
+
+  private def withSalt(rows: DataFrame, k1: Column, k2: Column, ids: Seq[Column]) =
+    rows.withColumn("k1", k1).withColumn("k2", k2)
       .withColumn("salt",
         pmod(xxhash64(ids: _*), (col("k1") * col("k2")).cast("long")).cast("int"))
-  }
 
   /** Two-sided meet of a salted frame (columns `key`, k1, k2, salt and a
     * payload): every payload column comes out twice, suffixed 0 and 1, one
@@ -93,8 +104,13 @@ object Salting {
     * twice (once per orientation) and each row with itself once. The
     * other-side salt range is two chained explodes (each bounded by maxK),
     * the composite digit recombined as ta + k1·tb — equivalent to one
-    * sequence(0, k1*k2-1) without materializing a k1*k2-long array. */
-  def meet(salted: DataFrame, key: String): DataFrame = {
+    * sequence(0, k1*k2-1) without materializing a k1*k2-long array.
+    *
+    * With `partitions` > 0 both sides are hash-partitioned on the join
+    * keys into that many partitions: the join's own exchange, sized by
+    * the caller (who knows how many chunk pairs there are) rather than
+    * by spark.sql.shuffle.partitions, and never coalesced by AQE. */
+  def meet(salted: DataFrame, key: String, partitions: Int = 0): DataFrame = {
     val payload = salted.columns.filterNot(Set(key, "k1", "k2", "salt"))
     def side(own: String, other: String, sfx: String) =
       salted.select(
@@ -105,8 +121,11 @@ object Salting {
         .withColumn("tb", explode(sequence(lit(0), col("k2") - 1)))
         .withColumn(other, col("ta") + col("k1") * col("tb"))
         .drop("ta", "tb", "k1", "k2")
-    side("salt0", "salt1", "0")
-      .join(side("salt1", "salt0", "1"), Seq(key, "salt0", "salt1"))
+    val keys = Seq(key, "salt0", "salt1")
+    def placed(df: DataFrame) =
+      if (partitions > 0) df.repartition(partitions, keys.map(col): _*) else df
+    placed(side("salt0", "salt1", "0"))
+      .join(placed(side("salt1", "salt0", "1")), keys)
       .drop("salt0", "salt1")
   }
 }
