@@ -55,11 +55,21 @@ object Blake2b256 {
     out
   }
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
+  /** Lowercase hexdigest, as hashlib's `hexdigest()`. Table-driven: a
+    * per-byte `String.format` made hashing the block keys of an LSH
+    * explode CPU-bound on formatting. */
   def hashHex(input: Array[Byte]): String = {
     val d = hash(input)
-    val sb = new StringBuilder(64)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    val out = new Array[Char](2 * DigestBytes)
+    var i = 0
+    while (i < DigestBytes) {
+      out(2 * i) = HexDigits((d(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(d(i) & 0xf)
+      i += 1
+    }
+    new String(out)
   }
 
   /** Block-name hash: BLAKE2b-256 hexdigest of the UTF-8 label, as the

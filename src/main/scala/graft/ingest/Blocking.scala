@@ -21,12 +21,15 @@ object Blocking {
   val DefaultRows = 4
   val DefaultSeed = 0x10c4
 
+  /** The one block key of a text with no tokens: the hash of label "1". */
+  val EmptyTextKey: String = Blake2b256.hashName("1")
+
   /** MinHash-LSH band keys of a text: bands * rowsPerBand minhashes over
     * the token set; one block label per band. Pure, deterministic. */
   def lshKeys(text: String, bands: Int = DefaultBands,
       rowsPerBand: Int = DefaultRows, seed: Int = DefaultSeed): Array[String] = {
     val toks = ClkEncoder.tokens(text)
-    if (toks.isEmpty) return Array(Blake2b256.hashName("1"))
+    if (toks.isEmpty) return Array(EmptyTextKey)
     val nHashes = bands * rowsPerBand
     val mins = new Array[Int](nHashes)
     java.util.Arrays.fill(mins, Int.MaxValue)

@@ -1,8 +1,12 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 
 /** Stage checkpointing with manifest-commit semantics + per-partition
@@ -41,15 +45,22 @@ import java.nio.charset.StandardCharsets
   * manifest-only directory the thief then fails against — both writers
   * error, nothing mixed is blessed.
   *
-  * Lineage: one row per output partition (partition_id, rows_out),
-  * written to `<root>/_lineage/stage=<name>` — the Spark analogue of the
-  * reference's per-task Redis progress counters (`cache/progress.py:34-58`).
-  * The per-stage partition directory is OVERWRITTEN on recompute (and
-  * deleted on invalidate), so a crash-retry or invalidated recompute never
-  * double-counts lineage rows.
+  * Lineage: one row per output partition (partition_id, rows_out): the
+  * write task's partition (the `part-NNNNN` of its files) and the rows
+  * its files hold; a task that wrote no rows gets no row. It is written
+  * to `<root>/_lineage/stage=<name>` as one Parquet file, on the driver
+  * with parquet-hadoop (no Spark job), in the schema Spark itself writes
+  * (optional int32 / int64), so lineage a Spark job wrote reads as one
+  * table with it — the Spark analogue of the reference's per-task Redis
+  * progress counters (`cache/progress.py:34-58`). The per-stage partition
+  * directory is OVERWRITTEN on recompute (and deleted on invalidate), so
+  * a crash-retry or invalidated recompute never double-counts lineage
+  * rows.
   *
-  * Counting: the staged table is counted once, by the lineage aggregate.
-  * The stage's `rows` is the sum of its `rows_out`, and the `counters`
+  * Counting: no Spark job reads the staged table back. After the write,
+  * the driver reads the record count from each staged file's Parquet
+  * footer: what the committed files hold, exact under task retries. The
+  * stage's `rows` is the sum of its lineage rows, and the `counters`
   * callback receives that count, not the table, so stage-level counters
   * (e.g. pairs_generated / edges_kept) add no Spark job. `rows`, `wall_ms`
   * and the counters go into `_MANIFEST.json`; a resumed stage reports the
@@ -78,8 +89,9 @@ object Checkpoint {
   /** Run (or resume) a checkpointed stage. `compute` is only invoked when
     * the stage is not yet committed and this writer holds the stage lock.
     * `counters` are stage-level metrics evaluated after the write; they
-    * receive the stage's row count (the sum of its lineage rows), so a
-    * counter that needs it costs no Spark job. */
+    * receive the stage's row count (the sum of its lineage rows, read
+    * from the Parquet footers), so a counter that needs it costs no Spark
+    * job. */
   def stage(spark: SparkSession, root: String, name: String,
       counters: Long => Map[String, Long] = _ => Map.empty,
       lockWaitMs: Long = LockWaitMs, heartbeatMs: Long = HeartbeatMs)
@@ -146,22 +158,10 @@ object Checkpoint {
     try {
       val df = compute
       df.write.mode("overwrite").parquet(tmpDir)
-      // both reads of the stage take the written frame's schema:
-      // inferring it back from the Parquet footers costs a job per read
-      val written = spark.read.schema(df.schema).parquet(tmpDir)
-
-      // per-partition lineage (one row per read partition ~= parquet file
-      // split) — materialized from the staged tree BEFORE the rename (the
-      // lazy plan is bound to tmpDir's files); per-stage lineage dir is
-      // overwritten, so a recompute replaces (never duplicates) rows. The
-      // stage's row count is their sum: the table is counted once.
-      val lineageRows = written
-        .groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows_out"))
-        .select("partition_id", "rows_out")
-        .collect()
-
-      val rows = lineageRows.map(_.getLong(1)).sum
+      // lineage from the staged files' footers, read BEFORE the rename
+      // (no Spark job); the stage's row count is their sum
+      val lineageRows = partitionCounts(filesystem, tmpPath)
+      val rows = lineageRows.map(_._2).sum
       val wallMs = (System.nanoTime() - t0) / 1000000L
       val metrics = counters(rows)
       val metricsJson = metrics.map { case (k, v) => s""""$k":$v""" }.mkString(",")
@@ -183,22 +183,56 @@ object Checkpoint {
         throw new IllegalStateException(
           s"stage $name: publish rename failed (attempt $attemptId) — " +
             "a competing writer repopulated the stage directory")
-      val lineageSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("partition_id",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("rows_out",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      spark.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineageSchema)
-        .write.mode("overwrite").parquet(s"$root/_lineage/stage=$name")
+      writeLineage(filesystem, new Path(s"$root/_lineage/stage=$name"), lineageRows)
       val out = filesystem.create(mfPath, true)
       out.write(manifest.getBytes(StandardCharsets.UTF_8))
       out.close()
+      // read back with the written frame's schema: inferring it from the
+      // Parquet footers would cost a Spark job
       StageResult(spark.read.schema(df.schema).parquet(dir), rows, resumed = false)
     } finally {
       hb.interrupt()
       try filesystem.delete(tmpPath, true)
       catch { case _: java.io.IOException => () }
     }
+  }
+
+  /** `(partition_id, rows_out)` per write task that wrote rows, summed
+    * over the task's `part-NNNNN-*` files (NNNNN is the task's partition;
+    * `maxRecordsPerFile` splits one task into several files). Each count
+    * is the file's Parquet footer record count, read on the driver: what
+    * the committed files hold, exact under task retries. */
+  private def partitionCounts(filesystem: FileSystem, dir: Path): Seq[(Int, Long)] = {
+    val conf = filesystem.getConf
+    filesystem.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+      .map { p =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        val n = try reader.getRecordCount finally reader.close()
+        p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt -> n
+      }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+      .toSeq.filter(_._2 > 0).sorted
+  }
+
+  /** Spark's own schema for the lineage rows: it writes every column
+    * optional, so lineage written by a Spark job reads as one table with
+    * this. */
+  private val LineageSchema = MessageTypeParser.parseMessageType(
+    "message spark_schema { optional int32 partition_id; optional int64 rows_out; }")
+
+  /** Replaces the stage's lineage directory with one Parquet file written
+    * on the driver (no Spark job); no rows still leaves a readable file. */
+  private def writeLineage(filesystem: FileSystem, dir: Path, rows: Seq[(Int, Long)]): Unit = {
+    if (filesystem.exists(dir)) filesystem.delete(dir, true)
+    val groups = new SimpleGroupFactory(LineageSchema)
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(dir, "part-00000.parquet"), filesystem.getConf))
+      .withType(LineageSchema)
+      .withConf(filesystem.getConf)
+      .build()
+    try rows.foreach { case (pid, n) =>
+      writer.write(groups.newGroup().append("partition_id", pid).append("rows_out", n))
+    } finally writer.close()
   }
 
   /** True iff the lock file exists and carries this attempt's id. */

@@ -20,11 +20,13 @@ import graft.cluster.Solver
   * crash resumes from the last committed stage; recomputing an upstream
   * stage invalidates everything downstream (lineage correctness).
   *
-  * Every number the run records is read from the aggregate that already
-  * computes it, so counting adds no Spark job: a stage's row count is the
-  * sum of its lineage rows (fresh) or the manifest's `rows` (resumed), the
-  * edges stage's `pairs_generated` comes from the kernel's block-stats
-  * round-trip, and the guardrail reads the edges stage's row count.
+  * Every number the run records is read from what already holds it, so
+  * counting adds no Spark job: a stage's row count is the sum of its
+  * lineage rows, read from the staged files' Parquet footers on the driver
+  * (fresh), or the manifest's `rows` (resumed); the edges stage's
+  * `pairs_generated` comes from the kernel's block-stats round-trip, and
+  * the guardrail reads the edges stage's row count. A fresh stage's only
+  * Spark job in Checkpoint is its data write.
   */
 object LinkJob {
 
