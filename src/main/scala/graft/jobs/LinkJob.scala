@@ -61,8 +61,7 @@ object LinkJob {
     }
 
     // guardrail (A4): enforced on the committed edge count
-    require(edges.rows <= cfg.maxScoredPairs,
-      s"run aborted: ${edges.rows} candidate pairs exceeds cap ${cfg.maxScoredPairs}")
+    Linker.requireScoredPairsCap(edges.rows, cfg)
     require(edges.rows <= cfg.maxSolverPairs,
       s"solver aborted: ${edges.rows} pairs exceeds cap ${cfg.maxSolverPairs}")
 

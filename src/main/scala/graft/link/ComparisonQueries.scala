@@ -1,5 +1,6 @@
 package graft.link
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Query, QueryFamily}
 import graft.QueryInputs._
@@ -11,6 +12,107 @@ import graft.QueryInputs._
   *
   * Inside the record-linkage boundary. */
 object ComparisonQueries extends QueryFamily {
+  /** The part table as the FS queries read it, brand as the block key. */
+  private def partBase(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(s"$dir/part.parquet").select(
+      col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
+      col("p_name"), col("p_type"), col("p_size"))
+
+  /** The γ columns of [[partGammas]], in fold order. */
+  private val GammaCols = Seq("g_name", "g_type", "g_size")
+
+  /** The part comparison vector γ = (name within banded Levenshtein 4,
+    * equal type, size within 2) between the fields `a(f)` and `b(f)`. */
+  private def partGammas(a: String => Column, b: String => Column): Seq[Column] =
+    Seq((graft.expr.levenshteinBand(a("p_name"), b("p_name"), 4) >= 0)
+        .cast("int").as("g_name"),
+      (a("p_type") === b("p_type")).cast("int").as("g_type"),
+      (abs(a("p_size") - b("p_size")) <= 2).cast("int").as("g_size"))
+
+  /** γ over the `<f>0` / `<f>1` fields of a self-pair. */
+  private val SelfPairGammas = partGammas(f => col(f + "0"), f => col(f + "1"))
+
+  /** Brand-blocked part self-pairs from the salted generator, projected
+    * to `cols` (`id0`, `id1` and every part field suffixed 0/1). */
+  private def partPairs(s: SparkSession, dir: String,
+      cols: Seq[Column] = SelfPairGammas): DataFrame =
+    graft.dedup.Dedup.saltedSelfPairs(partBase(s, dir)).select(cols: _*)
+
+  /** The oracle side of [[partGammas]] over a pair of rows `a`, `b`. */
+  private val partGammaCasesSql: String =
+    """CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
+                           THEN 1 ELSE 0 END AS g_name,
+                      CASE WHEN a.p_type = b.p_type
+                           THEN 1 ELSE 0 END AS g_type,
+                      CASE WHEN abs(a.p_size - b.p_size) <= 2
+                           THEN 1 ELSE 0 END AS g_size"""
+
+  /** The oracle side of [[partPairs]]: CTEs `base`, `g` (γ of every
+    * brand-blocked pair, `lead` columns before it and `tail` after) and
+    * `pc` (pattern counts `c`). */
+  private def partGammaSql(lead: String = "", tail: String = ""): String =
+    s"""base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
+                              p_type, p_size FROM part),
+         g AS (SELECT $lead$partGammaCasesSql$tail
+               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
+         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
+                FROM g GROUP BY 1, 2, 3)"""
+
+  /** Two E/M iterations from λ=0.1, m=0.9, u=0.1 at S=1e9 over `pc`, in
+    * floored fixed point (HUGEINT // == the engine's BigInt floor-div):
+    * CTEs `e1`, `w1`, `p1` (iteration 1's params), `e2`, `w2`, `p2`. */
+  private val emChainSql: String =
+    """e1 AS (SELECT pc.*,
+           (((((CAST(100000000 AS BIGINT)
+              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
+           (((((CAST(900000000 AS BIGINT)
+              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
+           FROM pc),
+         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
+         p1 AS (SELECT
+           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
+           FROM w1),
+         e2 AS (SELECT pc.*,
+           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
+           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
+           FROM pc, p1),
+         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
+         p2 AS (SELECT
+           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
+           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
+           FROM w2)"""
+
+  /** The final E-step `e3` under `p2`: pattern numerator `a` and
+    * denominator part `b`, posterior = (a * S) // (a + b). */
+  private val emFinalSql: String =
+    """e3 AS (SELECT pc.*,
+           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
+           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
+              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
+              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
+           FROM pc, p2)"""
+
   val queries: Seq[Query] = Seq(
     // deterministic rule-cascade tier (splink's deterministic rules in
     // front of the probabilistic kernel): ordered first-match-wins over
@@ -179,78 +281,15 @@ object ComparisonQueries extends QueryFamily {
     // exact scaled-long arithmetic, so 2 full iterations + the final
     // posterior replay in DuckDB as chained CTEs (HUGEINT // == BigInt /)
     Query("q_fellegi_sunter", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .emClassify(pairs, Seq("g_name", "g_type", "g_size"), iters = 2)
+      FellegiSunter.emClassify(partPairs(s, dir), GammaCols, iters = 2)
         .orderBy("g_name", "g_type", "g_size")
     },
       // full EM replay: blocked pairs -> gamma patterns -> 2 E/M iterations
       // + final E-step, all in floored fixed-point (HUGEINT // == the
       // engine's BigInt floor-div; init lambda=0.1, m=0.9, u=0.1 at S=1e9)
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2),
-         e3 AS (SELECT pc.*,
-           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
-           FROM pc, p2)
+      s"""WITH ${partGammaSql()},
+         $emChainSql,
+         $emFinalSql
          SELECT CAST(e3.g_name AS INT) AS g_name,
                 CAST(e3.g_type AS INT) AS g_type,
                 CAST(e3.g_size AS INT) AS g_size,
@@ -265,70 +304,14 @@ object ComparisonQueries extends QueryFamily {
     // in the same exact fixed point — iteration i replays as the i-th
     // chained CTE of the q_fellegi_sunter oracle
     Query("q_em_trace", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .emTrace(pairs, Seq("g_name", "g_type", "g_size"), iters = 2)
+      FellegiSunter.emTrace(partPairs(s, dir), GammaCols, iters = 2)
         .orderBy("iter")
     },
       // EM trace replay: the SAME chained CTEs as q_fellegi_sunter, but
       // emitting each iteration's parameter row instead of only the final
       // pattern posteriors
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2)
+      s"""WITH ${partGammaSql()},
+         $emChainSql
          SELECT CAST(1 AS INT) AS iter, lam AS lambda,
                 mn AS m_g_name, mt AS m_g_type, ms AS m_g_size,
                 un AS u_g_name, ut AS u_g_type, us AS u_g_size
@@ -339,77 +322,14 @@ object ComparisonQueries extends QueryFamily {
     // posteriors alone — exact scaled cumulative sums over the ≤2^K
     // pattern rows, one row per distinct posterior cut
     Query("q_fs_pr_curve", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .modelPrCurve(pairs, Seq("g_name", "g_type", "g_size"), iters = 2)
+      FellegiSunter.modelPrCurve(partPairs(s, dir), GammaCols, iters = 2)
         .orderBy(desc("posterior"))
     },
       // model PR curve: the q_fellegi_sunter replay through e3, then the
       // per-posterior-cut cumulative sums as HUGEINT window aggregates
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2),
-         e3 AS (SELECT pc.*,
-           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
-           FROM pc, p2),
+      s"""WITH ${partGammaSql()},
+         $emChainSql,
+         $emFinalSql,
          posts AS (SELECT CAST((e3.a * 1000000000) // (e3.a + e3.b) AS BIGINT)
                             AS posterior,
                           e3.c AS n
@@ -436,31 +356,12 @@ object ComparisonQueries extends QueryFamily {
     // conditional-independence diagnostic: observed vs expected pattern
     // counts under field independence, exact scaled lift per pattern
     Query("q_pattern_indep", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .patternIndependence(pairs, Seq("g_name", "g_type", "g_size"))
+      FellegiSunter.patternIndependence(partPairs(s, dir), GammaCols)
         .orderBy("g_name", "g_type", "g_size")
     },
       // independence diagnostic: expected = Π marginals / N^(K-1) and the
       // capped lift, all HUGEINT floor arithmetic over the pattern counts
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
+      s"""WITH ${partGammaSql()},
          st AS (SELECT CAST(sum(c) AS HUGEINT) AS n,
                        CAST(sum(c * g_name) AS HUGEINT) AS o1,
                        CAST(sum(c * g_type) AS HUGEINT) AS o2,
@@ -488,11 +389,7 @@ object ComparisonQueries extends QueryFamily {
     // md5-sample estimate, EM fits only lambda and m over the blocked
     // pairs — removes the agreement bias blocking builds into u
     Query("q_em_fixed_u", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val gcols = Seq("g_name", "g_type", "g_size")
-      val sampled = base
+      val sampled = partBase(s, dir)
         .where(substring(md5(col("id").cast("string").cast("binary")),
           1, 1).isin("0", "1", "2", "3"))
       // part.parquet is one small file -> a 1-task scan; the <-condition
@@ -504,35 +401,21 @@ object ComparisonQueries extends QueryFamily {
       val uPairs = sampled.repartition(s.sparkContext.defaultParallelism)
         .as("a").join(broadcast(sampled.as("b")),
           col("a.id") < col("b.id"))
-        .select(
-          (graft.expr.levenshteinBand(col("a.p_name"), col("b.p_name"), 4) >= 0)
-            .cast("int").as("g_name"),
-          (col("a.p_type") === col("b.p_type")).cast("int").as("g_type"),
-          (abs(col("a.p_size") - col("b.p_size")) <= 2).cast("int").as("g_size"))
-      val uMap = graft.link.FellegiSunter.estimateU(uPairs, gcols)
+        .select(partGammas(f => col(s"a.$f"), f => col(s"b.$f")): _*)
+      val uMap = FellegiSunter.estimateU(uPairs, GammaCols)
         .collect().map(r => r.getAs[String]("field") ->
           r.getAs[Long]("u_scaled")).toMap
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .emClassifyFixedU(pairs, gcols, gcols.map(uMap), iters = 2)
+      FellegiSunter.emClassifyFixedU(partPairs(s, dir), GammaCols,
+          GammaCols.map(uMap), iters = 2)
         .orderBy("g_name", "g_type", "g_size")
     },
       // two-stage training replay: the q_estimate_u sample CTE yields the
       // frozen (clamped) u scalars; the EM chain re-estimates only lam/m
-      """WITH sbase AS (SELECT p_partkey AS id, p_name, p_type, p_size
+      s"""WITH sbase AS (SELECT p_partkey AS id, p_name, p_type, p_size
                         FROM part
                         WHERE substr(md5(CAST(p_partkey AS VARCHAR)), 1, 1)
                               IN ('0', '1', '2', '3')),
-         sg AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                            THEN 1 ELSE 0 END AS g_name,
-                       CASE WHEN a.p_type = b.p_type
-                            THEN 1 ELSE 0 END AS g_type,
-                       CASE WHEN abs(a.p_size - b.p_size) <= 2
-                            THEN 1 ELSE 0 END AS g_size
+         sg AS (SELECT $partGammaCasesSql
                 FROM sbase a JOIN sbase b ON a.id < b.id),
          su AS (SELECT CAST(count(*) AS BIGINT) AS n,
                        CAST(sum(g_name) AS BIGINT) AS an,
@@ -544,17 +427,7 @@ object ComparisonQueries extends QueryFamily {
            CAST(GREATEST(1, LEAST(999999999, (at2 * 1000000000) // n)) AS BIGINT) AS ut,
            CAST(GREATEST(1, LEAST(999999999, (asz * 1000000000) // n)) AS BIGINT) AS us
            FROM su),
-         base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                         p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
+         ${partGammaSql()},
          e1 AS (SELECT pc.*,
            (((((CAST(100000000 AS BIGINT)
               * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
@@ -616,27 +489,17 @@ object ComparisonQueries extends QueryFamily {
         .where(substring(md5(col("p_partkey").cast("string").cast("binary")),
           1, 1).isin("0", "1", "2", "3"))
       val pairs = base.as("a").join(base.as("b"), col("a.id") < col("b.id"))
-        .select(
-          (graft.expr.levenshteinBand(col("a.p_name"), col("b.p_name"), 4) >= 0)
-            .cast("int").as("g_name"),
-          (col("a.p_type") === col("b.p_type")).cast("int").as("g_type"),
-          (abs(col("a.p_size") - col("b.p_size")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .estimateU(pairs, Seq("g_name", "g_type", "g_size"))
+        .select(partGammas(f => col(s"a.$f"), f => col(s"b.$f")): _*)
+      FellegiSunter.estimateU(pairs, GammaCols)
         .orderBy("field")
     },
       // u estimation: same md5 sample gate + sampled cross join, one
       // aggregate melted by parallel unnest
-      """WITH base AS (SELECT p_partkey AS id, p_name, p_type, p_size
+      s"""WITH base AS (SELECT p_partkey AS id, p_name, p_type, p_size
                        FROM part
                        WHERE substr(md5(CAST(p_partkey AS VARCHAR)), 1, 1)
                              IN ('0', '1', '2', '3')),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
+         g AS (SELECT $partGammaCasesSql
                FROM base a JOIN base b ON a.id < b.id),
          s AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(g_name) AS BIGINT) AS an,
@@ -668,8 +531,7 @@ object ComparisonQueries extends QueryFamily {
             .cast("int").as("g_last"),
           (abs(size(col("ma.toks")) - size(col("mb.toks"))) <= 1)
             .cast("int").as("g_len"))
-      graft.link.FellegiSunter
-        .estimateMFromLabels(pairs, Seq("g_first", "g_last", "g_len"))
+      FellegiSunter.estimateMFromLabels(pairs, Seq("g_first", "g_last", "g_len"))
         .orderBy("field")
     },
       // m from the truth label: replay label blocking + gammas + exact
@@ -701,17 +563,9 @@ object ComparisonQueries extends QueryFamily {
     // pairs with posterior nearest 1/2 surface for labeling (exact
     // integer uncertainty, id tie-break — a pure function of the corpus)
     Query("q_uncertainty_sample", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        col("id0"), col("id1"),
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter.uncertaintySample(pairs,
-          Seq("g_name", "g_type", "g_size"), Seq("id0", "id1"), k = 40)
+      FellegiSunter.uncertaintySample(
+          partPairs(s, dir, col("id0") +: col("id1") +: SelfPairGammas),
+          GammaCols, Seq("id0", "id1"), k = 40)
         .select("id0", "id1", "g_name", "g_type", "g_size",
           "posterior", "uncertainty")
         .orderBy("uncertainty", "id0", "id1")
@@ -719,64 +573,9 @@ object ComparisonQueries extends QueryFamily {
       // the SAME 2-iteration EM replay as q_fellegi_sunter with pair ids
       // carried through; uncertainty = |posterior - scale/2| exact, then
       // ORDER BY uncertainty, ids LIMIT 40
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT a.id AS id0, b.id AS id1,
-                      CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2),
-         e3 AS (SELECT pc.*,
-           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
-           FROM pc, p2),
+      s"""WITH ${partGammaSql("a.id AS id0, b.id AS id1, ")},
+         $emChainSql,
+         $emFinalSql,
          post AS (SELECT g_name, g_type, g_size,
                          CAST((a * 1000000000) // (a + b) AS BIGINT)
                            AS posterior
@@ -795,78 +594,15 @@ object ComparisonQueries extends QueryFamily {
     // decomposition of every fitted pattern, exact scaled integers —
     // the explainability readout over the same EM fit
     Query("q_fs_waterfall", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"))
-      graft.link.FellegiSunter
-        .waterfall(pairs, Seq("g_name", "g_type", "g_size"), iters = 2)
+      FellegiSunter.waterfall(partPairs(s, dir), GammaCols, iters = 2)
         .orderBy("g_name", "g_type", "g_size", "field")
     },
       // waterfall: the SAME 2-iteration EM replay, then one parallel
       // unnest per pattern over the three per-field (f_m, f_u) choices;
       // bayes_scaled = (f_m * scale) // f_u matches the Scala fixed point
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2),
-         e3 AS (SELECT pc.*,
-           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
-           FROM pc, p2),
+      s"""WITH ${partGammaSql()},
+         $emChainSql,
+         $emFinalSql,
          w3 AS (SELECT e3.g_name, e3.g_type, e3.g_size, e3.c AS n_pairs,
                        (e3.a * 1000000000) // (e3.a + e3.b) AS posterior,
                        p2.mn, p2.mt, p2.ms,
@@ -896,18 +632,11 @@ object ComparisonQueries extends QueryFamily {
     // replays the full EM AND the adjusted refold in HUGEINT-free
     // chained integer CTEs
     Query("q_fs_tf_adjust", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_type"), col("p_size"))
-      val pairs = graft.dedup.Dedup.saltedSelfPairs(base).select(
-        (graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 4) >= 0)
-          .cast("int").as("g_name"),
-        (col("p_type0") === col("p_type1")).cast("int").as("g_type"),
-        (abs(col("p_size0") - col("p_size1")) <= 2).cast("int").as("g_size"),
+      val pairs = partPairs(s, dir, SelfPairGammas :+
         when(col("p_type0") === col("p_type1"), col("p_type0")).as("tf_type"))
-      graft.link.FellegiSunter.tfAdjustedPosteriors(pairs,
-          Seq("g_name", "g_type", "g_size"), "g_type", "tf_type",
-          base.select(col("p_type")), "p_type", iters = 2)
+      FellegiSunter.tfAdjustedPosteriors(pairs, GammaCols, "g_type",
+          "tf_type", partBase(s, dir).select(col("p_type")), "p_type",
+          iters = 2)
         .orderBy("g_name", "g_type", "g_size", "tf_val")
     },
       // tf adjustment: the SAME 2-iteration EM replay as q_fellegi_sunter,
@@ -915,64 +644,10 @@ object ComparisonQueries extends QueryFamily {
       // term frequency on the U side where g_type = 1; fold order and
       // parenthesization mirror the Scala loop exactly (multiply then
       // floored divide per field, g_name -> g_type -> g_size)
-      """WITH base AS (SELECT p_partkey AS id, p_brand AS bk, p_name,
-                              p_type, p_size FROM part),
-         g AS (SELECT CASE WHEN levenshtein(a.p_name, b.p_name) <= 4
-                           THEN 1 ELSE 0 END AS g_name,
-                      CASE WHEN a.p_type = b.p_type
-                           THEN 1 ELSE 0 END AS g_type,
-                      CASE WHEN abs(a.p_size - b.p_size) <= 2
-                           THEN 1 ELSE 0 END AS g_size,
-                      CASE WHEN a.p_type = b.p_type THEN a.p_type END AS tf_val
-               FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id),
-         pc AS (SELECT g_name, g_type, g_size, count(*) AS c
-                FROM g GROUP BY 1, 2, 3),
-         e1 AS (SELECT pc.*,
-           (((((CAST(100000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 900000000 ELSE 100000000 END)) // 1000000000 AS a,
-           (((((CAST(900000000 AS BIGINT)
-              * (CASE WHEN g_name = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN 100000000 ELSE 900000000 END)) // 1000000000 AS b
-           FROM pc),
-         w1 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e1),
-         p1 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w1),
-         e2 AS (SELECT pc.*,
-           (((((p1.lam * (CASE WHEN g_name = 1 THEN p1.mn ELSE 1000000000 - p1.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.mt ELSE 1000000000 - p1.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.ms ELSE 1000000000 - p1.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p1.lam) * (CASE WHEN g_name = 1 THEN p1.un ELSE 1000000000 - p1.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p1.ut ELSE 1000000000 - p1.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p1.us ELSE 1000000000 - p1.us END)) // 1000000000 AS b
-           FROM pc, p1),
-         w2 AS (SELECT *, (a * 1000000000) // (a + b) AS w FROM e2),
-         p2 AS (SELECT
-           CAST(GREATEST(1, LEAST(999999999, SUM(c * w) // SUM(c))) AS BIGINT) AS lam,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_name) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mn,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_type) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS mt,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * w * g_size) AS HUGEINT) * 1000000000) // SUM(c * w))) AS BIGINT) AS ms,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_name) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS un,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_type) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS ut,
-           CAST(GREATEST(1, LEAST(999999999, (CAST(SUM(c * (1000000000 - w) * g_size) AS HUGEINT) * 1000000000) // SUM(c * (1000000000 - w)))) AS BIGINT) AS us
-           FROM w2),
-         e3 AS (SELECT pc.*,
-           (((((p2.lam * (CASE WHEN g_name = 1 THEN p2.mn ELSE 1000000000 - p2.mn END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.mt ELSE 1000000000 - p2.mt END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.ms ELSE 1000000000 - p2.ms END)) // 1000000000 AS a,
-           ((((((1000000000 - p2.lam) * (CASE WHEN g_name = 1 THEN p2.un ELSE 1000000000 - p2.un END)) // 1000000000)
-              * (CASE WHEN g_type = 1 THEN p2.ut ELSE 1000000000 - p2.ut END)) // 1000000000)
-              * (CASE WHEN g_size = 1 THEN p2.us ELSE 1000000000 - p2.us END)) // 1000000000 AS b
-           FROM pc, p2),
+      s"""WITH ${partGammaSql(tail =
+           ", CASE WHEN a.p_type = b.p_type THEN a.p_type END AS tf_val")},
+         $emChainSql,
+         $emFinalSql,
          pb AS (SELECT g_name, g_type, g_size,
                        (a * 1000000000) // (a + b) AS posterior_base FROM e3),
          pv AS (SELECT g_name, g_type, g_size, tf_val,
@@ -1010,18 +685,14 @@ object ComparisonQueries extends QueryFamily {
     // (exact-ish / close / different) and size (equal / within-3 / far)
     // gammas, level-EM on the <=9 pattern sufficient statistics
     Query("q_fs_levels", (s, dir) => {
-      val base = s.read.parquet(s"$dir/part.parquet").select(
-        col("p_partkey").cast("long").as("id"), col("p_brand").as("bk"),
-        col("p_name"), col("p_size"))
-      val p = graft.dedup.Dedup.saltedSelfPairs(base)
       val lv = graft.expr.levenshteinBand(col("p_name0"), col("p_name1"), 5)
-      val pairs = p.select(
+      val pairs = partPairs(s, dir, Seq(
         when(lv >= 0 && lv <= 2, 2).when(lv >= 0, 1).otherwise(0)
           .as("g_name"),
         when(col("p_size0") === col("p_size1"), 2)
           .when(abs(col("p_size0") - col("p_size1")) <= 3, 1).otherwise(0)
-          .as("g_size"))
-      graft.link.FellegiSunter.emClassifyLevels(pairs,
+          .as("g_size")))
+      FellegiSunter.emClassifyLevels(pairs,
           Seq(("g_name", 3), ("g_size", 3)), iters = 2)
         .orderBy("g_name", "g_size")
     },

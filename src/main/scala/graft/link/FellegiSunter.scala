@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -52,6 +52,66 @@ object FellegiSunter {
   /** Fitted model: λ and per-field m/u, all scaled by `scale`. */
   final case class Params(lambda: Long, m: Array[Long], u: Array[Long])
 
+  private def requireGammas(gammaCols: Seq[String]): Unit =
+    require(gammaCols.nonEmpty && gammaCols.size <= 16,
+      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
+
+  /** A 0/1 gamma column as every fit reads it: int, null counts as 0. */
+  private def gammaKey(c: String): Column =
+    coalesce(col(c).cast("int"), lit(0)).as(c)
+
+  /** The ONE distributed aggregation of every fit: 10^12 pairs -> the
+    * ≤2^K observed patterns of the int `keys` with their pair count `n`,
+    * collected to the driver in a deterministic order. */
+  private def patternCounts(pairs: DataFrame, keys: Seq[Column],
+      n: Column = count(lit(1))): Array[(Array[Int], Long)] = {
+    val K = keys.size
+    val counts = pairs.groupBy(keys: _*).agg(n.as("n_pairs"))
+      .collect()
+      .map(r => (Array.tabulate(K)(r.getInt), r.getLong(K)))
+      // deterministic EM input order (comma-joined: unambiguous for
+      // any digit width, unlike bare concatenation)
+      .sortBy(_._1.mkString(","))
+    require(counts.nonEmpty, "no candidate pairs")
+    counts
+  }
+
+  /** A driver-built frame of ≤2^K rows in one partition. */
+  private def localFrame(spark: SparkSession, fields: Seq[(String, DataType)],
+      rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) }))
+
+  /** `m_<f>` then `u_<f>` for every gamma field, in gammaCols order. */
+  private def paramNames(gammaCols: Seq[String]): Seq[String] =
+    gammaCols.map("m_" + _) ++ gammaCols.map("u_" + _)
+
+  /** One row per observed pattern: the flags, `n_pairs`, `posterior`,
+    * `is_match`, `lambda` and the fitted per-field parameters. */
+  private def fitFrame(spark: SparkSession, names: Seq[String],
+      counts: Array[(Array[Int], Long)], posts: Array[Long], lambda: Long,
+      params: Seq[(String, Long)], scale: Long): DataFrame =
+    localFrame(spark,
+      names.map(_ -> IntegerType) ++ Seq("n_pairs" -> LongType,
+        "posterior" -> LongType, "is_match" -> BooleanType,
+        "lambda" -> LongType) ++ params.map(_._1 -> LongType),
+      counts.toSeq.zip(posts).map { case ((g, c), w) =>
+        Row.fromSeq(g.toSeq ++ Seq(c, w, w * 2 > scale, lambda) ++
+          params.map(_._2))
+      })
+
+  /** [[emClassify]] with an optional frozen u: the checks, the collect,
+    * the EM and the fitted-pattern rows. */
+  private def classify(pairs: DataFrame, gammaCols: Seq[String],
+      frozenU: Option[Array[Long]], iters: Int, scale: Long): DataFrame = {
+    require(iters >= 1 && scale >= 1000L, "iters >= 1, scale >= 1000")
+    val counts = patternCounts(pairs, gammaCols.map(gammaKey))
+    val (trace, posts) = emFit(counts, gammaCols.size, iters, scale, frozenU)
+    val p = trace.last
+    fitFrame(pairs.sparkSession, gammaCols, counts, posts, p.lambda,
+      paramNames(gammaCols).zip(p.m ++ p.u), scale)
+  }
+
   /** Fit by EM over candidate pairs and classify each agreement pattern.
     *
     * @param pairs one row per candidate pair; `gammaCols` are 0/1 int
@@ -66,41 +126,8 @@ object FellegiSunter {
     */
   def emClassify(pairs: DataFrame, gammaCols: Seq[String], iters: Int = 2,
       scale: Long = Scale): DataFrame = {
-    require(gammaCols.nonEmpty && gammaCols.size <= 16,
-      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
-    require(iters >= 1 && scale >= 1000L, "iters >= 1, scale >= 1000")
-    val spark = pairs.sparkSession
-    val K = gammaCols.size
-    val gs = gammaCols.map(c =>
-      coalesce(col(c).cast("int"), lit(0)).as(c))
-    // the ONE distributed aggregation: 10^12 pairs -> <=2^K rows
-    val counts = pairs.select(gs: _*)
-      .groupBy(gammaCols.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .collect()
-      .map(r => (gammaCols.indices.map(r.getInt).toArray,
-        r.getLong(K)))
-      // deterministic EM input order (comma-joined: unambiguous for
-      // any digit width, unlike bare concatenation)
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
-
-    val (params, posts) = emFit(counts, K, iters, scale)
-
-    val schema = StructType(
-      gammaCols.map(c => StructField(c, IntegerType, nullable = false)) ++
-        Seq(StructField("n_pairs", LongType, nullable = false),
-          StructField("posterior", LongType, nullable = false),
-          StructField("is_match", BooleanType, nullable = false),
-          StructField("lambda", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"m_$c", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"u_$c", LongType, nullable = false)))
-    val rows = counts.zip(posts).map { case ((g, c), w) =>
-      Row.fromSeq(g.toSeq ++ Seq(c, w, w * 2 > scale, params.lambda) ++
-        params.m.toSeq ++ params.u.toSeq)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+    requireGammas(gammaCols)
+    classify(pairs, gammaCols, None, iters, scale)
   }
 
   /** Match-weight waterfall (splink's waterfall chart data): per-field
@@ -144,8 +171,8 @@ object FellegiSunter {
     * construction, so u estimated from them is biased high; anchoring u
     * to the unblocked record-sample estimate ([[estimateU]]) and letting
     * EM fit only λ and m removes exactly that bias. Same exact
-    * fixed-point arithmetic, same ≤2^K sufficient-statistics collect;
-    * the M-step simply skips u.
+    * fixed-point arithmetic, same ≤2^K sufficient-statistics collect,
+    * same EM core ([[emFit]]); the M-step simply skips u.
     *
     * @param uScaled one frozen u per gamma column, already scaled (the
     *                `u_scaled` column of [[estimateU]]'s output, in
@@ -154,72 +181,9 @@ object FellegiSunter {
     *         values). */
   def emClassifyFixedU(pairs: DataFrame, gammaCols: Seq[String],
       uScaled: Seq[Long], iters: Int = 2, scale: Long = Scale): DataFrame = {
-    require(gammaCols.nonEmpty && gammaCols.size <= 16,
-      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
+    requireGammas(gammaCols)
     require(uScaled.size == gammaCols.size, "one frozen u per gamma field")
-    require(iters >= 1 && scale >= 1000L, "iters >= 1, scale >= 1000")
-    val spark = pairs.sparkSession
-    val K = gammaCols.size
-    val gs = gammaCols.map(c => coalesce(col(c).cast("int"), lit(0)).as(c))
-    val counts = pairs.select(gs: _*)
-      .groupBy(gammaCols.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .collect()
-      .map(r => (gammaCols.indices.map(r.getInt).toArray, r.getLong(K)))
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
-
-    val S = BigInt(scale)
-    def clamp(x: BigInt): Long = x.max(BigInt(1)).min(S - 1).toLong
-    val u = uScaled.map(v => clamp(BigInt(v))).toArray
-    var lam = scale / 10L
-    var m = Array.fill(K)(scale * 9L / 10L)
-    def eStep(): Array[Long] = counts.map { case (g, _) =>
-      var a = BigInt(lam)
-      var b = S - BigInt(lam)
-      var k = 0
-      while (k < K) {
-        a = a * (if (g(k) == 1) BigInt(m(k)) else S - BigInt(m(k))) / S
-        b = b * (if (g(k) == 1) BigInt(u(k)) else S - BigInt(u(k))) / S
-        k += 1
-      }
-      val den = a + b
-      if (den == 0) 0L else (a * S / den).toLong
-    }
-    for (_ <- 1 to iters) {
-      val w = eStep()
-      var sumCW = BigInt(0)
-      var sumC = BigInt(0)
-      val numM = Array.fill(K)(BigInt(0))
-      counts.indices.foreach { i =>
-        val (g, c) = counts(i)
-        val cw = BigInt(c) * BigInt(w(i))
-        sumCW += cw; sumC += BigInt(c)
-        var k = 0
-        while (k < K) {
-          if (g(k) == 1) numM(k) += cw
-          k += 1
-        }
-      }
-      lam = clamp(sumCW / sumC)
-      m = numM.map(n => clamp(if (sumCW == 0) BigInt(0) else n * S / sumCW))
-    }
-    val posts = eStep()
-
-    val schema = StructType(
-      gammaCols.map(c => StructField(c, IntegerType, nullable = false)) ++
-        Seq(StructField("n_pairs", LongType, nullable = false),
-          StructField("posterior", LongType, nullable = false),
-          StructField("is_match", BooleanType, nullable = false),
-          StructField("lambda", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"m_$c", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"u_$c", LongType, nullable = false)))
-    val rows = counts.zip(posts).map { case ((g, c), w) =>
-      Row.fromSeq(g.toSeq ++ Seq(c, w, w * 2 > scale, lam) ++
-        m.toSeq ++ u.toSeq)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+    classify(pairs, gammaCols, Some(uScaled.toArray), iters, scale)
   }
 
   /** Model-expected precision/recall curve — threshold selection FROM
@@ -282,18 +246,9 @@ object FellegiSunter {
     *         expected_scaled, lift_scaled). */
   def patternIndependence(pairs: DataFrame, gammaCols: Seq[String],
       scale: Long = Scale): DataFrame = {
-    require(gammaCols.nonEmpty && gammaCols.size <= 16,
-      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
-    val spark = pairs.sparkSession
+    requireGammas(gammaCols)
     val K = gammaCols.size
-    val gs = gammaCols.map(c => coalesce(col(c).cast("int"), lit(0)).as(c))
-    val counts = pairs.select(gs: _*)
-      .groupBy(gammaCols.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .collect()
-      .map(r => (gammaCols.indices.map(r.getInt).toArray, r.getLong(K)))
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
+    val counts = patternCounts(pairs, gammaCols.map(gammaKey))
     val n = BigInt(counts.map(_._2).sum)
     val ones = Array.tabulate(K)(k =>
       BigInt(counts.collect { case (g, c) if g(k) == 1 => c }.sum))
@@ -309,13 +264,9 @@ object FellegiSunter {
         else (BigInt(c) * s * nPow / prod).min(liftCap).toLong
       Row.fromSeq(g.toSeq ++ Seq(c, expected, lift))
     }
-    val schema = StructType(
-      gammaCols.map(c => StructField(c, IntegerType, nullable = false)) ++
-        Seq(StructField("n_pairs", LongType, nullable = false),
-          StructField("expected_scaled", LongType, nullable = false),
-          StructField("lift_scaled", LongType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+    localFrame(pairs.sparkSession, gammaCols.map(_ -> IntegerType) ++
+      Seq("n_pairs", "expected_scaled", "lift_scaled").map(_ -> LongType),
+      rows.toSeq)
   }
 
   /** Direct u estimation from a record sample (splink's
@@ -332,7 +283,14 @@ object FellegiSunter {
     * per field. u_scaled = (n_agree·scale) DIV n_pairs, the same fixed
     * point the EM consumes. */
   def estimateU(pairs: DataFrame, gammaCols: Seq[String],
-      scale: Long = Scale): DataFrame = {
+      scale: Long = Scale): DataFrame =
+    agreementRates(pairs, gammaCols, scale, "u_scaled")
+
+  /** Per-field agreement rate over `pairs`, one row per field:
+    * (field, n_pairs, n_agree, `rateCol` = (n_agree·scale) DIV n_pairs).
+    * The body of [[estimateU]] and [[estimateMFromLabels]]. */
+  private def agreementRates(pairs: DataFrame, gammaCols: Seq[String],
+      scale: Long, rateCol: String): DataFrame = {
     require(gammaCols.nonEmpty, "need at least one gamma field")
     val aggCols = count(lit(1)).as("n") +: gammaCols.map(c =>
       sum(coalesce(col(c).cast("long"), lit(0L))).as(s"a_$c"))
@@ -342,7 +300,7 @@ object FellegiSunter {
     one.select(col("n"), explode(array(entries: _*)).as("e"))
       .select(col("e.field").as("field"), col("n").as("n_pairs"),
         col("e.n_agree").as("n_agree"),
-        expr(s"e.n_agree * ${scale}L DIV n").as("u_scaled"))
+        expr(s"e.n_agree * ${scale}L DIV n").as(rateCol))
   }
 
   /** splink's `estimate_m_from_label_column`: when SOME ground-truth
@@ -363,18 +321,8 @@ object FellegiSunter {
     * Scale shape: one global agg (map-side combined, a single row wide)
     * plus a K-way literal melt — nothing per-pair survives the shuffle. */
   def estimateMFromLabels(pairs: DataFrame, gammaCols: Seq[String],
-      scale: Long = Scale): DataFrame = {
-    require(gammaCols.nonEmpty, "need at least one gamma field")
-    val aggCols = count(lit(1)).as("n") +: gammaCols.map(c =>
-      sum(coalesce(col(c).cast("long"), lit(0L))).as(s"a_$c"))
-    val one = pairs.agg(aggCols.head, aggCols.tail: _*)
-    val entries = gammaCols.map(c =>
-      struct(lit(c).as("field"), col(s"a_$c").as("n_agree")))
-    one.select(col("n"), explode(array(entries: _*)).as("e"))
-      .select(col("e.field").as("field"), col("n").as("n_pairs"),
-        col("e.n_agree").as("n_agree"),
-        expr(s"e.n_agree * ${scale}L DIV n").as("m_scaled"))
-  }
+      scale: Long = Scale): DataFrame =
+    agreementRates(pairs, gammaCols, scale, "m_scaled")
 
   /** Active-learning pair selection by uncertainty sampling: fit the FS
     * model ([[emClassify]]) and surface the k candidate pairs whose
@@ -444,45 +392,23 @@ object FellegiSunter {
     require(levelCols.map(x => BigInt(x._2)).product <= BigInt(65536),
       "pattern space must stay bounded (<= 65536 sufficient statistics)")
     require(iters >= 1 && scale >= 1000L)
-    val spark = pairs.sparkSession
-    val K = levelCols.size
-    val gs = levelCols.map { case (c, l) =>
+    val counts = patternCounts(pairs, levelCols.map { case (c, l) =>
       greatest(lit(0), least(lit(l - 1),
         coalesce(col(c).cast("int"), lit(0)))).as(c)
-    }
-    val names = levelCols.map(_._1)
-    val counts = pairs.select(gs: _*)
-      .groupBy(names.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .collect()
-      .map(r => (names.indices.map(r.getInt).toArray, r.getLong(K)))
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
-
+    })
     val (lam, m, u, posts) = emFitLevels(counts, levelCols.map(_._2), iters, scale)
-
-    val paramCols = levelCols.zipWithIndex.flatMap { case ((c, l), k) =>
+    val params = levelCols.zipWithIndex.flatMap { case ((c, l), k) =>
       (0 until l).flatMap(lv => Seq(
         (s"m_${c}_$lv", m(k)(lv)), (s"u_${c}_$lv", u(k)(lv))))
     }
-    val schema = StructType(
-      names.map(c => StructField(c, IntegerType, nullable = false)) ++
-        Seq(StructField("n_pairs", LongType, nullable = false),
-          StructField("posterior", LongType, nullable = false),
-          StructField("is_match", BooleanType, nullable = false),
-          StructField("lambda", LongType, nullable = false)) ++
-        paramCols.map(p => StructField(p._1, LongType, nullable = false)))
-    val rows = counts.zip(posts).map { case ((g, c), w) =>
-      Row.fromSeq(g.toSeq ++ Seq(c, w, w * 2 > scale, lam) ++
-        paramCols.map(_._2))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+    fitFrame(pairs.sparkSession, levelCols.map(_._1), counts, posts, lam,
+      params, scale)
   }
 
-  /** Level-aware EM core; exposed for the spec gate. Returns
+  /** Level-aware EM core of [[emClassifyLevels]]; its start values and
+    * per-level M-step differ from the binary core [[emFit]]. Returns
     * (lambda, m[k][l], u[k][l], posteriors). */
-  private[link] def emFitLevels(counts: Array[(Array[Int], Long)],
+  private def emFitLevels(counts: Array[(Array[Int], Long)],
       levels: Seq[Int], iters: Int,
       scale: Long): (Long, Array[Array[Long]], Array[Array[Long]], Array[Long]) = {
     val S = BigInt(scale)
@@ -537,28 +463,24 @@ object FellegiSunter {
     (lam, m, u, eStep())
   }
 
-  /** EM over pattern sufficient statistics, exact scaled-long fixed
-    * point. Exposed for the spec's independent-reimplementation gate. */
-  private[link] def emFit(counts: Array[(Array[Int], Long)], K: Int,
-      iters: Int, scale: Long): (Params, Array[Long]) = {
-    val (trace, posts) = emFitTrace(counts, K, iters, scale)
-    (trace.last, posts)
-  }
-
-  /** [[emFit]] with the full per-iteration parameter trajectory kept:
-    * element i of the returned vector is the parameter set after M-step
-    * i+1. Same exact fixed-point arithmetic — the trace rows replay in
-    * SQL as the same chained CTEs the final fit does. */
-  private[link] def emFitTrace(counts: Array[(Array[Int], Long)], K: Int,
-      iters: Int, scale: Long): (Vector[Params], Array[Long]) = {
+  /** The binary EM core over pattern sufficient statistics, exact
+    * scaled-long fixed point, behind every binary fit. With `frozenU`
+    * (clamped to [1, scale−1]) u never moves and the M-step fits only λ
+    * and m. Returns the full per-iteration trajectory — element i is the
+    * parameter set after M-step i+1, replayed in SQL as the i-th chained
+    * CTE — and the final E-step's posteriors. */
+  private def emFit(counts: Array[(Array[Int], Long)], K: Int, iters: Int,
+      scale: Long, frozenU: Option[Array[Long]] = None)
+      : (Vector[Params], Array[Long]) = {
     val S = BigInt(scale)
     def clamp(x: BigInt): Long =
       x.max(BigInt(1)).min(S - 1).toLong
 
     // classical uninformative-ish starting point: λ=0.1, m=0.9, u=0.1
+    // (or the frozen u, clamped)
     var lam = scale / 10L
     var m = Array.fill(K)(scale * 9L / 10L)
-    var u = Array.fill(K)(scale / 10L)
+    var u = frozenU.fold(Array.fill(K)(scale / 10L))(_.map(v => clamp(BigInt(v))))
 
     /** posterior w(γ) for each pattern under the current params */
     def eStep(): Array[Long] = counts.map { case (g, _) =>
@@ -595,7 +517,8 @@ object FellegiSunter {
       }
       lam = clamp(sumCW / sumC)
       m = numM.map(n => clamp(if (sumCW == 0) BigInt(0) else n * S / sumCW))
-      u = numU.map(n => clamp(if (sumCV == 0) BigInt(0) else n * S / sumCV))
+      if (frozenU.isEmpty)
+        u = numU.map(n => clamp(if (sumCV == 0) BigInt(0) else n * S / sumCV))
       trace += Params(lam, m.clone(), u.clone())
     }
     (trace.result(), eStep())
@@ -615,32 +538,17 @@ object FellegiSunter {
     *         u_<field>...), all scaled longs. */
   def emTrace(pairs: DataFrame, gammaCols: Seq[String], iters: Int = 2,
       scale: Long = Scale): DataFrame = {
-    require(gammaCols.nonEmpty && gammaCols.size <= 16,
-      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
+    requireGammas(gammaCols)
     require(iters >= 1 && scale >= 1000L, "iters >= 1, scale >= 1000")
-    val spark = pairs.sparkSession
-    val K = gammaCols.size
-    val gs = gammaCols.map(c => coalesce(col(c).cast("int"), lit(0)).as(c))
-    val counts = pairs.select(gs: _*)
-      .groupBy(gammaCols.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .collect()
-      .map(r => (gammaCols.indices.map(r.getInt).toArray, r.getLong(K)))
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
-    val (trace, _) = emFitTrace(counts, K, iters, scale)
-    val schema = StructType(
-      Seq(StructField("iter", IntegerType, nullable = false),
-        StructField("lambda", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"m_$c", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"u_$c", LongType, nullable = false)))
+    val counts = patternCounts(pairs, gammaCols.map(gammaKey))
+    val (trace, _) = emFit(counts, gammaCols.size, iters, scale)
     val rows = trace.zipWithIndex.map { case (p, i) =>
       // Seq[Any] keeps the iter element an Int (a bare Seq(i+1, lambda)
       // would widen it to Long and break the IntegerType encoder)
-      Row.fromSeq(Seq[Any](i + 1, p.lambda) ++ p.m.toSeq ++ p.u.toSeq)
+      Row.fromSeq(Seq[Any](i + 1, p.lambda) ++ p.m ++ p.u)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema)
+    localFrame(pairs.sparkSession, Seq("iter" -> IntegerType) ++
+      ("lambda" +: paramNames(gammaCols)).map(_ -> LongType), rows)
   }
 
   /** Splink-style TERM-FREQUENCY adjustment (splink's `tf_adjustments`;
@@ -674,39 +582,24 @@ object FellegiSunter {
       tfGamma: String, tfValCol: String, records: DataFrame,
       recordValCol: String, iters: Int = 2, scale: Long = Scale): DataFrame = {
     require(gammaCols.contains(tfGamma), s"$tfGamma must be a gamma field")
-    require(gammaCols.nonEmpty && gammaCols.size <= 16,
-      "1..16 gamma fields (2^K sufficient statistics must stay bounded)")
-    val spark = pairs.sparkSession
-    val K = gammaCols.size
+    requireGammas(gammaCols)
     // ONE quadratic pass: the (pattern, value) groups subsume the EM's
     // per-pattern counts (sum over values), so the pair job never runs
     // twice; the grouped frame is bounded by patterns x distinct matched
     // values — tiny rows, safe to persist. The returned frame reads it
     // lazily, so it stays cached until the caller's run ends (RunScope).
     val groups = graft.core.RunScope.persist("fs_tf_groups", pairs
-      .groupBy((gammaCols.map(c => coalesce(col(c).cast("int"), lit(0)).as(c))
-        :+ col(tfValCol).as("tf_val")): _*)
+      .groupBy((gammaCols.map(gammaKey) :+ col(tfValCol).as("tf_val")): _*)
       .agg(count(lit(1)).as("n_pairs")))
-    val counts = groups
-      .groupBy(gammaCols.map(col): _*)
-      .agg(sum(col("n_pairs")).as("n_pairs"))
-      .collect()
-      .map(r => (gammaCols.indices.map(r.getInt).toArray, r.getLong(K)))
-      .sortBy(_._1.mkString(","))
-    require(counts.nonEmpty, "no candidate pairs")
-    val (params, posts) = emFit(counts, K, iters, scale)
-    val schema = StructType(
-      gammaCols.map(c => StructField(c, IntegerType, nullable = false)) ++
-        Seq(StructField("posterior_base", LongType, nullable = false),
-          StructField("lambda", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"m_$c", LongType, nullable = false)) ++
-        gammaCols.map(c => StructField(s"u_$c", LongType, nullable = false)))
-    val fittedRows = counts.zip(posts).map { case ((g, _), w) =>
-      Row.fromSeq(g.toSeq ++ Seq(w, params.lambda) ++
-        params.m.toSeq ++ params.u.toSeq)
-    }
-    val fitted = spark.createDataFrame(
-      spark.sparkContext.parallelize(fittedRows.toIndexedSeq, 1), schema)
+    val counts = patternCounts(groups, gammaCols.map(col), sum(col("n_pairs")))
+    val (trace, posts) = emFit(counts, gammaCols.size, iters, scale)
+    val params = trace.last
+    val fitted = localFrame(pairs.sparkSession,
+      gammaCols.map(_ -> IntegerType) ++
+        ("posterior_base" +: "lambda" +: paramNames(gammaCols)).map(_ -> LongType),
+      counts.toSeq.zip(posts).map { case ((g, _), w) =>
+        Row.fromSeq(g.toSeq ++ Seq(w, params.lambda) ++ params.m ++ params.u)
+      })
     val nRec = records.agg(count(lit(1)).as("n_rec"))
     val tf = records.groupBy(col(recordValCol).as("tf_val"))
       .agg(count(lit(1)).as("n_val"))

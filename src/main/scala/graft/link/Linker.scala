@@ -367,8 +367,13 @@ object Linker {
     * (`settings.py:112`, enforced `comparing.py:363-372`). Returns count. */
   def enforceScoredPairsCap(edges: Dataset[Edge], cfg: LinkConfig): Long = {
     val n = edges.count()
-    require(n <= cfg.maxScoredPairs,
-      s"run aborted: $n candidate pairs exceeds cap ${cfg.maxScoredPairs}")
+    requireScoredPairsCap(n, cfg)
     n
   }
+
+  /** The A4 rule on a known count `n` (`q_guardrail` parses the count
+    * back out of this message). */
+  private[graft] def requireScoredPairsCap(n: Long, cfg: LinkConfig): Unit =
+    require(n <= cfg.maxScoredPairs,
+      s"run aborted: $n candidate pairs exceeds cap ${cfg.maxScoredPairs}")
 }
