@@ -39,6 +39,44 @@ object QueryInputs {
       .csv(s"$FixturesDir/febrl4_truth.csv")
       .select(col("row_a").as("rec0"), col("row_b").as("rec1"))
 
+  /** The febrl4 fixture CLKs as (dp, entity_id, pc, words): 16 bigint
+    * words and the popcount per record (`graft.tools.MakeOracleFixtures`). */
+  def febrl4Clks(s: SparkSession): DataFrame =
+    s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
+
+  private val goldenFiles = Map(
+    0.8 -> s"$FixturesDir/febrl4_golden_clusters.parquet",
+    0.75 -> s"$FixturesDir/febrl4_golden_clusters_t075.parquet")
+  private def goldenFile(t: Double): String = {
+    require(goldenFiles.contains(t), s"no golden febrl4 clustering at t=$t")
+    goldenFiles(t)
+  }
+
+  /** The frozen golden clustering of the febrl4 fixture at `t` (0.8 or
+    * 0.75) as (clusterId, dp, entityId, id), with the dp-packed record id
+    * dp * 10000 + entityId. */
+  def febrl4Golden(s: SparkSession, t: Double = 0.8): DataFrame =
+    s.read.parquet(goldenFile(t))
+      .withColumn("id", col("dp").cast("long") * 10000 + col("entityId"))
+
+  /** Full 2x2000 febrl4 record universe labeled with the golden
+    * clustering (pred) and the truth pairing (truth); records outside
+    * either get unique singleton labels — B-cubed/Rand need singletons
+    * present. */
+  def febrl4Assignment(s: SparkSession): DataFrame = {
+    val golden = febrl4Golden(s).select(col("id"), col("clusterId").as("pred"))
+    val tp = febrl4Truth(s)
+    val truth = tp.select(col("rec0").as("id"), col("rec0").as("t"))
+      .union(tp.select((col("rec1") + 10000).as("id"), col("rec0").as("t")))
+    val universe = s.range(2000).select(col("id"))
+      .union(s.range(2000).select((col("id") + 10000).as("id")))
+    universe.join(golden, Seq("id"), "left")
+      .join(truth, Seq("id"), "left")
+      .select(
+        coalesce(col("pred"), -col("id") - 1).as("pred"),
+        coalesce(col("t"), -col("id") - 1).as("truth"))
+  }
+
   /** The oracle side of [[febrl4Edges]]: CTEs `c` (the fixture CLKs as
     * 16 bigint words + popcount) and `p` (every cross-provider pair with
     * its Dice score `sim`, unthresholded), which DuckDB computes
@@ -51,6 +89,55 @@ object QueryInputs {
                     i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
                   a.dp AS dp0, a.entity_id AS rec0, b.dp AS dp1, b.entity_id AS rec1
            FROM c a JOIN c b ON a.dp < b.dp)"""
+
+  /** [[febrl4DicePairsSql]] plus CTE `e`: the pairs kept at threshold `t`. */
+  def febrl4EdgesSql(t: Double): String =
+    s"""$febrl4DicePairsSql,
+         e AS (SELECT * FROM p WHERE sim >= $t)"""
+
+  /** The oracle side of [[febrl4Truth]]: CTE `truth` (rec0, rec1,
+    * is_true = 1). */
+  val febrl4TruthSql: String =
+    s"""truth AS (SELECT CAST(row_a AS BIGINT) AS rec0,
+                          CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
+                   FROM read_csv('$FixturesDir/febrl4_truth.csv',
+                     header = true))"""
+
+  /** [[febrl4EdgesSql]] at `t` and [[febrl4TruthSql]], plus CTE `l`:
+    * each kept edge (rec0, rec1, sim) with is_true 1 for a truth pair,
+    * else 0. */
+  def febrl4LabeledEdgesSql(t: Double): String =
+    s"""${febrl4EdgesSql(t)},
+         $febrl4TruthSql,
+         l AS (SELECT e.rec0, e.rec1, e.sim, COALESCE(t.is_true, 0) AS is_true
+               FROM e LEFT JOIN truth t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1)"""
+
+  /** The golden clustering file at `t` as a DuckDB table reference. */
+  def febrl4GoldenSql(t: Double = 0.8): String = s"'${goldenFile(t)}'"
+
+  /** The oracle side of [[febrl4Assignment]]: [[febrl4TruthSql]] and the
+    * CTEs up to `a`, one row per record with its pred label `c` and its
+    * truth label `e`. */
+  val febrl4AssignmentSql: String =
+    s"""$febrl4TruthSql,
+         uni AS (SELECT i AS id FROM range(0, 2000) t(i)
+                 UNION ALL SELECT i + 10000 FROM range(0, 2000) t(i)),
+         g AS (SELECT dp * 10000 + entityId AS id, clusterId AS pred
+               FROM ${febrl4GoldenSql()}),
+         tp AS (SELECT rec0 AS id, rec0 AS t FROM truth
+                UNION ALL SELECT rec1 + 10000, rec0 FROM truth),
+         a AS (SELECT coalesce(g.pred, -uni.id - 1) AS c,
+                      coalesce(tp.t, -uni.id - 1) AS e
+               FROM uni LEFT JOIN g ON uni.id = g.id
+                        LEFT JOIN tp ON uni.id = tp.id)"""
+
+  /** The oracle side of [[Pipeline.precisionRecallF1]]: precision,
+    * recall and f1 from columns tp, n_pred and n_true, in the same double
+    * expression order (DuckDB's BIGINT / BIGINT is a double division). */
+  val precisionRecallF1Sql: String =
+    """tp / n_pred AS precision, tp / n_true AS recall,
+                2 * (tp / n_pred) * (tp / n_true)
+                  / ((tp / n_pred) + (tp / n_true)) AS f1"""
 
   def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")

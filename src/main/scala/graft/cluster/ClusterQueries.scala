@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Query, QueryFamily}
 import graft.QueryInputs._
-import graft.core.{LinkConfig, RunScope}
+import graft.core.LinkConfig
 import graft.link.Pipeline
 import graft.link.LinkageQueries.febrl4Clusters
 
@@ -16,28 +16,36 @@ import graft.link.LinkageQueries.febrl4Clusters
   *
   * Inside the record-linkage boundary. */
 object ClusterQueries extends QueryFamily {
-  /** Full 2x2000 febrl4 record universe labeled with the golden
-    * clustering (pred) and the truth pairing (truth); records outside
-    * either get unique singleton labels — B-cubed/Rand need singletons
-    * present. */
-  private def febrl4Assignment(s: SparkSession): DataFrame = {
-    val golden = s.read.parquet(s"$FixturesDir/febrl4_golden_clusters.parquet")
-      .select((col("dp").cast("long") * 10000 + col("entityId")).as("id"),
-        col("clusterId").as("pred"))
-    val tp = s.read.option("header", "true")
-      .csv(s"$FixturesDir/febrl4_truth.csv")
-    val truth = tp.select(col("row_a").cast("long").as("id"),
-        col("row_a").cast("long").as("t"))
-      .union(tp.select((col("row_b").cast("long") + 10000).as("id"),
-        col("row_a").cast("long").as("t")))
-    val universe = s.range(2000).select(col("id"))
-      .union(s.range(2000).select((col("id") + 10000).as("id")))
-    universe.join(golden, Seq("id"), "left")
-      .join(truth, Seq("id"), "left")
-      .select(
-        coalesce(col("pred"), -col("id") - 1).as("pred"),
-        coalesce(col("t"), -col("id") - 1).as("truth"))
-  }
+  private val F1Grid = Seq(0.7, 0.75, 0.8, 0.85, 0.9)
+  private val SweepGrid =
+    Seq(0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9, 0.95)
+
+  /** [[Pipeline.thresholdSweep]] over the febrl4 fixture's edges, scored
+    * once at the grid's lowest threshold. */
+  private def febrl4Sweep(s: SparkSession, grid: Seq[Double]): DataFrame =
+    Pipeline.thresholdSweep(
+      febrl4Edges(s, grid.min).toDF().where(col("dp0") === 0 && col("dp1") === 1),
+      febrl4Truth(s), grid)
+
+  /** The oracle side of [[febrl4Sweep]]: the kernel-replayed pairs fanned
+    * into each grid row they clear, LEFT joined to the truth, up to CTE
+    * `f` with the sweep's columns. The inner grid join drops a threshold
+    * no pair clears, as the engine's does. */
+  private def febrl4SweepSql(grid: Seq[Double]): String =
+    s"""$febrl4DicePairsSql,
+         $febrl4TruthSql,
+         g AS (SELECT CAST(unnest([${grid.mkString(", ")}]) AS DOUBLE)
+                 AS threshold),
+         m AS (SELECT g.threshold, CAST(count(*) AS BIGINT) AS n_pred,
+                      CAST(sum(CASE WHEN t.rec0 IS NOT NULL THEN 1 ELSE 0 END)
+                        AS BIGINT) AS tp
+               FROM p
+               JOIN g ON p.sim >= g.threshold
+               LEFT JOIN truth t ON p.rec0 = t.rec0 AND p.rec1 = t.rec1
+               GROUP BY 1),
+         ta AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
+         f AS (SELECT threshold, n_pred, n_true, tp, $precisionRecallF1Sql
+               FROM m, ta)"""
 
   val queries: Seq[Query] = Seq(
     // Newman modularity of the greedy solver's clustering against the
@@ -51,10 +59,9 @@ object ClusterQueries extends QueryFamily {
       // modularity replay: kernel edges at 0.8, the frozen golden
       // clustering as labels (singleton fallback = -(packed node + 1)),
       // Q from the exact integer sufficient statistics
-      s"""WITH $febrl4DicePairsSql,
-         e AS (SELECT * FROM p WHERE sim >= 0.8),
+      s"""WITH ${febrl4EdgesSql(0.8)},
          lab AS (SELECT "dp" AS dp, "entityId" AS rec, "clusterId" AS label
-                 FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
+                 FROM ${febrl4GoldenSql()}),
          le AS (SELECT
                   COALESCE(l0.label,
                     -((e.dp0 * 1099511627776 + e.rec0) + 1)) AS lab0,
@@ -113,64 +120,14 @@ object ClusterQueries extends QueryFamily {
     // edge-level threshold selection against the labeled truth: the
     // P/R/F1 curve over a threshold grid with the argmax marked — the
     // tuning readout in front of q_febrl4_eval's cluster-level gate
-    Query("q_threshold_f1", (s, _) => {
-      import s.implicits._
-      val truth = s.read.option("header", "true")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").cast("long").as("rec0"),
-          col("row_b").cast("long").as("rec1"))
-      // 5 per-threshold agg branches all re-read the edge set; the
-      // upstream is the scoring kernel — persist so it runs once, not 5x
-      val edges = RunScope.persist("threshold_f1_edges",
-        febrl4Edges(s, 0.7)
-          .toDF().select($"rec0", $"rec1", $"sim"))
-      val nTrue = truth.count()
-      val rows = Seq(0.7, 0.75, 0.8, 0.85, 0.9).map { t =>
-        edges.where($"sim" >= t)
-          .join(truth.withColumn("hit", lit(1L)), Seq("rec0", "rec1"), "left")
-          .agg(count(lit(1)).as("n_pred"),
-            sum(coalesce($"hit", lit(0L))).as("tp"))
-          .select(lit(t).as("threshold"), $"n_pred", lit(nTrue).as("n_true"),
-            $"tp")
-      }.reduce(_ unionByName _)
-      rows
-        .withColumn("precision", $"tp" / $"n_pred")
-        .withColumn("recall", $"tp" / $"n_true")
-        .withColumn("f1", lit(2) * ($"tp" / $"n_pred") * ($"tp" / $"n_true")
-          / (($"tp" / $"n_pred") + ($"tp" / $"n_true")))
+    Query("q_threshold_f1", (s, _) =>
+      febrl4Sweep(s, F1Grid)
         .withColumn("is_best",
-          $"f1" === max($"f1").over(Window.partitionBy(lit(1))))
-        .orderBy("threshold")
-    },
-      // threshold F1 curve: kernel-replayed sims x threshold grid, LEFT
-      // join to truth, DuckDB's int/int division == Spark's double Divide
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p0 AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         truth AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                          CAST(row_b AS BIGINT) AS rec1
-                   FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                     header = true)),
-         th AS (SELECT CAST(unnest([0.7, 0.75, 0.8, 0.85, 0.9]) AS DOUBLE)
-                  AS threshold),
-         pred AS (SELECT th.threshold, p0.rec0, p0.rec1
-                  FROM p0, th WHERE p0.sim >= th.threshold),
-         m AS (SELECT threshold, CAST(count(*) AS BIGINT) AS n_pred,
-                      CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true,
-                      CAST(sum(CASE WHEN t.rec0 IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tp
-               FROM pred LEFT JOIN truth t
-               ON pred.rec0 = t.rec0 AND pred.rec1 = t.rec1
-               GROUP BY threshold),
-         f AS (SELECT threshold, n_pred, n_true, tp,
-                      tp / n_pred AS precision, tp / n_true AS recall,
-                      2 * (tp / n_pred) * (tp / n_true)
-                        / ((tp / n_pred) + (tp / n_true)) AS f1
-               FROM m)
+          col("f1") === max(col("f1")).over(Window.partitionBy(lit(1))))
+        .orderBy("threshold"),
+      // threshold F1 curve: the sweep replay over the 5-point grid (every
+      // point cleared by some pair, so one row each), argmax marked
+      s"""WITH ${febrl4SweepSql(F1Grid)}
          SELECT threshold, n_pred, n_true, tp, precision, recall, f1,
                 f1 = max(f1) OVER () AS is_best
          FROM f"""),
@@ -320,10 +277,7 @@ object ClusterQueries extends QueryFamily {
     // the live solver still produces the F1-grade pairs.
     Query("q_febrl4_eval", (s, _) => {
       import s.implicits._
-      val truth = s.read.option("header", "true")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").cast("long").as("rec0"),
-          col("row_b").cast("long").as("rec1"), lit(1L).as("t"))
+      val truth = febrl4Truth(s).withColumn("t", lit(1L))
       def evalAt(t: Double): DataFrame = {
         val clusters =
           if (t == 0.8) febrl4Clusters(s).as[graft.core.ClusterMember]
@@ -338,11 +292,7 @@ object ClusterQueries extends QueryFamily {
             sum(coalesce($"t", lit(0L))).as("n_true"))
           .withColumn("threshold", lit(t))
       }
-      evalAt(0.75).unionByName(evalAt(0.8))
-        .withColumn("precision", $"tp" / $"n_pred")
-        .withColumn("recall", $"tp" / $"n_true")
-        .withColumn("f1",
-          lit(2) * $"precision" * $"recall" / ($"precision" + $"recall"))
+      Pipeline.precisionRecallF1(evalAt(0.75).unionByName(evalAt(0.8)))
         .select("threshold", "n_pred", "n_true", "tp",
           "precision", "recall", "f1")
         .orderBy("threshold")
@@ -352,20 +302,17 @@ object ClusterQueries extends QueryFamily {
       // against the committed ground-truth pair list; the Spark side
       // computes the same metrics from the LIVE pipeline. Identical double
       // arithmetic (BIGINT/BIGINT division then 2*p*r/(p+r)) on both sides.
-      s"""WITH truth AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                 CAST(row_b AS BIGINT) AS rec1
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                 header = true)),
+      s"""WITH $febrl4TruthSql,
          pred AS (
            SELECT CAST(0.75 AS DOUBLE) AS threshold,
                   a."entityId" AS rec0, b."entityId" AS rec1
-           FROM '$FixturesDir/febrl4_golden_clusters_t075.parquet' a
-           JOIN '$FixturesDir/febrl4_golden_clusters_t075.parquet' b
+           FROM ${febrl4GoldenSql(0.75)} a
+           JOIN ${febrl4GoldenSql(0.75)} b
              ON a."clusterId" = b."clusterId" AND a.dp = 0 AND b.dp = 1
            UNION ALL
            SELECT CAST(0.8 AS DOUBLE), a."entityId", b."entityId"
-           FROM '$FixturesDir/febrl4_golden_clusters.parquet' a
-           JOIN '$FixturesDir/febrl4_golden_clusters.parquet' b
+           FROM ${febrl4GoldenSql()} a
+           JOIN ${febrl4GoldenSql()} b
              ON a."clusterId" = b."clusterId" AND a.dp = 0 AND b.dp = 1),
          m AS (SELECT p.threshold,
                  CAST(count(*) AS BIGINT) AS n_pred,
@@ -375,10 +322,7 @@ object ClusterQueries extends QueryFamily {
                FROM pred p
                LEFT JOIN truth t ON p.rec0 = t.rec0 AND p.rec1 = t.rec1
                GROUP BY 1)
-         SELECT threshold, n_pred, n_true, tp,
-                tp / n_pred AS precision, tp / n_true AS recall,
-                2 * (tp / n_pred) * (tp / n_true)
-                  / ((tp / n_pred) + (tp / n_true)) AS f1
+         SELECT threshold, n_pred, n_true, tp, $precisionRecallF1Sql
          FROM m"""),
     // B-cubed cluster-level evaluation of the golden febrl4 clustering
     // vs truth: full 2x2000-record universe (absent records = singleton
@@ -388,22 +332,7 @@ object ClusterQueries extends QueryFamily {
       graft.cluster.Evaluation.bcubed(febrl4Assignment(s), "pred", "truth"),
       // B-cubed replay: same universe, same singleton labels, same
       // fixed-point integer cell terms (// == DIV on positive operands)
-      s"""WITH uni AS (SELECT i AS id FROM range(0, 2000) t(i)
-                      UNION ALL SELECT i + 10000 FROM range(0, 2000) t(i)),
-         g AS (SELECT dp * 10000 + entityId AS id, clusterId AS pred
-               FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
-         tp AS (SELECT CAST(row_a AS BIGINT) AS id,
-                       CAST(row_a AS BIGINT) AS t
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)
-                UNION ALL
-                SELECT CAST(row_b AS BIGINT) + 10000, CAST(row_a AS BIGINT)
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)),
-         a AS (SELECT coalesce(g.pred, -uni.id - 1) AS c,
-                      coalesce(tp.t, -uni.id - 1) AS e
-               FROM uni LEFT JOIN g ON uni.id = g.id
-                        LEFT JOIN tp ON uni.id = tp.id),
+      s"""WITH $febrl4AssignmentSql,
          nce AS (SELECT c, e, CAST(count(*) AS BIGINT) AS n_ce
                  FROM a GROUP BY c, e),
          nc AS (SELECT c, CAST(count(*) AS BIGINT) AS n_c FROM a GROUP BY c),
@@ -432,22 +361,7 @@ object ClusterQueries extends QueryFamily {
         "truth"),
       // same assignment CTEs as q_bcubed; comb-2 sums + inclusion-
       // exclusion, one double at the end
-      s"""WITH uni AS (SELECT i AS id FROM range(0, 2000) t(i)
-                      UNION ALL SELECT i + 10000 FROM range(0, 2000) t(i)),
-         g AS (SELECT dp * 10000 + entityId AS id, clusterId AS pred
-               FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
-         tp AS (SELECT CAST(row_a AS BIGINT) AS id,
-                       CAST(row_a AS BIGINT) AS t
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)
-                UNION ALL
-                SELECT CAST(row_b AS BIGINT) + 10000, CAST(row_a AS BIGINT)
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)),
-         a AS (SELECT coalesce(g.pred, -uni.id - 1) AS c,
-                      coalesce(tp.t, -uni.id - 1) AS e
-               FROM uni LEFT JOIN g ON uni.id = g.id
-                        LEFT JOIN tp ON uni.id = tp.id),
+      s"""WITH $febrl4AssignmentSql,
          ss AS (SELECT CAST(sum((n_ce * (n_ce - 1)) // 2) AS BIGINT)
                          AS agree_same,
                        CAST(sum(n_ce) AS BIGINT) AS n FROM
@@ -475,20 +389,15 @@ object ClusterQueries extends QueryFamily {
     // clusterings: splits / merges / stable clusters after a threshold
     // change — the monitoring readout an incremental-linkage consumer
     // watches after every delta batch
-    Query("q_cluster_churn", (s, _) => {
-      def fix(f: String) = s.read.parquet(s"$FixturesDir/$f")
-        .select((col("dp").cast("long") * 10000 + col("entityId")).as("id"),
-          col("clusterId"))
+    Query("q_cluster_churn", (s, _) =>
       graft.cluster.Evaluation.clusterChurn(
-        fix("febrl4_golden_clusters_t075.parquet"),
-        fix("febrl4_golden_clusters.parquet"), "id", "clusterId")
-    },
+        febrl4Golden(s, 0.75), febrl4Golden(s), "id", "clusterId"),
       // full-outer id join of the two golden fixtures, identical singleton
       // labels, cell/size aggs and the same stable/split/merge predicates
       s"""WITH o AS (SELECT dp * 10000 + entityId AS id, clusterId AS c
-                    FROM '$FixturesDir/febrl4_golden_clusters_t075.parquet'),
+                    FROM ${febrl4GoldenSql(0.75)}),
          nn AS (SELECT dp * 10000 + entityId AS id, clusterId AS c
-                FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
+                FROM ${febrl4GoldenSql()}),
          u AS (SELECT coalesce(o.c, -coalesce(o.id, nn.id) - 1) AS c_old,
                       coalesce(nn.c, -coalesce(o.id, nn.id) - 1) AS c_new
                FROM o FULL OUTER JOIN nn ON o.id = nn.id),
@@ -518,21 +427,16 @@ object ClusterQueries extends QueryFamily {
          FROM nr, oa, na"""),
     // persistent cluster ids across the t075 -> t08 runs: a new cluster
     // adopts an old id only as its RECIPROCAL best-overlap partner
-    Query("q_persistent_ids", (s, _) => {
-      def fix(f: String) = s.read.parquet(s"$FixturesDir/$f")
-        .select((col("dp").cast("long") * 10000 + col("entityId")).as("id"),
-          col("clusterId"))
+    Query("q_persistent_ids", (s, _) =>
       graft.cluster.Evaluation.persistentIds(
-          fix("febrl4_golden_clusters_t075.parquet"),
-          fix("febrl4_golden_clusters.parquet"), "id", "clusterId")
-        .orderBy(col("new_cluster"))
-    },
+          febrl4Golden(s, 0.75), febrl4Golden(s), "id", "clusterId")
+        .orderBy(col("new_cluster")),
       // persistent ids: the same member-overlap table, reciprocal-best via
       // two row_number windows over it (both computed on the FULL table)
       s"""WITH o AS (SELECT dp * 10000 + entityId AS id, clusterId AS old_c
-                    FROM '$FixturesDir/febrl4_golden_clusters_t075.parquet'),
+                    FROM ${febrl4GoldenSql(0.75)}),
          n AS (SELECT dp * 10000 + entityId AS id, clusterId AS new_c
-               FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
+               FROM ${febrl4GoldenSql()}),
          sizes AS (SELECT new_c, CAST(count(*) AS BIGINT) AS n_members
                    FROM n GROUP BY 1),
          ov AS (SELECT new_c, old_c, CAST(count(*) AS BIGINT) AS overlap
@@ -553,8 +457,7 @@ object ClusterQueries extends QueryFamily {
           febrl4Edges(s, 0.8).toDF())
         .orderBy(col("dp"), col("n_matches")),
       // multiplicity replay: kernel edges at 0.8, endpoint union, two aggs
-      s"""WITH $febrl4DicePairsSql,
-         e AS (SELECT * FROM p WHERE sim >= 0.8),
+      s"""WITH ${febrl4EdgesSql(0.8)},
          ends AS (SELECT dp0 AS dp, rec0 AS rec FROM e
                   UNION ALL SELECT dp1, rec1 FROM e),
          per AS (SELECT dp, rec, CAST(count(*) AS BIGINT) AS n_matches
@@ -564,10 +467,10 @@ object ClusterQueries extends QueryFamily {
     // transitive-closure quality: exact Dice over every IMPLIED member
     // pair of each golden cluster (kernel recomputed from packed words)
     Query("q_cluster_sim_range", (s, _) => {
-      val labels = s.read.parquet(s"$FixturesDir/febrl4_golden_clusters.parquet")
+      val labels = febrl4Golden(s)
         .select(col("dp"), col("entityId").as("rec"),
           col("clusterId").as("label"))
-      val clks = s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
+      val clks = febrl4Clks(s)
         .select(col("dp"), col("entity_id").as("rec"), col("pc"), col("words"))
       graft.cluster.Evaluation.intraClusterSims(labels, clks)
         .orderBy(col("label"))
@@ -575,7 +478,7 @@ object ClusterQueries extends QueryFamily {
       // implied-pair Dice range per golden cluster: members join the CLK
       // fixture, within-label ordered pairing, the same kernel expression
       s"""WITH lab AS (SELECT dp, entityId AS rec, clusterId AS label
-                      FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
+                      FROM ${febrl4GoldenSql()}),
          c AS (SELECT dp, entity_id AS rec, pc, words
                FROM '$FixturesDir/febrl4_clks.parquet'),
          m AS (SELECT lab.label, c.dp, c.rec, c.pc, c.words
@@ -595,36 +498,17 @@ object ClusterQueries extends QueryFamily {
          FROM st JOIN sz USING (label)"""),
     // reliability diagram: observed match rate (vs febrl4 truth) per
     // similarity bin over the 0.5-floored kernel edges
-    Query("q_score_calibration", (s, _) => {
-      val truth = s.read.option("header", "true")
-        .schema("row_a LONG, row_b LONG")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").as("rec0"), col("row_b").as("rec1"))
+    Query("q_score_calibration", (s, _) =>
       graft.cluster.Evaluation.scoreCalibration(
-          febrl4Edges(s, 0.5).toDF(),
-          truth)
-        .orderBy(col("bin"))
-    },
+          febrl4Edges(s, 0.5).toDF(), febrl4Truth(s))
+        .orderBy(col("bin")),
       // calibration replay: kernel at 0.5, truth CSV left join, same
       // floor-binning and rounded rates
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         e AS (SELECT * FROM p WHERE sim >= 0.5),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                             header = true)),
-         j AS (SELECT e.sim, COALESCE(t.is_true, 0) AS is_true
-               FROM e LEFT JOIN t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1),
+      s"""WITH ${febrl4LabeledEdgesSql(0.5)},
          b AS (SELECT CAST(floor(sim * 20) AS BIGINT) AS bin,
                       CAST(count(*) AS BIGINT) AS n_pairs,
                       CAST(sum(is_true) AS BIGINT) AS n_true
-               FROM j GROUP BY 1)
+               FROM l GROUP BY 1)
          SELECT bin, n_pairs, n_true,
                 round(CAST(n_true AS DOUBLE) / n_pairs, 6) AS match_rate,
                 round(CAST(bin AS DOUBLE) / 20, 4) AS bin_lo
@@ -640,20 +524,7 @@ object ClusterQueries extends QueryFamily {
       // sufficient statistics off the distinct-score table — concordant =
       // positives x negatives strictly below, ties at half credit, exact
       // in HUGEINT == Spark decimal(38,0)
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         e AS (SELECT * FROM p WHERE sim >= 0.5),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                             header = true)),
-         l AS (SELECT e.sim, COALESCE(t.is_true, 0) AS is_true
-               FROM e LEFT JOIN t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1),
+      s"""WITH ${febrl4LabeledEdgesSql(0.5)},
          g AS (SELECT sim, CAST(sum(is_true) AS BIGINT) AS n_pos_v,
                       CAST(sum(1 - is_true) AS BIGINT) AS n_neg_v
                FROM l GROUP BY 1),
@@ -684,20 +555,7 @@ object ClusterQueries extends QueryFamily {
         febrl4Truth(s)),
       // same distinct-score table, inclusive CDFs, exact cross-multiplied
       // gap, argmax tie-broken to the smallest score
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         e AS (SELECT * FROM p WHERE sim >= 0.5),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                             header = true)),
-         l AS (SELECT e.sim, COALESCE(t.is_true, 0) AS is_true
-               FROM e LEFT JOIN t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1),
+      s"""WITH ${febrl4LabeledEdgesSql(0.5)},
          g AS (SELECT sim, CAST(sum(is_true) AS BIGINT) AS n_pos_v,
                       CAST(sum(1 - is_true) AS BIGINT) AS n_neg_v
                FROM l GROUP BY 1),
@@ -730,20 +588,7 @@ object ClusterQueries extends QueryFamily {
         .orderBy(col("bucket")),
       // full ranked replay: row_number over (sim desc, rec0, rec1), the
       // exact equal-depth bucket rule ((rk-1)*B DIV n), running totals
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         e AS (SELECT * FROM p WHERE sim >= 0.5),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                             header = true)),
-         l AS (SELECT e.rec0, e.rec1, e.sim, COALESCE(t.is_true, 0) AS is_true
-               FROM e LEFT JOIN t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1),
+      s"""WITH ${febrl4LabeledEdgesSql(0.5)},
          n AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(is_true) AS BIGINT) AS n_pos FROM l),
          r AS (SELECT is_true, row_number() OVER (
@@ -774,20 +619,7 @@ object ClusterQueries extends QueryFamily {
         febrl4Truth(s)),
       // ranked replay again; per-positive precision tp/rk rounded to e9
       // fixed point then summed — the order-free AP contract
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim,
-                  a.entity_id AS rec0, b.entity_id AS rec1
-           FROM c a JOIN c b ON a.dp < b.dp),
-         e AS (SELECT * FROM p WHERE sim >= 0.5),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS is_true
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                             header = true)),
-         l AS (SELECT e.rec0, e.rec1, e.sim, COALESCE(t.is_true, 0) AS is_true
-               FROM e LEFT JOIN t ON e.rec0 = t.rec0 AND e.rec1 = t.rec1),
+      s"""WITH ${febrl4LabeledEdgesSql(0.5)},
          r AS (SELECT is_true, row_number() OVER (
                  ORDER BY sim DESC, rec0, rec1) AS rk FROM l),
          ppos AS (SELECT rk, CAST(row_number() OVER (ORDER BY rk)
@@ -854,47 +686,16 @@ object ClusterQueries extends QueryFamily {
     // type as an operator-facing sweep); the oracle re-derives every
     // candidate score from the committed CLK fixture with DuckDB's own
     // bit_count kernel, so the whole curve is independently replayed
-    Query("q_threshold_sweep", (s, _) => {
-      val truth = s.read.option("header", "true")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").as("rec0"), col("row_b").as("rec1"))
-      val edges = febrl4Edges(s, 0.5)
-        .toDF().where(col("dp0") === 0 && col("dp1") === 1)
-      Pipeline.thresholdSweep(edges, truth,
-          Seq(0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9, 0.95))
-        .orderBy(col("threshold"))
-    },
+    Query("q_threshold_sweep", (s, _) =>
+      febrl4Sweep(s, SweepGrid)
+        .orderBy(col("threshold")),
       // full threshold curve replayed from the committed CLK fixture:
       // DuckDB recomputes every cross-provider Dice score with its own
       // bit_count (the er_febrl4_edges kernel replay), fans each pair into
       // the grid rows it clears, and joins the truth CSV — identical
       // BIGINT/DOUBLE arithmetic to the Spark side
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT a.entity_id AS rec0, b.entity_id AS rec1,
-                  2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim
-           FROM c a JOIN c b ON a.dp = 0 AND b.dp = 1),
-         truth AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                          CAST(row_b AS BIGINT) AS rec1
-                   FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                     header = true)),
-         g AS (SELECT CAST(unnest([0.5, 0.55, 0.6, 0.65, 0.7,
-                  0.75, 0.8, 0.85, 0.9, 0.95]) AS DOUBLE) AS threshold),
-         m AS (SELECT g.threshold, CAST(count(*) AS BIGINT) AS n_pred,
-                      CAST(sum(CASE WHEN t.rec0 IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tp
-               FROM p
-               JOIN g ON p.sim >= g.threshold
-               LEFT JOIN truth t ON p.rec0 = t.rec0 AND p.rec1 = t.rec1
-               GROUP BY 1),
-         ta AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth)
-         SELECT threshold, n_pred, n_true, tp,
-                tp / n_pred AS precision, tp / n_true AS recall,
-                2 * (tp / n_pred) * (tp / n_true)
-                  / ((tp / n_pred) + (tp / n_true)) AS f1
-         FROM m, ta"""),
+      s"""WITH ${febrl4SweepSql(SweepGrid)}
+         SELECT threshold, n_pred, n_true, tp, precision, recall, f1 FROM f"""),
     // similarity-score histogram for threshold tuning — the reference's
     // similarity_scores run type reduced to its diagnostic use; bins are
     // replayed from the same bit-for-bit DuckDB Dice kernel as
@@ -909,12 +710,7 @@ object ClusterQueries extends QueryFamily {
       // similarity histogram from the same bit-for-bit kernel replay as
       // er_febrl4_edges; floor needs the BIGINT cast (DuckDB floor keeps
       // DOUBLE, Spark floor is already LONG)
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         p AS (
-           SELECT 2.0 * list_sum(list_transform(range(1, 17),
-                    i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc) AS sim
-           FROM c a JOIN c b ON a.dp < b.dp)
+      s"""WITH $febrl4DicePairsSql
          SELECT CAST(floor(sim * 20) AS BIGINT) AS bin,
                 count(*) AS n_pairs, min(sim) AS min_sim, max(sim) AS max_sim
          FROM p WHERE sim >= 0.5
@@ -929,22 +725,7 @@ object ClusterQueries extends QueryFamily {
       // num = 2(C*Sij - Sa*Sb), den = C*(Sa+Sb) - 2*Sa*Sb in HUGEINT
       // (arrow decimal128(38,0) == Spark's decimal(38,0)) and ONE floored
       // scaled divide
-      s"""WITH uni AS (SELECT i AS id FROM range(0, 2000) t(i)
-                      UNION ALL SELECT i + 10000 FROM range(0, 2000) t(i)),
-         g AS (SELECT dp * 10000 + entityId AS id, clusterId AS pred
-               FROM '$FixturesDir/febrl4_golden_clusters.parquet'),
-         tp AS (SELECT CAST(row_a AS BIGINT) AS id,
-                       CAST(row_a AS BIGINT) AS t
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)
-                UNION ALL
-                SELECT CAST(row_b AS BIGINT) + 10000, CAST(row_a AS BIGINT)
-                FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                  header = true)),
-         a AS (SELECT coalesce(g.pred, -uni.id - 1) AS c,
-                      coalesce(tp.t, -uni.id - 1) AS e
-               FROM uni LEFT JOIN g ON uni.id = g.id
-                        LEFT JOIN tp ON uni.id = tp.id),
+      s"""WITH $febrl4AssignmentSql,
          ss AS (SELECT CAST(sum((n_ce * (n_ce - 1)) // 2) AS BIGINT)
                          AS s_ij,
                        CAST(sum(n_ce) AS BIGINT) AS n FROM

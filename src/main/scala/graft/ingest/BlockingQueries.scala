@@ -56,8 +56,7 @@ object BlockingQueries extends QueryFamily {
     // banding, pairing and the kernel from the committed fixture.
     Query("q_hamming_lsh", (s, _) =>
       graft.ingest.Blocking.hammingLshPairs(
-          s.read.parquet(s"$FixturesDir/febrl4_clks.parquet"),
-          threshold = 0.8)
+          febrl4Clks(s), threshold = 0.8)
         .orderBy(col("rec0"), col("rec1")),
       // Hamming bit-sampling LSH replay: Weyl-sequence positions, per-band
       // bit keys, (band,key) pairing + exact Dice confirm — all from the

@@ -1,9 +1,11 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Query, QueryFamily}
 import graft.QueryInputs._
+import graft.link.Pipeline
 
 /** CLK encoding, upload formats, hardening (BLIP, XOR folding) and the
   * privacy audits of the encodings: what a provider uploads and what an
@@ -11,53 +13,244 @@ import graft.QueryInputs._
   *
   * Inside the record-linkage boundary. */
 object ClkQueries extends QueryFamily {
+  private val shinglesUdf = udf((t: String) =>
+    ClkEncoder.shingles(if (t == null) "" else t).distinct)
+  private val positionsUdf = udf((t: String) =>
+    ClkEncoder.positionsDistinct(if (t == null) "" else t))
+  private val shinglePositionsUdf = udf((sh: String) =>
+    ClkEncoder.shinglePositions(sh))
+  private val flipsUdf = udf((id: Long) => ClkEncoder.blipFlips(id))
+  /** The BLIP flip mask of `id` as 16 bigint words (bit p in word p / 64). */
+  private val flipWordsUdf = udf((id: Long) => {
+    val w = new Array[Long](16)
+    ClkEncoder.blipFlips(id).foreach(p => w(p >>> 6) |= 1L << (p & 63))
+    w
+  })
+
+  /** (doc, pos): the distinct CLK bit positions of each document. */
+  private def positions(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id").as("doc"),
+      explode(positionsUdf(col("text"))).as("pos"))
+
+  /** (doc, pos): each document's BLIP flip mask. */
+  private def flips(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id").as("doc"),
+      explode(flipsUdf(col("doc_id").cast("long"))).as("pos"))
+
+  /** (doc, sh): the distinct shingles of each document. */
+  private def shingleDocs(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id").as("doc"),
+      explode(shinglesUdf(col("text"))).as("sh"))
+
+  /** A febrl4 record's BLIP mask key: the dp-disambiguated id
+    * dp * 1000000 + entity_id, so the two providers draw independent
+    * masks. */
+  private val febrl4FlipKey = col("dp").cast("long") * 1000000L + col("entity_id")
+
+  /** The popcount of an array of bigint words, as a long. */
+  private def popcountOf(words: Column): Column =
+    aggregate(words, lit(0L), (acc, w) => acc + bit_count(w).cast("long"))
+
+  /** Dice of two word arrays with popcounts pc0 and pc1, in the kernel's
+    * double expression order: 2.0 * popcount(w0 & w1) / (pc0 + pc1). */
+  private def dice(w0: Column, w1: Column, pc0: Column, pc1: Column): Column =
+    lit(2.0) * aggregate(
+      zip_with(w0, w1, (x, y) => bit_count(x.bitwiseAND(y)).cast("long")),
+      lit(0L), (acc, x) => acc + x) / (pc0 + pc1)
+
+  /** The fixture CLKs plus their 512-bit XOR folds `fw` (fw[i] = w[i] xor
+    * w[i+8]) and the folds' popcounts `fpc`. */
+  private def foldedClks(s: SparkSession): DataFrame =
+    febrl4Clks(s)
+      .withColumn("fw", zip_with(slice(col("words"), 1, 8),
+        slice(col("words"), 9, 8), (x, y) => x.bitwiseXOR(y)))
+      .withColumn("fpc", popcountOf(col("fw")))
+
+  /** The oracle side of [[foldedClks]]: CTE `h`. */
+  private val foldedClksSql =
+    s"""h AS (SELECT *, list_sum(list_transform(fw, w -> bit_count(w))) AS fpc
+               FROM (SELECT dp, entity_id, pc, words,
+                            list_transform(range(1, 9),
+                              i -> xor(words[i], words[i + 8])) AS fw
+                     FROM '$FixturesDir/febrl4_clks.parquet'))"""
+
+  private val EvalThresholds = Seq(0.7, 0.75, 0.8)
+  private val FoldVariants = Seq(("raw", "words", "pc"), ("fold", "fw", "fpc"))
+  private val BlipVariants = Seq(("blip", "hw", "hpc"))
+
+  /** One (variant, threshold) cell of [[exhaustiveEval]] per variant and
+    * threshold, with the suffix of its count columns. */
+  private def evalCells(variants: Seq[(String, String, String)]) =
+    for ((v, _, _) <- variants; th <- EvalThresholds)
+      yield (v, th, s"${v}_${(th * 100).round}")
+
+  /** The exhaustive febrl4 evaluation harness of the CLK hardening
+    * variants: every dp 0 x dp 1 pair of `clks` scored by Dice over each
+    * variant's (name, words column, popcount column), then edge-level
+    * precision/recall/F1 against the truth at each of [[EvalThresholds]],
+    * one row per (variant, threshold). The deliberate 1000x1000 crossJoin
+    * is the evaluation (the er_febrl4_edges oracle's own shape); the
+    * production path stays the blocked pipeline. */
+  private def exhaustiveEval(s: SparkSession, clks: DataFrame,
+      variants: Seq[(String, String, String)]): DataFrame = {
+    def side(i: Int) = clks.where(col("dp") === i).select(
+      col("entity_id").as(s"rec$i") +: variants.flatMap { case (_, w, pc) =>
+        Seq(col(w).as(s"$w$i"), col(pc).as(s"$pc$i")) }: _*)
+    val scored = side(0).crossJoin(side(1))
+      .select(col("rec0") +: col("rec1") +: variants.map { case (v, w, pc) =>
+        dice(col(s"${w}0"), col(s"${w}1"), col(s"${pc}0"), col(s"${pc}1"))
+          .as(s"s$v") }: _*)
+      .join(febrl4Truth(s).withColumn("ist", lit(1L)), Seq("rec0", "rec1"), "left")
+      .withColumn("ist", coalesce(col("ist"), lit(0L)))
+    val cells = evalCells(variants)
+    val sums = scored.agg(sum(col("ist")).as("nt"), cells.flatMap { case (v, th, k) =>
+      val hit = col(s"s$v") >= th
+      Seq(sum(when(hit, 1L).otherwise(0L)).as(s"np_$k"),
+        sum(when(hit, col("ist")).otherwise(0L)).as(s"tp_$k"))
+    }: _*)
+    val rows = sums.select(explode(array(cells.map { case (v, th, k) =>
+      struct(lit(v).as("variant"), lit(th).as("threshold"),
+        col(s"np_$k").as("n_pred"), col(s"tp_$k").as("tp"),
+        col("nt").as("n_true"))
+    }: _*)).as("r")).select("r.*")
+    Pipeline.precisionRecallF1(rows).orderBy(col("variant"), col("threshold"))
+  }
+
+  /** The oracle side of [[exhaustiveEval]]: `clkCtes` ends in CTE `h`
+    * holding the variants' columns; the cross join, the conditional sums
+    * and the one UNION ALL row per cell are generated from the same
+    * cells. */
+  private def exhaustiveEvalSql(clkCtes: String,
+      variants: Seq[(String, String, String)]): String = {
+    val cells = evalCells(variants)
+    val sims = variants.map { case (v, w, pc) =>
+      s"""2.0 * list_sum(list_transform(range(1, len(a.$w) + 1),
+                   i -> bit_count(a.$w[i] & b.$w[i])))
+                   / (a.$pc + b.$pc) AS s$v"""
+    }
+    val sums = cells.map { case (v, th, k) =>
+      s"""CAST(sum(CASE WHEN s$v >= $th THEN 1 ELSE 0 END) AS BIGINT) AS np_$k,
+            CAST(sum(CASE WHEN s$v >= $th THEN ist ELSE 0 END) AS BIGINT) AS tp_$k"""
+    }
+    val rows = cells.map { case (v, th, k) =>
+      s"""SELECT '$v' AS variant, CAST($th AS DOUBLE) AS threshold,
+                  np_$k AS n_pred, tp_$k AS tp, nt AS n_true FROM g"""
+    }
+    s"""WITH $clkCtes,
+         $febrl4TruthSql,
+         p AS (SELECT a.entity_id AS rec0, b.entity_id AS rec1,
+                 ${sims.mkString(",\n                 ")}
+               FROM h a JOIN h b ON a.dp = 0 AND b.dp = 1),
+         q AS (SELECT p.*, COALESCE(t.is_true, 0) AS ist
+               FROM p LEFT JOIN truth t ON t.rec0 = p.rec0 AND t.rec1 = p.rec1),
+         g AS (SELECT
+            ${sums.mkString(",\n            ")},
+            CAST(sum(ist) AS BIGINT) AS nt
+            FROM q),
+         r AS (
+           ${rows.mkString("\n           UNION ALL ")})
+         SELECT variant, threshold, n_pred, tp, n_true, $precisionRecallF1Sql
+         FROM r"""
+  }
+
+  /** The rank-alignment attack (the simplified variant of
+    * Christen/Ranbaduge/Schnell's Bloom-filter attacks): align the i-th
+    * most frequent shingle with the i-th most frequent key `k` of `bits`
+    * (one row per record and set bit) and test whether that bit is one
+    * of the shingle's hash positions, mapped by `toBit` (identity for raw
+    * CLKs). Top-k frames are TakeOrderedAndProject (distributed); the
+    * rank window runs on 50 rows, never the corpus. */
+  private def rankAlignment(s: SparkSession, dir: String, bits: DataFrame,
+      toBit: Column => Column): DataFrame = {
+    val byRank = Window.orderBy(col("n").desc, col("k"))
+    def top50(keys: DataFrame) = keys
+      .groupBy("k").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("k")).limit(50)
+      .select(row_number().over(byRank).as("rank"), col("k"), col("n"))
+    val st = top50(shingleDocs(s, dir).select(col("sh").as("k")))
+      .select(col("rank"), col("k").as("shingle"), col("n").as("df"))
+    val pt = top50(bits)
+      .select(col("rank"), col("k").as("pos"), col("n").as("n_set"))
+    val mapping = st.select(col("shingle").as("msh")).distinct()
+      .select(col("msh"), explode(shinglePositionsUdf(col("msh"))).as("p"))
+      .select(col("msh"), toBit(col("p")).as("mpos")).distinct()
+    st.join(pt, "rank")
+      .join(mapping,
+        col("msh") === col("shingle") && col("mpos") === col("pos"), "left")
+      .select(col("rank"), col("shingle"), col("df"), col("pos"),
+        col("n_set"), col("mpos").isNotNull.as("hit"))
+      .orderBy(col("rank"))
+  }
+
+  /** The oracle side of [[rankAlignment]]: `bitCtes` ends in CTE `pf`
+    * (pos, n_set) and `mapping` selects (sh, pos); both rankings are
+    * (count DESC, key ASC) top-50 off the dumps. */
+  private def rankAlignmentSql(bitCtes: String, mapping: String): String =
+    s"""WITH sf AS (SELECT sh, CAST(count(*) AS BIGINT) AS df
+                      FROM '$OracleAuxDir/shingle_doc/*.parquet' GROUP BY sh),
+         st AS (SELECT CAST(row_number() OVER (ORDER BY df DESC, sh) AS INT)
+                         AS rank,
+                       sh AS shingle, df
+                FROM sf ORDER BY df DESC, sh LIMIT 50),
+         $bitCtes,
+         pt AS (SELECT CAST(row_number() OVER (ORDER BY n_set DESC, pos)
+                         AS INT) AS rank,
+                       pos, n_set
+                FROM pf ORDER BY n_set DESC, pos LIMIT 50),
+         mp AS ($mapping)
+         SELECT st.rank, st.shingle, st.df, pt.pos, pt.n_set,
+                (mp.pos IS NOT NULL) AS hit
+         FROM st JOIN pt USING (rank)
+         LEFT JOIN mp ON mp.sh = st.shingle AND mp.pos = pt.pos"""
+
+  /** Per document (doc, clk): the CLK as lowercase hex in `hexCol`, and
+    * its popcount. */
+  private def clkHex(clks: DataFrame, hexCol: String): DataFrame =
+    clks.select(col("doc"), lower(hex(col("clk"))).as(hexCol),
+        graft.expr.popcount(col("clk")).as("popcount"))
+      .orderBy(col("doc"))
+
+  /** The oracle side of [[clkHex]], rebuilt from CTE `bits` holding one
+    * (doc, `bit`) row per set bit: byte b = Σ 1 << (bit % 8) over the
+    * bits in byte b (a left join against the full `bytes`-slot grid keeps
+    * zero bytes), hex via lpad, popcount = the count of bits. */
+  private def clkHexSql(bits: String, bit: String, bytes: Int,
+      hexCol: String): String =
+    s"""g AS (SELECT doc_id AS doc, unnest(range(0, $bytes)) AS b FROM documents),
+         bv AS (SELECT g.doc, g.b,
+                       CAST(COALESCE(sum(1 << ($bits.$bit % 8)), 0) AS INT) AS v
+                FROM g LEFT JOIN $bits ON $bits.doc = g.doc AND $bits.$bit // 8 = g.b
+                GROUP BY g.doc, g.b),
+         h AS (SELECT doc,
+                      string_agg(lpad(lower(hex(v)), 2, '0'), '' ORDER BY b)
+                        AS $hexCol
+               FROM bv GROUP BY doc),
+         pc AS (SELECT doc, count(*) AS n FROM $bits GROUP BY doc)
+         SELECT h.doc, h.$hexCol, CAST(COALESCE(pc.n, 0) AS INT) AS popcount
+         FROM h LEFT JOIN pc ON h.doc = pc.doc"""
+
   override def oracleAux: Map[String, (SparkSession, String) => DataFrame] = Map(
     // distinct CLK bit positions per document (double-hashing scheme,
     // ClkEncoderSpec-gated); the q_clk_encode oracle rebuilds bytes, hex
     // and popcount from these, and the q_clk_blip oracle XORs in the
     // flip mask below — the folds are value-checked, the hashes spec'd
-    "clk_positions" -> ((s, dir) => {
-      val posUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.positionsDistinct(if (t == null) "" else t))
-      docs(s, dir).select(col("doc_id").as("doc"),
-        explode(posUdf(col("text"))).as("pos"))
-    }),
+    "clk_positions" -> positions,
     // BLIP hardening flip mask per document (keyed-hash residue class,
     // ClkEncoderSpec-gated determinism/density/involution)
-    "blip_flips" -> ((s, dir) => {
-      val flipUdf = udf((id: Long) => graft.ingest.ClkEncoder.blipFlips(id))
-      docs(s, dir).select(col("doc_id").as("doc"),
-        explode(flipUdf(col("doc_id").cast("long"))).as("pos"))
-    }),
-    // BLIP flip masks keyed by (dp, entity_id) of the febrl4 fixture —
-    // q_blip_eval XORs them into the fixture CLKs; record key = the
-    // dp-disambiguated id (dp*1000000 + entity_id) so the two providers
-    // draw independent masks
-    "blip_flips_febrl4" -> ((s, _) => {
-      val flipUdf = udf((id: Long) => graft.ingest.ClkEncoder.blipFlips(id))
-      s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
-        .select(col("dp"), col("entity_id"),
-          explode(flipUdf(col("dp").cast("long") * 1000000L
-            + col("entity_id"))).as("pos"))
-    }),
+    "blip_flips" -> flips,
+    // BLIP flip masks of the febrl4 fixture records, keyed by
+    // febrl4FlipKey — q_blip_eval XORs them into the fixture CLKs
+    "blip_flips_febrl4" -> ((s, _) =>
+      febrl4Clks(s).select(col("dp"), col("entity_id"),
+        explode(flipsUdf(febrl4FlipKey)).as("pos"))),
     // attacker-side state for q_clk_attack: which shingles appear in
     // which documents (df replayed by the oracle) and which k positions
     // each shingle sets (the hash state the attack tries to recover;
     // the hashing itself is ClkEncoderSpec-gated)
-    "shingle_doc" -> ((s, dir) => {
-      val shUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.shingles(if (t == null) "" else t).distinct)
-      docs(s, dir).select(col("doc_id").as("doc"),
-        explode(shUdf(col("text"))).as("sh"))
-    }),
-    "shingle_pos" -> ((s, dir) => {
-      val shUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.shingles(if (t == null) "" else t).distinct)
-      val posUdf = udf((sh: String) =>
-        graft.ingest.ClkEncoder.shinglePositions(sh))
-      docs(s, dir).select(explode(shUdf(col("text"))).as("sh")).distinct()
-        .select(col("sh"), explode(posUdf(col("sh"))).as("pos"))
-    }),
+    "shingle_doc" -> shingleDocs,
+    "shingle_pos" -> ((s, dir) =>
+      shingleDocs(s, dir).select(col("sh")).distinct()
+        .select(col("sh"), explode(shinglePositionsUdf(col("sh"))).as("pos"))),
   )
 
   val queries: Seq[Query] = Seq(
@@ -66,40 +259,21 @@ object ClkQueries extends QueryFamily {
     // w[i+8]) next to the full-width sim — delta is what hardening costs
     // each matched pair; same codegen zip_with/bit_count kernel shape
     Query("q_fold_dice", (s, _) => {
-      val folded = s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
-        .select(col("dp"), col("entity_id"),
-          zip_with(slice(col("words"), 1, 8), slice(col("words"), 9, 8),
-            (x, y) => x.bitwiseXOR(y)).as("fw"))
-        .withColumn("fpc", aggregate(col("fw"), lit(0L),
-          (acc, w) => acc + bit_count(w).cast("long")))
-      val edges = febrl4Edges(s, 0.8)
-        .toDF()
-      val andPc = aggregate(
-        zip_with(col("fw0"), col("fw1"),
-          (x, y) => bit_count(x.bitwiseAND(y)).cast("long")),
-        lit(0L), (acc, x) => acc + x)
-      edges
+      val folded = foldedClks(s)
+      febrl4Edges(s, 0.8).toDF()
         .join(folded.select(col("dp").as("dp0"), col("entity_id").as("rec0"),
           col("fw").as("fw0"), col("fpc").as("fpc0")), Seq("dp0", "rec0"))
         .join(folded.select(col("dp").as("dp1"), col("entity_id").as("rec1"),
           col("fw").as("fw1"), col("fpc").as("fpc1")), Seq("dp1", "rec1"))
         .select(col("dp0"), col("rec0"), col("dp1"), col("rec1"), col("sim"),
-          (lit(2.0) * andPc / (col("fpc0") + col("fpc1"))).as("sim_fold"))
+          dice(col("fw0"), col("fw1"), col("fpc0"), col("fpc1")).as("sim_fold"))
         .withColumn("delta", col("sim") - col("sim_fold"))
         .orderBy(col("rec0"), col("rec1"))
     },
       // fold tradeoff replay: folded words via xor(w[i], w[i+8]), folded
       // popcounts, then the SAME double expression order as the kernel
       // (2.0 * Σ / (pc+pc)) for both widths — deltas are bit-equal doubles
-      s"""WITH c AS (SELECT dp, entity_id, pc, words
-                    FROM '$FixturesDir/febrl4_clks.parquet'),
-         g AS (SELECT dp, entity_id, pc, words,
-                      list_transform(range(1, 9),
-                        i -> xor(words[i], words[i + 8])) AS fw
-               FROM c),
-         h AS (SELECT dp, entity_id, pc, words, fw,
-                      list_sum(list_transform(fw, w -> bit_count(w))) AS fpc
-               FROM g),
+      s"""WITH $foldedClksSql,
          p AS (
            SELECT 2.0 * list_sum(list_transform(range(1, 17),
                     i -> bit_count(a.words[i] & b.words[i]))) / (a.pc + b.pc)
@@ -235,29 +409,14 @@ object ClkQueries extends QueryFamily {
     // popcount from the clk_positions dump (positions→bytes fold
     // value-checked; the double hashing itself is ClkEncoderSpec's)
     Query("q_clk_encode", (s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id").as("doc"),
-          graft.ingest.Ingest.clkUdf(col("text")).as("clk"))
-        .select(col("doc"), lower(hex(col("clk"))).as("clk_hex"),
-          graft.expr.popcount(col("clk")).as("popcount"))
-        .orderBy(col("doc")),
+      clkHex(docs(s, dir).select(col("doc_id").as("doc"),
+        graft.ingest.Ingest.clkUdf(col("text")).as("clk")), "clk_hex"),
       // CLK encoding rebuilt byte-by-byte from the distinct-positions dump:
       // byte b = Σ 1<<(pos&7) over positions in byte b (a left join against
       // the full 128-slot grid keeps zero bytes), hex via lpad, popcount =
       // count of distinct positions — hex string and count must both match
       s"""WITH p AS (SELECT doc, pos FROM '$OracleAuxDir/clk_positions/*.parquet'),
-         g AS (SELECT doc_id AS doc, unnest(range(0, 128)) AS b FROM documents),
-         bv AS (SELECT g.doc, g.b,
-                       CAST(COALESCE(sum(1 << (p.pos % 8)), 0) AS INT) AS v
-                FROM g LEFT JOIN p ON p.doc = g.doc AND p.pos // 8 = g.b
-                GROUP BY g.doc, g.b),
-         h AS (SELECT doc,
-                      string_agg(lpad(lower(hex(v)), 2, '0'), '' ORDER BY b)
-                        AS clk_hex
-               FROM bv GROUP BY doc),
-         pc AS (SELECT doc, count(*) AS n FROM p GROUP BY doc)
-         SELECT h.doc, h.clk_hex, CAST(COALESCE(pc.n, 0) AS INT) AS popcount
-         FROM h LEFT JOIN pc ON h.doc = pc.doc"""),
+         ${clkHexSql("p", "pos", 128, "clk_hex")}"""),
     // BLIP-style CLK hardening (privacy post-processing family the
     // reference's CLKs arrive under): deterministic keyed flip mask
     // XORed into each encoding; oracle = symmetric difference of the
@@ -267,12 +426,8 @@ object ClkQueries extends QueryFamily {
         val e = graft.ingest.ClkEncoder
         e.applyFlips(e.encode(if (t == null) "" else t), e.blipFlips(id))
       })
-      docs(s, dir)
-        .select(col("doc_id").as("doc"),
-          hardenUdf(col("doc_id").cast("long"), col("text")).as("clk"))
-        .select(col("doc"), lower(hex(col("clk"))).as("clk_hex"),
-          graft.expr.popcount(col("clk")).as("popcount"))
-        .orderBy(col("doc"))
+      clkHex(docs(s, dir).select(col("doc_id").as("doc"),
+        hardenUdf(col("doc_id").cast("long"), col("text")).as("clk")), "clk_hex")
     },
       // BLIP hardening = XOR of the encoding with the flip mask: a bit
       // survives iff it is in exactly ONE of the two dumps (symmetric
@@ -282,18 +437,7 @@ object ClkQueries extends QueryFamily {
          x AS (SELECT doc, pos FROM
                  (SELECT doc, pos FROM p UNION ALL SELECT doc, pos FROM f) u
                GROUP BY doc, pos HAVING count(*) = 1),
-         g AS (SELECT doc_id AS doc, unnest(range(0, 128)) AS b FROM documents),
-         bv AS (SELECT g.doc, g.b,
-                       CAST(COALESCE(sum(1 << (x.pos % 8)), 0) AS INT) AS v
-                FROM g LEFT JOIN x ON x.doc = g.doc AND x.pos // 8 = g.b
-                GROUP BY g.doc, g.b),
-         h AS (SELECT doc,
-                      string_agg(lpad(lower(hex(v)), 2, '0'), '' ORDER BY b)
-                        AS clk_hex
-               FROM bv GROUP BY doc),
-         pc AS (SELECT doc, count(*) AS n FROM x GROUP BY doc)
-         SELECT h.doc, h.clk_hex, CAST(COALESCE(pc.n, 0) AS INT) AS popcount
-         FROM h LEFT JOIN pc ON h.doc = pc.doc"""),
+         ${clkHexSql("x", "pos", 128, "clk_hex")}"""),
     // XOR-folding hardening (Schnell & Borgs 2016): CLK folded in half
     // by XORing the upper 512 bits into the lower 512 — each folded bit
     // is the PARITY of two original bits, so the oracle rebuilds it from
@@ -303,11 +447,8 @@ object ClkQueries extends QueryFamily {
         val e = graft.ingest.ClkEncoder
         e.foldXor(e.encode(if (t == null) "" else t))
       })
-      docs(s, dir)
-        .select(col("doc_id").as("doc"), foldUdf(col("text")).as("clk"))
-        .select(col("doc"), lower(hex(col("clk"))).as("fold_hex"),
-          graft.expr.popcount(col("clk")).as("popcount"))
-        .orderBy(col("doc"))
+      clkHex(docs(s, dir).select(col("doc_id").as("doc"),
+        foldUdf(col("text")).as("clk")), "fold_hex")
     },
       // XOR-fold = parity per position class pos%512 (positions are
       // distinct, so multiplicity of {q, q+512} is 0/1/2; folded bit set
@@ -316,33 +457,15 @@ object ClkQueries extends QueryFamily {
                      FROM '$OracleAuxDir/clk_positions/*.parquet'
                      GROUP BY doc, pos % 512),
          f AS (SELECT doc, q FROM p WHERE c % 2 = 1),
-         g AS (SELECT doc_id AS doc, unnest(range(0, 64)) AS b FROM documents),
-         bv AS (SELECT g.doc, g.b,
-                       CAST(COALESCE(sum(1 << (f.q % 8)), 0) AS INT) AS v
-                FROM g LEFT JOIN f ON f.doc = g.doc AND f.q // 8 = g.b
-                GROUP BY g.doc, g.b),
-         h AS (SELECT doc,
-                      string_agg(lpad(lower(hex(v)), 2, '0'), '' ORDER BY b)
-                        AS fold_hex
-               FROM bv GROUP BY doc),
-         pc AS (SELECT doc, count(*) AS n FROM f GROUP BY doc)
-         SELECT h.doc, h.fold_hex, CAST(COALESCE(pc.n, 0) AS INT) AS popcount
-         FROM h LEFT JOIN pc ON h.doc = pc.doc"""),
+         ${clkHexSql("f", "q", 64, "fold_hex")}"""),
     // CLK bit-frequency disclosure audit: per bit position, how many
     // records set it raw vs after the BLIP mask — the non-uniformity an
     // attacker exploits, and the flattening the hardening buys. Plan:
     // two explode+count aggs left-joined onto the full position range
     Query("q_bit_freq", (s, dir) => {
-      val posUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.positionsDistinct(if (t == null) "" else t))
-      val flipUdf = udf((id: Long) => graft.ingest.ClkEncoder.blipFlips(id))
-      val d = docs(s, dir)
-      val raw = d.select(col("doc_id").as("doc"),
-        explode(posUdf(col("text"))).as("pos"))
-      val flips = d.select(col("doc_id").as("doc"),
-        explode(flipUdf(col("doc_id").cast("long"))).as("pos"))
+      val raw = positions(s, dir)
       // hardened bit = XOR = symmetric difference of the two position sets
-      val blip = raw.unionAll(flips).groupBy("doc", "pos")
+      val blip = raw.unionAll(flips(s, dir)).groupBy("doc", "pos")
         .agg(count(lit(1)).as("c")).where(col("c") === 1)
       val nRaw = raw.groupBy("pos").agg(count(lit(1)).as("n_raw"))
       val nBlip = blip.groupBy("pos").agg(count(lit(1)).as("n_blip"))
@@ -367,380 +490,86 @@ object ClkQueries extends QueryFamily {
                 CAST(COALESCE(nb.n, 0) AS BIGINT) AS n_blip
          FROM g LEFT JOIN nr ON nr.pos = g.pos
                 LEFT JOIN nb ON nb.pos = g.pos"""),
-    // frequency-alignment cryptanalysis audit (the simplified rank-
-    // alignment variant of Christen/Ranbaduge/Schnell's Bloom-filter
-    // attacks): align the i-th most frequent bit position with the i-th
-    // most frequent shingle and test whether that position is really one
-    // of the shingle's k hash positions — hit rate = how much structure
-    // the raw (unhardened) CLKs leak. Top-k frames are
-    // TakeOrderedAndProject (distributed); the rank window runs on 50
-    // rows, never the corpus
-    Query("q_clk_attack", (s, dir) => {
-      val shUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.shingles(if (t == null) "" else t).distinct)
-      val posUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.positionsDistinct(if (t == null) "" else t))
-      val mapUdf = udf((sh: String) =>
-        graft.ingest.ClkEncoder.shinglePositions(sh))
-      val d = docs(s, dir)
-      val byRank = org.apache.spark.sql.expressions.Window
-        .orderBy(col("n").desc, col("k"))
-      def top50(df: DataFrame) = df
-        .orderBy(col("n").desc, col("k")).limit(50)
-        .select(row_number().over(byRank).as("rank"), col("k"), col("n"))
-      val st = top50(d.select(col("doc_id").as("doc"),
-          explode(shUdf(col("text"))).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n")))
-        .select(col("rank"), col("k").as("shingle"), col("n").as("df"))
-      val pt = top50(d.select(col("doc_id").as("doc"),
-          explode(posUdf(col("text"))).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n")))
-        .select(col("rank"), col("k").as("pos"), col("n").as("n_set"))
-      val mapping = st.select(col("shingle").as("msh")).distinct()
-        .select(col("msh"), explode(mapUdf(col("msh"))).as("mpos"))
-      st.join(pt, "rank")
-        .join(mapping,
-          col("msh") === col("shingle") && col("mpos") === col("pos"),
-          "left")
-        .select(col("rank"), col("shingle"), col("df"), col("pos"),
-          col("n_set"), col("mpos").isNotNull.as("hit"))
-        .orderBy(col("rank"))
-    },
+    // frequency-alignment cryptanalysis audit: the rank-alignment attack
+    // against raw CLKs — hit rate = how much structure the raw
+    // (unhardened) CLKs leak
+    Query("q_clk_attack", (s, dir) =>
+      rankAlignment(s, dir, positions(s, dir).select(col("pos").as("k")),
+        identity),
       // rank-alignment attack replay: both frequency rankings off the
       // dumps, deterministic (count DESC, key ASC) top-50, hit = the
       // aligned position is among the shingle's dumped hash positions
-      s"""WITH sf AS (SELECT sh, CAST(count(*) AS BIGINT) AS df
-                      FROM '$OracleAuxDir/shingle_doc/*.parquet' GROUP BY sh),
-         st AS (SELECT CAST(row_number() OVER (ORDER BY df DESC, sh) AS INT)
-                         AS rank,
-                       sh AS shingle, df
-                FROM sf ORDER BY df DESC, sh LIMIT 50),
-         pf AS (SELECT pos, CAST(count(*) AS BIGINT) AS n_set
-                FROM '$OracleAuxDir/clk_positions/*.parquet' GROUP BY pos),
-         pt AS (SELECT CAST(row_number() OVER (ORDER BY n_set DESC, pos)
-                         AS INT) AS rank,
-                       pos, n_set
-                FROM pf ORDER BY n_set DESC, pos LIMIT 50),
-         mp AS (SELECT sh, pos FROM '$OracleAuxDir/shingle_pos/*.parquet')
-         SELECT st.rank, st.shingle, st.df, pt.pos, pt.n_set,
-                (mp.pos IS NOT NULL) AS hit
-         FROM st JOIN pt USING (rank)
-         LEFT JOIN mp ON mp.sh = st.shingle AND mp.pos = pt.pos"""),
+      rankAlignmentSql(
+        s"""pf AS (SELECT pos, CAST(count(*) AS BIGINT) AS n_set
+                FROM '$OracleAuxDir/clk_positions/*.parquet' GROUP BY pos)""",
+        s"SELECT sh, pos FROM '$OracleAuxDir/shingle_pos/*.parquet'")),
     // the same rank-alignment attack against XOR-FOLDED CLKs: folded
     // bit = parity of the pos%512 class per record, attacker aligns
     // folded-position frequencies and wins iff the aligned class
     // contains one of the shingle's (mod-512) hash positions — the
     // hit-rate delta vs q_clk_attack is the hardening's measured value
-    Query("q_clk_attack_fold", (s, dir) => {
-      val shUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.shingles(if (t == null) "" else t).distinct)
-      val posUdf = udf((t: String) =>
-        graft.ingest.ClkEncoder.positionsDistinct(if (t == null) "" else t))
-      val mapUdf = udf((sh: String) =>
-        graft.ingest.ClkEncoder.shinglePositions(sh).map(_ % 512).distinct)
-      val d = docs(s, dir)
-      val byRank = org.apache.spark.sql.expressions.Window
-        .orderBy(col("n").desc, col("k"))
-      def top50(df: DataFrame) = df
-        .orderBy(col("n").desc, col("k")).limit(50)
-        .select(row_number().over(byRank).as("rank"), col("k"), col("n"))
-      val st = top50(d.select(col("doc_id").as("doc"),
-          explode(shUdf(col("text"))).as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n")))
-        .select(col("rank"), col("k").as("shingle"), col("n").as("df"))
+    Query("q_clk_attack_fold", (s, dir) =>
       // folded bit set iff the record's pos%512 class has odd multiplicity
-      val foldedBits = d.select(col("doc_id").as("doc"),
-          explode(posUdf(col("text"))).as("p"))
-        .select(col("doc"), (col("p") % 512).as("q"))
-        .groupBy("doc", "q").agg(count(lit(1)).as("c"))
-        .where(col("c") % 2 === 1)
-      val pt = top50(foldedBits.select(col("doc"), col("q").as("k"))
-        .groupBy("k").agg(count(lit(1)).as("n")))
-        .select(col("rank"), col("k").as("pos"), col("n").as("n_set"))
-      val mapping = st.select(col("shingle").as("msh")).distinct()
-        .select(col("msh"), explode(mapUdf(col("msh"))).as("mpos"))
-      st.join(pt, "rank")
-        .join(mapping,
-          col("msh") === col("shingle") && col("mpos") === col("pos"),
-          "left")
-        .select(col("rank"), col("shingle"), col("df"), col("pos"),
-          col("n_set"), col("mpos").isNotNull.as("hit"))
-        .orderBy(col("rank"))
-    },
+      rankAlignment(s, dir,
+        positions(s, dir).select(col("doc"), (col("pos") % 512).as("k"))
+          .groupBy("doc", "k").agg(count(lit(1)).as("c"))
+          .where(col("c") % 2 === 1).select(col("k")),
+        _ % 512),
       // folded-attack replay: per-record odd-parity pos%512 classes, same
       // deterministic rankings, hit vs the shingle's mod-512 positions
-      s"""WITH sf AS (SELECT sh, CAST(count(*) AS BIGINT) AS df
-                      FROM '$OracleAuxDir/shingle_doc/*.parquet' GROUP BY sh),
-         st AS (SELECT CAST(row_number() OVER (ORDER BY df DESC, sh) AS INT)
-                         AS rank,
-                       sh AS shingle, df
-                FROM sf ORDER BY df DESC, sh LIMIT 50),
-         fb AS (SELECT doc, pos % 512 AS q
+      rankAlignmentSql(
+        s"""fb AS (SELECT doc, pos % 512 AS q
                 FROM '$OracleAuxDir/clk_positions/*.parquet'
                 GROUP BY doc, pos % 512 HAVING count(*) % 2 = 1),
          pf AS (SELECT q AS pos, CAST(count(*) AS BIGINT) AS n_set
-                FROM fb GROUP BY q),
-         pt AS (SELECT CAST(row_number() OVER (ORDER BY n_set DESC, pos)
-                         AS INT) AS rank,
-                       pos, n_set
-                FROM pf ORDER BY n_set DESC, pos LIMIT 50),
-         mp AS (SELECT DISTINCT sh, pos % 512 AS pos
-                FROM '$OracleAuxDir/shingle_pos/*.parquet')
-         SELECT st.rank, st.shingle, st.df, pt.pos, pt.n_set,
-                (mp.pos IS NOT NULL) AS hit
-         FROM st JOIN pt USING (rank)
-         LEFT JOIN mp ON mp.sh = st.shingle AND mp.pos = pt.pos"""),
+                FROM fb GROUP BY q)""",
+        s"""SELECT DISTINCT sh, pos % 512 AS pos
+                FROM '$OracleAuxDir/shingle_pos/*.parquet'""")),
     // fold privacy/utility capstone: edge-level precision/recall/F1 vs
     // ground truth for RAW vs FOLDED CLK scoring at t=0.7/0.75/0.8 —
-    // what the hardening costs the BASELINE F1 gate itself. Exhaustive
-    // 1000x1000 eval harness by design (the deliberate crossJoin is the
-    // evaluation, mirroring the er_febrl4_edges oracle's own shape);
-    // the production path stays the blocked pipeline
-    Query("q_fold_eval", (s, _) => {
-      val clks = s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
-        .select(col("dp"), col("entity_id"), col("pc"), col("words"),
-          zip_with(slice(col("words"), 1, 8), slice(col("words"), 9, 8),
-            (x, y) => x.bitwiseXOR(y)).as("fw"))
-        .withColumn("fpc", aggregate(col("fw"), lit(0L),
-          (acc, w) => acc + bit_count(w).cast("long")))
-      val a = clks.where(col("dp") === 0).select(
-        col("entity_id").as("rec0"), col("pc").as("pc0"),
-        col("words").as("w0"), col("fw").as("fw0"), col("fpc").as("fpc0"))
-      val b = clks.where(col("dp") === 1).select(
-        col("entity_id").as("rec1"), col("pc").as("pc1"),
-        col("words").as("w1"), col("fw").as("fw1"), col("fpc").as("fpc1"))
-      def andPc(x: String, y: String) = aggregate(
-        zip_with(col(x), col(y),
-          (u, v) => bit_count(u.bitwiseAND(v)).cast("long")),
-        lit(0L), (acc, v) => acc + v)
-      val truth = s.read.option("header", "true")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").cast("long").as("rec0"),
-          col("row_b").cast("long").as("rec1"), lit(1L).as("ist"))
-      val scored = a.crossJoin(b).select(col("rec0"), col("rec1"),
-          (lit(2.0) * andPc("w0", "w1") / (col("pc0") + col("pc1")))
-            .as("sraw"),
-          (lit(2.0) * andPc("fw0", "fw1") / (col("fpc0") + col("fpc1")))
-            .as("sfold"))
-        .join(truth, Seq("rec0", "rec1"), "left")
-        .withColumn("ist", coalesce(col("ist"), lit(0L)))
-      val combos = for {
-        (variant, c) <- Seq("raw" -> col("sraw"), "fold" -> col("sfold"))
-        th <- Seq(0.7, 0.75, 0.8)
-      } yield (variant, th, c)
-      val aggCols = combos.flatMap { case (v, th, c) =>
-        val k = s"${v}_${(th * 100).toInt}"
-        Seq(sum(when(c >= th, 1L).otherwise(0L)).as(s"np_$k"),
-          sum(when(c >= th, col("ist")).otherwise(0L)).as(s"tp_$k"))
-      } :+ sum(col("ist")).as("nt")
-      val one = scored.agg(aggCols.head, aggCols.tail: _*)
-      val rows = combos.map { case (v, th, _) =>
-        val k = s"${v}_${(th * 100).toInt}"
-        one.select(lit(v).as("variant"), lit(th).as("threshold"),
-          col(s"np_$k").as("n_pred"), col(s"tp_$k").as("tp"),
-          col("nt").as("n_true"))
-      }.reduce(_ unionByName _)
-      rows
-        .withColumn("precision", col("tp") / col("n_pred"))
-        .withColumn("recall", col("tp") / col("n_true"))
-        .withColumn("f1", lit(2) * col("precision") * col("recall")
-          / (col("precision") + col("recall")))
-        .orderBy(col("variant"), col("threshold"))
-    },
-      // fold-eval replay: the same exhaustive cross join + both sims, 12
-      // conditional sums in one agg, 6 UNION ALL rows, identical double
-      // expression order for precision/recall/F1
-      s"""WITH c AS (SELECT dp, entity_id, pc, words,
-                  list_transform(range(1, 9),
-                    i -> xor(words[i], words[i + 8])) AS fw
-                FROM '$FixturesDir/febrl4_clks.parquet'),
-         h AS (SELECT dp, entity_id, pc, words, fw,
-                      list_sum(list_transform(fw, w -> bit_count(w))) AS fpc
-               FROM c),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS ist
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                 header = true)),
-         p AS (SELECT a.entity_id AS rec0, b.entity_id AS rec1,
-                 2.0 * list_sum(list_transform(range(1, 17),
-                   i -> bit_count(a.words[i] & b.words[i])))
-                   / (a.pc + b.pc) AS sraw,
-                 2.0 * list_sum(list_transform(range(1, 9),
-                   i -> bit_count(a.fw[i] & b.fw[i])))
-                   / (a.fpc + b.fpc) AS sfold
-               FROM h a JOIN h b ON a.dp = 0 AND b.dp = 1),
-         q AS (SELECT p.*, COALESCE(t.ist, 0) AS ist
-               FROM p LEFT JOIN t ON t.rec0 = p.rec0 AND t.rec1 = p.rec1),
-         g AS (SELECT
-            CAST(sum(CASE WHEN sraw >= 0.7 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_raw_70,
-            CAST(sum(CASE WHEN sraw >= 0.7 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_raw_70,
-            CAST(sum(CASE WHEN sraw >= 0.75 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_raw_75,
-            CAST(sum(CASE WHEN sraw >= 0.75 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_raw_75,
-            CAST(sum(CASE WHEN sraw >= 0.8 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_raw_80,
-            CAST(sum(CASE WHEN sraw >= 0.8 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_raw_80,
-            CAST(sum(CASE WHEN sfold >= 0.7 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_fold_70,
-            CAST(sum(CASE WHEN sfold >= 0.7 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_fold_70,
-            CAST(sum(CASE WHEN sfold >= 0.75 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_fold_75,
-            CAST(sum(CASE WHEN sfold >= 0.75 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_fold_75,
-            CAST(sum(CASE WHEN sfold >= 0.8 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_fold_80,
-            CAST(sum(CASE WHEN sfold >= 0.8 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_fold_80,
-            CAST(sum(ist) AS BIGINT) AS nt
-            FROM q),
-         r AS (
-           SELECT 'raw' AS variant, CAST(0.7 AS DOUBLE) AS threshold,
-                  np_raw_70 AS n_pred, tp_raw_70 AS tp, nt AS n_true FROM g
-           UNION ALL SELECT 'raw', CAST(0.75 AS DOUBLE),
-                  np_raw_75, tp_raw_75, nt FROM g
-           UNION ALL SELECT 'raw', CAST(0.8 AS DOUBLE),
-                  np_raw_80, tp_raw_80, nt FROM g
-           UNION ALL SELECT 'fold', CAST(0.7 AS DOUBLE),
-                  np_fold_70, tp_fold_70, nt FROM g
-           UNION ALL SELECT 'fold', CAST(0.75 AS DOUBLE),
-                  np_fold_75, tp_fold_75, nt FROM g
-           UNION ALL SELECT 'fold', CAST(0.8 AS DOUBLE),
-                  np_fold_80, tp_fold_80, nt FROM g)
-         SELECT variant, threshold, n_pred, tp, n_true,
-                CAST(tp AS DOUBLE) / n_pred AS precision,
-                CAST(tp AS DOUBLE) / n_true AS recall,
-                2 * (CAST(tp AS DOUBLE) / n_pred)
-                  * (CAST(tp AS DOUBLE) / n_true)
-                  / ((CAST(tp AS DOUBLE) / n_pred)
-                     + (CAST(tp AS DOUBLE) / n_true)) AS f1
-         FROM r"""),
+    // what the hardening costs the BASELINE F1 gate itself
+    Query("q_fold_eval", (s, _) =>
+      exhaustiveEval(s, foldedClks(s), FoldVariants),
+      // fold-eval replay: the same exhaustive cross join + both sims, the
+      // conditional sums and UNION ALL rows generated from the same cells,
+      // identical double expression order for precision/recall/F1
+      exhaustiveEvalSql(foldedClksSql, FoldVariants)),
     // BLIP leg of the hardening trilogy (raw/fold in q_fold_eval): P/R/F1
     // of BLIP-hardened CLK scoring on the same exhaustive harness — the
     // keyed flip mask XORed into the fixture words record-by-record
-    Query("q_blip_eval", (s, _) => {
-      val flipWordsUdf = udf((id: Long) => {
-        val w = new Array[Long](16)
-        graft.ingest.ClkEncoder.blipFlips(id)
-          .foreach(p => w(p >>> 6) = w(p >>> 6) | (1L << (p & 63)))
-        w
-      })
-      val clks = s.read.parquet(s"$FixturesDir/febrl4_clks.parquet")
-        .withColumn("fwd", flipWordsUdf(col("dp").cast("long") * 1000000L
-          + col("entity_id")))
-        .select(col("dp"), col("entity_id"),
-          zip_with(col("words"), col("fwd"),
-            (x, y) => x.bitwiseXOR(y)).as("hw"))
-        .withColumn("hpc", aggregate(col("hw"), lit(0L),
-          (acc, w) => acc + bit_count(w).cast("long")))
-      val a = clks.where(col("dp") === 0).select(
-        col("entity_id").as("rec0"), col("hw").as("h0"), col("hpc").as("p0"))
-      val b = clks.where(col("dp") === 1).select(
-        col("entity_id").as("rec1"), col("hw").as("h1"), col("hpc").as("p1"))
-      val andPc = aggregate(
-        zip_with(col("h0"), col("h1"),
-          (u, v) => bit_count(u.bitwiseAND(v)).cast("long")),
-        lit(0L), (acc, v) => acc + v)
-      val truth = s.read.option("header", "true")
-        .csv(s"$FixturesDir/febrl4_truth.csv")
-        .select(col("row_a").cast("long").as("rec0"),
-          col("row_b").cast("long").as("rec1"), lit(1L).as("ist"))
-      val scored = a.crossJoin(b).select(col("rec0"), col("rec1"),
-          (lit(2.0) * andPc / (col("p0") + col("p1"))).as("sblip"))
-        .join(truth, Seq("rec0", "rec1"), "left")
-        .withColumn("ist", coalesce(col("ist"), lit(0L)))
-      val ths = Seq(0.7, 0.75, 0.8)
-      val aggCols = ths.flatMap { th =>
-        val k = (th * 100).toInt
-        Seq(sum(when(col("sblip") >= th, 1L).otherwise(0L)).as(s"np_$k"),
-          sum(when(col("sblip") >= th, col("ist")).otherwise(0L))
-            .as(s"tp_$k"))
-      } :+ sum(col("ist")).as("nt")
-      val one = scored.agg(aggCols.head, aggCols.tail: _*)
-      ths.map { th =>
-        val k = (th * 100).toInt
-        one.select(lit("blip").as("variant"), lit(th).as("threshold"),
-          col(s"np_$k").as("n_pred"), col(s"tp_$k").as("tp"),
-          col("nt").as("n_true"))
-      }.reduce(_ unionByName _)
-        .withColumn("precision", col("tp") / col("n_pred"))
-        .withColumn("recall", col("tp") / col("n_true"))
-        .withColumn("f1", lit(2) * col("precision") * col("recall")
-          / (col("precision") + col("recall")))
-        .orderBy(col("threshold"))
-    },
+    Query("q_blip_eval", (s, _) =>
+      exhaustiveEval(s, febrl4Clks(s)
+        .withColumn("hw", zip_with(col("words"), flipWordsUdf(febrl4FlipKey),
+          (x, y) => x.bitwiseXOR(y)))
+        .withColumn("hpc", popcountOf(col("hw"))), BlipVariants),
       // blip-eval replay: flip words rebuilt from the keyed-mask dump
       // (signed-64 two's complement at bit 63 handled explicitly), XORed
       // into the fixture words, same harness/metric expression order
-      s"""WITH c AS (SELECT dp, entity_id, words
+      exhaustiveEvalSql(
+        s"""c AS (SELECT dp, entity_id, words
                      FROM '$FixturesDir/febrl4_clks.parquet'),
          f AS (SELECT dp, entity_id, pos
                FROM '$OracleAuxDir/blip_flips_febrl4/*.parquet'),
-         g AS (SELECT dp, entity_id, unnest(range(0, 16)) AS i FROM c),
-         fw AS (SELECT g.dp, g.entity_id, g.i,
+         fi AS (SELECT dp, entity_id, unnest(range(0, 16)) AS i FROM c),
+         fw AS (SELECT fi.dp, fi.entity_id, fi.i,
                        CAST(COALESCE(sum(
                          CASE WHEN f.pos % 64 = 63
                               THEN -9223372036854775808
                               ELSE (CAST(1 AS BIGINT) << (f.pos % 64)) END),
                          0) AS BIGINT) AS v
-                FROM g LEFT JOIN f ON f.dp = g.dp
-                  AND f.entity_id = g.entity_id AND f.pos // 64 = g.i
-                GROUP BY g.dp, g.entity_id, g.i),
+                FROM fi LEFT JOIN f ON f.dp = fi.dp
+                  AND f.entity_id = fi.entity_id AND f.pos // 64 = fi.i
+                GROUP BY fi.dp, fi.entity_id, fi.i),
          fa AS (SELECT dp, entity_id, list(v ORDER BY i) AS fwd
                 FROM fw GROUP BY dp, entity_id),
-         h AS (SELECT c.dp, c.entity_id,
-                      list_transform(range(1, 17),
-                        i -> xor(c.words[i], fa.fwd[i])) AS hw
-               FROM c JOIN fa ON fa.dp = c.dp
-                 AND fa.entity_id = c.entity_id),
-         h2 AS (SELECT dp, entity_id, hw,
-                       list_sum(list_transform(hw, w -> bit_count(w))) AS hpc
-                FROM h),
-         t AS (SELECT CAST(row_a AS BIGINT) AS rec0,
-                      CAST(row_b AS BIGINT) AS rec1, 1 AS ist
-               FROM read_csv('$FixturesDir/febrl4_truth.csv',
-                 header = true)),
-         p AS (SELECT a.entity_id AS rec0, b.entity_id AS rec1,
-                 2.0 * list_sum(list_transform(range(1, 17),
-                   i -> bit_count(a.hw[i] & b.hw[i])))
-                   / (a.hpc + b.hpc) AS sblip
-               FROM h2 a JOIN h2 b ON a.dp = 0 AND b.dp = 1),
-         q AS (SELECT p.*, COALESCE(t.ist, 0) AS ist
-               FROM p LEFT JOIN t ON t.rec0 = p.rec0 AND t.rec1 = p.rec1),
-         gg AS (SELECT
-            CAST(sum(CASE WHEN sblip >= 0.7 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_70,
-            CAST(sum(CASE WHEN sblip >= 0.7 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_70,
-            CAST(sum(CASE WHEN sblip >= 0.75 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_75,
-            CAST(sum(CASE WHEN sblip >= 0.75 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_75,
-            CAST(sum(CASE WHEN sblip >= 0.8 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np_80,
-            CAST(sum(CASE WHEN sblip >= 0.8 THEN ist ELSE 0 END) AS BIGINT)
-              AS tp_80,
-            CAST(sum(ist) AS BIGINT) AS nt
-            FROM q),
-         r AS (
-           SELECT 'blip' AS variant, CAST(0.7 AS DOUBLE) AS threshold,
-                  np_70 AS n_pred, tp_70 AS tp, nt AS n_true FROM gg
-           UNION ALL SELECT 'blip', CAST(0.75 AS DOUBLE),
-                  np_75, tp_75, nt FROM gg
-           UNION ALL SELECT 'blip', CAST(0.8 AS DOUBLE),
-                  np_80, tp_80, nt FROM gg)
-         SELECT variant, threshold, n_pred, tp, n_true,
-                CAST(tp AS DOUBLE) / n_pred AS precision,
-                CAST(tp AS DOUBLE) / n_true AS recall,
-                2 * (CAST(tp AS DOUBLE) / n_pred)
-                  * (CAST(tp AS DOUBLE) / n_true)
-                  / ((CAST(tp AS DOUBLE) / n_pred)
-                     + (CAST(tp AS DOUBLE) / n_true)) AS f1
-         FROM r"""),
+         hx AS (SELECT c.dp, c.entity_id,
+                       list_transform(range(1, 17),
+                         i -> xor(c.words[i], fa.fwd[i])) AS hw
+                FROM c JOIN fa ON fa.dp = c.dp
+                  AND fa.entity_id = c.entity_id),
+         h AS (SELECT dp, entity_id, hw,
+                      list_sum(list_transform(hw, w -> bit_count(w))) AS hpc
+               FROM hx)""", BlipVariants)),
     // CLK popcount-distribution QA (the upload sanity readout anonlink
     // surfaces: saturated or empty filters break Dice discrimination):
     // per-provider histogram of popcount DIV 32 with per-dp shares

@@ -124,7 +124,7 @@ object LinkageQueries extends QueryFamily {
       // correctness stays with LinkageFixtureSpec's exact brute-force
       // oracle + F1-vs-truth and the frozen multiparty golden.
       s"""SELECT "clusterId", "dp", "entityId"
-         FROM '$FixturesDir/febrl4_golden_clusters.parquet'"""),
+         FROM ${febrl4GoldenSql()}"""),
     // the FULL 5-party pipeline (P>2: all-cross-pairs greedy merge rule)
     // made driver-visible — encode 5 binary CLK uploads -> block ->
     // score -> CC -> solve; oracle = the frozen golden groups
@@ -183,8 +183,7 @@ object LinkageQueries extends QueryFamily {
       // three-zone band: kernel replay at the LOWER threshold + the same
       // CASE/window; ranks are engine-identical because the tie-break
       // (sim DESC, dp1, rec1) is total over exact IEEE sims
-      s"""WITH $febrl4DicePairsSql,
-         e AS (SELECT * FROM p WHERE sim >= 0.7)
+      s"""WITH ${febrl4EdgesSql(0.7)}
          SELECT sim, dp0, rec0, dp1, rec1,
                 CASE WHEN sim >= 0.8 THEN 'accept' ELSE 'review' END AS zone,
                 CASE WHEN sim >= 0.8 THEN 0 ELSE CAST(row_number() OVER (
@@ -207,8 +206,7 @@ object LinkageQueries extends QueryFamily {
       // unlinkables replay: kernel edges at the 0.7 floor, per-record best
       // via endpoint union + left join onto the record universe, literal
       // threshold list crossed with the per-record bests
-      s"""WITH $febrl4DicePairsSql,
-         e AS (SELECT * FROM p WHERE sim >= 0.7),
+      s"""WITH ${febrl4EdgesSql(0.7)},
          ends AS (SELECT dp0 AS dp, rec0 AS rec, sim FROM e
                   UNION ALL SELECT dp1, rec1, sim FROM e),
          best AS (SELECT c.dp, c.entity_id AS rec,
@@ -321,7 +319,7 @@ object LinkageQueries extends QueryFamily {
     },
       // G2: cross pairs implied by the frozen golden clusters
       s"""WITH a AS (SELECT "clusterId" AS c, dp, "entityId" AS e
-                    FROM '$FixturesDir/febrl4_golden_clusters.parquet')
+                    FROM ${febrl4GoldenSql()})
          SELECT x.dp AS dp0, x.e AS rec0, y.dp AS dp1, y.e AS rec1
          FROM a x JOIN a y ON x.c = y.c
            AND (x.dp < y.dp OR (x.dp = y.dp AND x.e < y.e))"""),

@@ -77,6 +77,12 @@ object Pipeline {
     * tiny grid literal, so the sweep costs one narrow stage over the edge
     * set, never a rescore per threshold. `edges` must already be filtered
     * to the provider pair the truth labels (dp0=0, dp1=1).
+    *
+    * The grid join is inner: a threshold that no edge clears gets no row
+    * (rather than n_pred = 0 and a null precision), so a caller that
+    * wants one row per threshold chooses a grid every point of which
+    * some edge clears. `ThresholdSweepSpec` pins this and checks the
+    * counts and the three doubles against a driver-side brute force.
     */
   def thresholdSweep(edges: DataFrame, truth: DataFrame,
       grid: Seq[Double]): DataFrame = {
@@ -90,17 +96,25 @@ object Pipeline {
       .join(broadcast(t), Seq("rec0", "rec1"), "left")
       .select(col("sim"), coalesce(col("is_tp"), lit(0L)).as("is_tp"))
     val g = grid.toDF("threshold")
-    marked.join(broadcast(g), col("sim") >= col("threshold"))
-      .groupBy("threshold")
-      .agg(count(lit(1)).as("n_pred"), sum(col("is_tp")).as("tp"))
-      .crossJoin(broadcast(tot))
+    precisionRecallF1(marked.join(broadcast(g), col("sim") >= col("threshold"))
+        .groupBy("threshold")
+        .agg(count(lit(1)).as("n_pred"), sum(col("is_tp")).as("tp"))
+        .crossJoin(broadcast(tot)))
+      .select("threshold", "n_pred", "n_true", "tp",
+        "precision", "recall", "f1")
+  }
+
+  /** Adds edge-level `precision` = tp / n_pred, `recall` = tp / n_true
+    * and `f1` = 2 * precision * recall / (precision + recall) to a frame
+    * of counts, in that double expression order — every P/R/F1 readout
+    * (and its oracle, `QueryInputs.precisionRecallF1Sql`) computes them
+    * this one way. */
+  def precisionRecallF1(counts: DataFrame): DataFrame =
+    counts
       .withColumn("precision", col("tp") / col("n_pred"))
       .withColumn("recall", col("tp") / col("n_true"))
       .withColumn("f1", lit(2) * col("precision") * col("recall")
         / (col("precision") + col("recall")))
-      .select("threshold", "n_pred", "n_true", "tp",
-        "precision", "recall", "f1")
-  }
 
   /** Pairwise F1 of cluster-implied cross-provider pairs vs a truth set of
     * (rec0, rec1) pairs for providers (0,1) — the fixture gate

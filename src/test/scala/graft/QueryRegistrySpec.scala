@@ -45,4 +45,19 @@ class QueryRegistrySpec extends AnyFunSuite {
     val named = declared.map(_._2.name).filter(n => src.contains("\"" + n + "\""))
     assert(named.isEmpty, s"SparkEntry names queries: $named")
   }
+
+  test("only QueryInputs names the febrl4 truth and golden-cluster files") {
+    val guarded = Seq("febrl4_truth.csv", "febrl4_golden_clusters.parquet")
+    def source(cls: Class[_]) = Paths.get("src/main/scala",
+      cls.getName.stripSuffix("$").replace('.', '/') + ".scala")
+    val inputs = new String(Files.readAllBytes(source(QueryInputs.getClass)), "UTF-8")
+    guarded.foreach(g => assert(inputs.contains(g), s"QueryInputs does not name $g"))
+    val offenders = for {
+      f <- SparkEntry.families
+      path = source(f.getClass)
+      (line, i) <- new String(Files.readAllBytes(path), "UTF-8").split("\n").zipWithIndex
+      if guarded.exists(line.contains)
+    } yield s"$path:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

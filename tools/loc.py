@@ -11,8 +11,9 @@ with `//`, `/*` or `*` (comment lines).
 
 With --dups, also prints for each file its repeated lines: the extra copies
 of stripped lines longer than 30 characters that appear at least twice in
-the file (a line seen n times adds n - 1), largest first. It is a measure of
-copied text, not of clones: short lines and comments count too.
+the file (a line seen n times adds n - 1), largest first, and as its last
+line their total over ROOT. It is a measure of copied text, not of clones:
+short lines and comments count too.
 """
 import os
 import sys
@@ -65,6 +66,7 @@ def main(argv):
         print(f"{'repeated':>9}  file")
         for n, path in sorted(per_file, key=lambda x: (-x[0], x[1])):
             print(f"{n:>9}  {path}")
+        print(f"{sum(n for n, _ in per_file):>9}  total")
 
 
 if __name__ == "__main__":
