@@ -2,9 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
-/** Bloom-filter kernels shared by the build-side and probe-side Catalyst
-  * expressions ([[graft.expr.BloomPositions]] /
-  * [[graft.expr.BloomMightContain]]). Both sides derive bit positions from
+/** Bloom-filter kernels shared by the build side
+  * ([[graft.expr.bloomPositions]]) and the probe side
+  * ([[graft.expr.BloomMightContain]]). Both sides derive bit positions from
   * the SAME function over the same xxhash64 key hash, so a key inserted on
   * the build side can never be missed on the probe side — the Bloom
   * one-sided-error guarantee reduces to referential transparency here.

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * scaling factor 0.1. Operates on UTF-16 code units (identical to
   * byte/codepoint definitions on ASCII data).
   *
-  * Called from codegen'd expressions (graft.expr.JaroWinklerSimilarity);
+  * Called from codegen'd expressions (graft.expr.jaroWinkler);
   * allocation is two boolean scratch arrays per pair, O(len1·window)
   * time.
   */

@@ -1,286 +1,77 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
+import graft.core.{BitOps, BloomOps, SetOps, SoftTfidf, StringSim, VecOps}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType
 import org.apache.spark.sql.types._
 
-/** Custom Catalyst expressions for the linkage hot path.
+/** Catalyst expressions over the per-row kernels in graft.core.
   *
-  * The reference delegates pair scoring to anonlink's C++ popcount kernel
-  * (call site `backend/entityservice/tasks/comparing.py:340-343`, rated
-  * 50-100M cmp/s/core at `deployment/entity-service/values.yaml:253-254`).
-  * Here the kernel is a deterministic, codegen'd expression so Catalyst can
-  * (a) keep it inside whole-stage codegen together with the block join and
-  * the threshold filter — the `sim >= t` predicate is applied in the same
-  * generated stage, never after a materialization — and (b) push/prune
-  * around it freely.
+  * The reference hands each pair to anonlink's C++ popcount kernel
+  * (`backend/entityservice/tasks/comparing.py:340-343`). Here every kernel
+  * is a static `graft.core` method, and [[KernelCall]] is the one
+  * expression that calls it: analysis checks its argument types, and the
+  * optimizer replaces it with Spark's `StaticInvoke` of the method, which
+  * stays inside whole-stage codegen. The pair-scoring hot path itself is
+  * the chunk-pair `flatMap` in `graft.link.Linker.chunked`, which calls
+  * `BitOps` directly; `dice_pre` serves `Linker.scoreCandidatesJoin` and
+  * `graft.streaming.EventStream.streamingLinkage`.
   */
 
-/** Number of set bits in a binary column. */
-case class Popcount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(v: Any): Any =
-    graft.core.BitOps.popcount(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.BitOps.popcount($c)")
-  override protected def withNewChildInternal(newChild: Expression): Popcount =
-    copy(child = newChild)
-  override def prettyName: String = "popcount"
-}
+/** A `graft.core` kernel: the object and method `StaticInvoke` calls, its
+  * result type, and the argument types analysis accepts (no implicit casts:
+  * `dice(s, s)` on strings fails at analysis, not on the executors). */
+private[expr] case class Kernel(target: AnyRef, method: String,
+    dataType: DataType, inputTypes: AbstractType*)
 
-/** Sørensen–Dice coefficient of two bitvectors:
-  * `2 * popcount(a & b) / (popcount(a) + popcount(b))`; 0.0 for two empty
-  * vectors. Threshold semantics in the pipeline are `sim >= t`
-  * (reference keeps scores >= threshold, `tasks/comparing.py:340-343`).
-  */
-case class DiceSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.BitOps.dice(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.BitOps.dice($a, $b)")
+/** The call of the [[KernelCall.kernels]] entry `name` on `children`. A
+  * null argument gives a null result. */
+case class KernelCall(name: String, children: Seq[Expression])
+    extends RuntimeReplaceable with ExpectsInputTypes {
+  private def kernel = KernelCall.kernels(name)
+  override def inputTypes: Seq[AbstractType] = kernel.inputTypes
+  override lazy val replacement: Expression = StaticInvoke(
+    kernel.target.getClass, kernel.dataType, kernel.method, children,
+    returnNullable = false)
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DiceSimilarity =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dice"
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
 }
 
-/** Dot product of two array&lt;double&gt; columns over the common prefix —
-  * codegen'd, allocation-free (see graft.core.VecOps). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.VecOps.dot(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.VecOps.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_product"
+object KernelCall {
+  private val doubles = ArrayType(DoubleType)
+  private val longs = ArrayType(LongType)
+  private val longSet = ArrayType(LongType, containsNull = false)
+
+  private[expr] val kernels: Map[String, Kernel] = Map(
+    "popcount" -> Kernel(BitOps, "popcount", IntegerType, BinaryType),
+    "dice" -> Kernel(BitOps, "dice", DoubleType, BinaryType, BinaryType),
+    "dice_pre" -> Kernel(BitOps, "dicePre", DoubleType,
+      BinaryType, BinaryType, IntegerType),
+    "morton16" -> Kernel(BitOps, "morton16", IntegerType, IntegerType, IntegerType),
+    "dot_product" -> Kernel(VecOps, "dot", DoubleType, doubles, doubles),
+    "vector_norm" -> Kernel(VecOps, "norm2", DoubleType, doubles),
+    "sorted_intersect_count" -> Kernel(SetOps, "intersectCountSortedLong",
+      IntegerType, longs, longs),
+    "hashed_char_ngrams" -> Kernel(SetOps, "hashedCharNgrams", longSet,
+      StringType, IntegerType),
+    "tf_min_sum_shared" -> Kernel(SetOps, "tfMinSumShared", LongType,
+      MapType, MapType),
+    "jaro_winkler" -> Kernel(StringSim, "jaroWinkler", DoubleType,
+      StringType, StringType),
+    "damerau_levenshtein" -> Kernel(StringSim, "damerauLevenshtein",
+      IntegerType, StringType, StringType),
+    "levenshtein_band" -> Kernel(StringSim, "levenshteinBand", IntegerType,
+      StringType, StringType, IntegerType),
+    "soft_tfidf_sum" -> Kernel(SoftTfidf, "sum6", LongType,
+      ArrayType, ArrayType, LongType),
+    "bloom_positions" -> Kernel(BloomOps, "positions", longSet,
+      LongType, IntegerType, LongType))
 }
 
-/** L2 norm of an array&lt;double&gt; column. */
-case class VectorNorm(child: Expression) extends UnaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    graft.core.VecOps.norm2(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.VecOps.norm2($c)")
-  override protected def withNewChildInternal(newChild: Expression): VectorNorm =
-    copy(child = newChild)
-  override def prettyName: String = "vector_norm"
-}
-
-/** Intersection size of two ascending-sorted, duplicate-free
-  * array&lt;long&gt; columns — the set analogue of [[DotProduct]]: a
-  * codegen'd merge scan (graft.core.SetOps), no per-pair hash set, no
-  * UTF8String comparisons. The confirm kernel for every hashed-gram
-  * Jaccard path (word tokens, char n-grams, MinHash shingles). */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  // PRECONDITION (documented at the SQL registration): both arrays must
-  // be ascending-sorted and duplicate-free, as produced by
-  // hashed_char_ngrams / the hashed-token signatures; the merge scan
-  // undercounts on unsorted input.
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.SetOps.intersectCountSortedLong(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.SetOps.intersectCountSortedLong($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "sorted_intersect_count"
-}
-
-/** Sorted distinct 64-bit hashes of a text's character n-grams — the
-  * whole per-document gram-signature pipeline (substring → hash →
-  * distinct → sort) as one codegen'd pass over the UTF8String bytes
-  * (graft.core.SetOps.hashedCharNgrams), replacing a
-  * sequence+transform+substr plan that allocated one UTF8String per
-  * character position. Feeds [[SortedIntersectCount]]. */
-case class HashedCharNgrams(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(t: Any, n: Any): Any =
-    graft.core.SetOps.hashedCharNgrams(
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, n) => s"graft.core.SetOps.hashedCharNgrams($t, $n)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HashedCharNgrams =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "hashed_char_ngrams"
-}
-
-/** Jaro-Winkler similarity of two string columns — the soft name
-  * comparator classical record linkage scores candidate pairs with
-  * (graft.core.StringSim; DuckDB-compatible semantics: 0.0 on empty,
-  * boost only above jaro 0.7, prefix cap 4, scale 0.1). Codegen'd so the
-  * `sim >= t` confirm stays in the same whole-stage-generated loop as
-  * the blocking join. */
-case class JaroWinklerSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.StringSim.jaroWinkler(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.StringSim.jaroWinkler($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSimilarity =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaro_winkler"
-}
-
-/** TRUE Damerau–Levenshtein distance (Lowrance–Wagner, adjacent
-  * transpositions first-class) — codegen'd; the variant DuckDB's
-  * damerau_levenshtein implements. See graft.core.StringSim. */
-case class DamerauLevenshtein(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(StringType, StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.StringSim.damerauLevenshtein(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.core.StringSim.damerauLevenshtein($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DamerauLevenshtein =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "damerau_levenshtein"
-}
-
-/** Banded (threshold) Levenshtein distance — semantics of Spark's
-  * built-in `levenshtein(l, r, k)` (exact distance when <= k, else -1),
-  * ~10-30x faster per call on ASCII inputs (graft.core.StringSim
-  * .levenshteinBand: byte-level band DP, built-in fallback otherwise;
-  * property-fuzzed equal to the built-in in FuzzySpec). */
-case class LevenshteinBand(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(StringType, StringType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.StringSim.levenshteinBand(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.core.StringSim.levenshteinBand($a, $b, $k)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LevenshteinBand =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "levenshtein_band"
-}
-
-/** Fused SoftTF-IDF contribution sum over two array&lt;struct&lt;t,w&gt;&gt;
-  * weight lists (graft.core.SoftTfidf.sum6 — packed JW argmax + exact
-  * HALF_UP fixed-point contributions). Replaces a nested
-  * transform/array_max/aggregate tree whose lambdas are CodegenFallback
-  * (interpreted + boxed per token PAIR); arithmetic is bit-identical to
-  * that tree (see SoftTfidf's scaladoc for the rounding contract). */
-case class SoftTfidfSum(left: Expression, right: Expression, theta6: Long)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.SoftTfidf.sum6(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], theta6)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.core.SoftTfidf.sum6($a, $b, ${theta6}L)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SoftTfidfSum =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "soft_tfidf_sum"
-}
-
-/** Shared-key min-sum of two string->long tf maps (the weighted-Jaccard
-  * numerator, graft.core.SetOps.tfMinSumShared) — codegen replacement for
-  * an interpreted map_zip_with/aggregate lambda tree; bit-identical
-  * result (see the core method's scaladoc). */
-case class TfMinSumShared(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.SetOps.tfMinSumShared(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.core.SetOps.tfMinSumShared($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TfMinSumShared =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "tf_min_sum_shared"
-}
-
-/** Dice with precomputed popcount sum (the join carries per-record
-  * popcounts, mirroring the reference's popcount cache
-  * `cache/encodings.py:42-45`) — saves two popcount passes per pair. */
-case class DiceSimilarityPre(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(BinaryType, BinaryType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any, s: Any): Any =
-    graft.core.BitOps.dicePre(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], s.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, s) => s"graft.core.BitOps.dicePre($a, $b, $s)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): DiceSimilarityPre =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "dice_pre"
-}
-
-/** 16-bit Morton (Z-order) code of two pre-quantized 8-bit coordinates —
-  * the clustering key for multi-dimensional data layout (Z-ordered file
-  * layout makes min/max file-skipping effective on BOTH dimensions at
-  * once). Codegen'd; see graft.core.BitOps.morton16. */
-case class MortonInterleave(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(IntegerType, IntegerType)
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(x: Any, y: Any): Any =
-    graft.core.BitOps.morton16(x.asInstanceOf[Int], y.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.core.BitOps.morton16($x, $y)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MortonInterleave =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "morton16"
-}
-
-/** Build side of the Bloom runtime filter: the k probe positions of a
-  * 64-bit key hash in an m-bit filter (Kirsch–Mitzenmacher double
-  * hashing, graft.core.BloomOps). Exploded and bit_or-aggregated into
-  * filter words by [[graft.rel.Relational.bloomSemiJoin]]. */
 /** Hamming bit-sampling LSH band keys over a packed array<long> encoding
   * (Indyk–Motwani bit sampling). Positions ride the plan as one int[]
   * reference object; the per-row work is bands·bitsPerBand shift/and ops
@@ -289,13 +80,12 @@ case class MortonInterleave(left: Expression, right: Expression)
   * unrolls to ~770 terms and trips janino's method-size limit. */
 case class HammingLshKeys(child: Expression, bands: Int, bitsPerBand: Int,
     nBits: Int) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] =
-    Seq(ArrayType(LongType))
+  override def inputTypes: Seq[AbstractType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val positions: Array[Int] =
     graft.ingest.Blocking.hammingLshPositions(bands, bitsPerBand, nBits)
   override def nullSafeEval(w: Any): Any =
-    graft.core.BitOps.hammingLshKeys(
+    BitOps.hammingLshKeys(
       w.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       positions, bitsPerBand)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -308,19 +98,6 @@ case class HammingLshKeys(child: Expression, bands: Int, bitsPerBand: Int,
   override def prettyName: String = "hamming_lsh_keys"
 }
 
-case class BloomPositions(child: Expression, k: Int, mBits: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(h: Any): Any =
-    graft.core.BloomOps.positions(h.asInstanceOf[Long], k, mBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, h => s"graft.core.BloomOps.positions($h, $k, ${mBits}L)")
-  override protected def withNewChildInternal(newChild: Expression): BloomPositions =
-    copy(child = newChild)
-  override def prettyName: String = "bloom_positions"
-}
-
 /** Probe side of the Bloom runtime filter: definite-no / maybe-yes
   * membership of a 64-bit key hash in a driver-built filter word array.
   * The words ride the plan as a reference object (serialized once per
@@ -329,10 +106,10 @@ case class BloomPositions(child: Expression, k: Int, mBits: Long)
   * before any shuffle write. */
 case class BloomMightContain(child: Expression, bits: Array[Long], k: Int,
     mBits: Long) extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.GraftSqlBridge.AbstractType] = Seq(LongType)
+  override def inputTypes: Seq[AbstractType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def nullSafeEval(h: Any): Any =
-    graft.core.BloomOps.mightContain(h.asInstanceOf[Long], bits, k, mBits)
+    BloomOps.mightContain(h.asInstanceOf[Long], bits, k, mBits)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bitsRef = ctx.addReferenceObj("bloomBits", bits, "long[]")
     defineCodeGen(ctx, ev,

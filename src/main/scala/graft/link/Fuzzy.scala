@@ -123,7 +123,7 @@ object Fuzzy {
   }
 
   /** [[fuzzyJoin]] under TRUE Damerau–Levenshtein (codegen'd
-    * [[graft.expr.DamerauLevenshtein]]): a swap of adjacent characters
+    * [[graft.expr.damerauLevenshtein]]): a swap of adjacent characters
     * costs 1 instead of 2, so transposition typos ("mathcing") land at
     * distance 1. Same dual-affix blocking — DL ≤ Levenshtein, and one
     * edit (including a transposition inside the string) can break at

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Pipeline: global min/max per dimension (one tiny agg, broadcast) →
   * quantize each value to 8 bits with exact integer arithmetic
   * ((v-min)·256 DIV (max-min+1)) → 16-bit Morton code (codegen'd
-  * [[graft.expr.MortonInterleave]]) → bucket = top `bucketBits` bits.
+  * [[graft.expr.morton16]]) → bucket = top `bucketBits` bits.
   * Because the bucket is a PREFIX of the interleaved code, every bucket
   * covers an axis-aligned rectangle of side 2^(8-bucketBits/2) in
   * quantized space — that rectangle IS the min/max stats envelope a

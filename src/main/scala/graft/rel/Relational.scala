@@ -372,7 +372,7 @@ object Relational {
     * tens of GB for the exact set).
     *
     * Build: one pass over `small` computing each key's k probe positions
-    * ([[graft.expr.BloomPositions]]), bit_or-aggregated into 64-bit filter
+    * ([[graft.expr.bloomPositions]]), bit_or-aggregated into 64-bit filter
     * words (map-side combine; at most m/64 rows collected — the dense
     * bitset, never the keys). Probe: the words ride a codegen'd
     * [[graft.expr.BloomMightContain]] predicate applied during the big

@@ -20,7 +20,11 @@ import pandas as pd
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify01"
 
-con = duckdb.connect()
+# Bounded memory, no spill: a query that needs more than 2 GB fails with
+# an out-of-memory error, recorded as FAIL, and the replay goes on.
+# Spilling stays off because DuckDB 1.0.0 does not hold its temp files to
+# max_temp_directory_size: q_bpe_segment wrote 18.6 GB of them in 20 s.
+con = duckdb.connect(config={"memory_limit": "2GB", "temp_directory": ""})
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
