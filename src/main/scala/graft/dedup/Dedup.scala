@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.RunScope
-import graft.ingest.Blocking
 import graft.link.Salting
 import scala.util.hashing.MurmurHash3
 
@@ -18,7 +17,11 @@ import scala.util.hashing.MurmurHash3
   * [[saltedSelfPairs]] — per-bucket two-sided salt fan-out sized from
   * bucket stats by the square-chunk generator the linkage hot path also
   * uses (graft.link.Salting) — so a single hot block/bucket key is never
-  * one quadratic task.
+  * one quadratic task. The near-dup joins share two candidate → verify
+  * shapes: [[hashedSetPairs]] for the blocked set joins (Jaccard,
+  * containment, Tversky) and [[bandKeyPairs]] for the LSH joins (MinHash,
+  * weighted MinHash, incremental MinHash, the estimator audits, SimHash,
+  * sign-LSH cosine); each join keeps only its score.
   */
 object Dedup {
 
@@ -68,10 +71,9 @@ object Dedup {
   }
 
   // Signature tables feeding a pair join are referenced 2-3x in one plan
-  // (bucket explode + two confirm-join sides); AQE compiles the branches
-  // as separate stages with no exchange reuse, so without persist the
-  // whole signature scan+UDF pipeline runs per branch (3x the corpus
-  // scan at 100 TB). Each call site persists into its own RunScope slot.
+  // (bucket explode + two confirm-join sides) and AQE reuses no exchange
+  // between the branches, so each call site persists its table into its
+  // own RunScope slot rather than rerun the signature pipeline per branch.
 
   /** Project `score` then threshold-filter WITHOUT Catalyst re-evaluating
     * the scoring expression in both Filter and Project: PushDownPredicates
@@ -110,57 +112,58 @@ object Dedup {
         sequence(lit(1), length(text) - (n - 1)),
         i => text.substr(i, lit(n)))))
 
-  /** n-gram Jaccard near-dup pairs within candidate blocks: block on a
-    * cheap key first (never all-pairs), then score. Token sets are
-    * computed once per document, not once per pair. `blockKey` must be a
-    * deterministic function of the text columns.
-    *
-    * Scale: pairs route through [[saltedSelfPairs]] (skewed block keys fan
-    * out), and a size-window prune — jaccard <= min(|A|,|B|)/max(|A|,|B|),
-    * the set analogue of the linkage kernel's popcount window — skips the
-    * O(|A|+|B|) intersection for pairs whose sizes can't reach the
-    * threshold (the 1e-4 slack covers the round(.,4) boundary). */
+  /** n-gram Jaccard near-dup pairs within candidate blocks over
+    * whitespace word tokens: block on a cheap key first (never
+    * all-pairs), then score. `blockKey` must be a deterministic function
+    * of the text columns. */
   def jaccardPairs(df: DataFrame, id: String, text: String, blockKey: Column,
       threshold: Double, aim: Long = PairAim): DataFrame =
     jaccardPairsBy(df, id, array_distinct(split(col(text), " ")), blockKey,
       threshold, aim)
 
   /** Jaccard pairs over an arbitrary precomputed element-set column
-    * (word tokens, char n-grams, shingles — anything array-typed).
-    *
-    * Element sets are reduced to sorted long-hash sets ONCE per document
-    * ([[hashedSet]], persisted — the gram pipeline would otherwise
-    * re-evaluate per join branch); pair generation carries only
-    * (id, set size) so the arrays never ride the salted fan-out shuffle;
-    * the size-window prune — jaccard <= min(|A|,|B|)/max(|A|,|B|), the
-    * set analogue of the linkage kernel's popcount window — drops pairs
-    * before their arrays are ever fetched; the per-pair confirm is the
-    * codegen'd long merge scan. */
+    * (word tokens, char n-grams, shingles — anything array-typed),
+    * reduced to a sorted long-hash set ONCE per document ([[hashedSet]]). */
   def jaccardPairsBy(df: DataFrame, id: String, elems: Column, blockKey: Column,
       threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame =
     jaccardPairsHashed(df, id, hashedSet(elems), blockKey, threshold, aim, maxK)
 
-  /** Jaccard pairs over a PRE-HASHED sorted long-set column (e.g.
-    * [[graft.expr.hashedCharNgrams]] — the one-pass gram signature). */
-  def jaccardPairsHashed(df: DataFrame, id: String, toks: Column, blockKey: Column,
-      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
-    val sig = RunScope.persist("jaccard",
+  /** Set Jaccard of two sorted long-set columns, rounded to 4 dp. */
+  private def setJaccard(a: String, b: String): Column = {
+    val i = graft.expr.sortedIntersectCount(col(a), col(b)).cast("double")
+    round(i / (size(col(a)) + size(col(b)) - i), 4)
+  }
+
+  /** The blocked hashed-set candidate → verify join of the Jaccard,
+    * containment and Tversky paths. The (bk, id, toks, sz) table is
+    * persisted in RunScope slot `slot`; only (bk, id, sz) rides the salted
+    * fan-out; pairs failing `sizeOk` (over sz0/sz1) drop before any set is
+    * fetched; the sets join back once per side.
+    * Output: id0, id1, sz0, sz1, toks0, toks1. */
+  private def hashedSetPairs(slot: String, df: DataFrame, id: String,
+      toks: Column, blockKey: Column, aim: Long, maxK: Int,
+      sizeOk: Option[Column] = None): DataFrame = {
+    val sig = RunScope.persist(slot,
       df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
         .withColumn("sz", size(col("toks"))))
     val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
       aim, maxK)
+    sizeOk.fold(paired)(ok => paired.where(ok)).select("id0", "id1", "sz0", "sz1")
+      .join(sig.select(col("id").as("id0"), col("toks").as("toks0")), "id0")
+      .join(sig.select(col("id").as("id1"), col("toks").as("toks1")), "id1")
+  }
+
+  /** Jaccard pairs over a PRE-HASHED sorted long-set column (e.g.
+    * [[graft.expr.hashedCharNgrams]]) on [[hashedSetPairs]], pruned by
+    * size window: jaccard <= min(|A|,|B|)/max(|A|,|B|), the set analogue
+    * of the kernel's popcount window (1e-4 slack for the round(.,4)). */
+  def jaccardPairsHashed(df: DataFrame, id: String, toks: Column, blockKey: Column,
+      threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     val sizeOk = least(col("sz0"), col("sz1")).cast("double") >=
       greatest(col("sz0"), col("sz1")) * (threshold - 1e-4)
-    val cand = paired.where(sizeOk).select("id0", "id1", "sz0", "sz1")
-    val inter = graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
-      .cast("double")
     scoreAndFilter(
-      cand
-        .join(sig.select(col("id").as("id0"), col("toks").as("toks0")), "id0")
-        .join(sig.select(col("id").as("id1"), col("toks").as("toks1")), "id1"),
-      "jaccard",
-      round(inter / (col("sz0") + col("sz1") - inter), 4), threshold,
-      "id0", "id1", "jaccard")
+      hashedSetPairs("jaccard", df, id, toks, blockKey, aim, maxK, Some(sizeOk)),
+      "jaccard", setJaccard("toks0", "toks1"), threshold, "id0", "id1", "jaccard")
   }
 
   /** Containment near-dup pairs: |A∩B| / min(|A|,|B|) ≥ threshold over a
@@ -170,30 +173,19 @@ object Dedup {
     * Jaccard — the boilerplate/quotation case in web-corpus dedup
     * (Broder's resemblance-vs-containment distinction, SEQUENCES'97).
     *
-    * Same scale shape as [[jaccardPairsHashed]] (signatures persisted
-    * once, salted pair fan-out carries bare ids, codegen merge-scan
-    * confirm) EXCEPT no size-window prune: containment is not bounded by
-    * the size ratio (a 10-gram doc inside a 10k-gram doc still scores
-    * 1.0), so every blocked pair must run the merge scan — the blocking
-    * key carries the entire pruning burden by design. */
+    * Runs on [[hashedSetPairs]] with no size-window prune: containment is
+    * not bounded by the size ratio (a 10-gram doc inside a 10k-gram doc
+    * still scores 1.0), so every blocked pair must run the merge scan —
+    * the blocking key carries the entire pruning burden by design. */
   def containmentPairsHashed(df: DataFrame, id: String, toks: Column,
       blockKey: Column, threshold: Double, aim: Long = PairAim,
-      maxK: Int = Salting.MaxSaltFanout): DataFrame = {
-    val sig = RunScope.persist("containment",
-      df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
-        .withColumn("sz", size(col("toks"))))
-    val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
-      aim, maxK)
-    val inter = graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
-      .cast("double")
+      maxK: Int = Salting.MaxSaltFanout): DataFrame =
     scoreAndFilter(
-      paired.select("id0", "id1", "sz0", "sz1")
-        .join(sig.select(col("id").as("id0"), col("toks").as("toks0")), "id0")
-        .join(sig.select(col("id").as("id1"), col("toks").as("toks1")), "id1"),
+      hashedSetPairs("containment", df, id, toks, blockKey, aim, maxK),
       "containment",
-      round(inter / least(col("sz0"), col("sz1")).cast("double"), 4),
+      round(graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
+        .cast("double") / least(col("sz0"), col("sz1")).cast("double"), 4),
       threshold, "id0", "id1", "containment")
-  }
 
   /** Tversky-index near-dup pairs (Tversky 1977) over a PRE-HASHED
     * sorted long-set column: the asymmetric generalization of Jaccard
@@ -210,29 +202,21 @@ object Dedup {
     * long and the score is ONE double divide of two exact ints, rounded
     * to 4 dp before the threshold compare (the Jaccard-family accept
     * contract — bit-replayable in any IEEE engine).
-    * Same scale shape as [[jaccardPairsHashed]] minus the size-window
-    * prune (asymmetric weights break the size-ratio bound the way
-    * containment does). */
+    * Runs on [[hashedSetPairs]] with no size-window prune (asymmetric
+    * weights break the size-ratio bound the way containment does). */
   def tverskyPairsHashed(df: DataFrame, id: String, toks: Column,
       blockKey: Column, alphaTenths: Int, betaTenths: Int,
       threshold: Double, aim: Long = PairAim, maxK: Int = Salting.MaxSaltFanout): DataFrame = {
     require(alphaTenths >= 0 && betaTenths >= 0
       && alphaTenths + betaTenths > 0, "need nonneg weights, not both 0")
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val sig = RunScope.persist("tversky",
-      df.select(blockKey.as("bk"), col(id).as("id"), toks.as("toks"))
-        .withColumn("sz", size(col("toks"))))
-    val paired = saltedSelfPairs(sig.select(col("bk"), col("id"), col("sz")),
-      aim, maxK)
-    val inter = graft.expr.sortedIntersectCount(col("toks0"), col("toks1"))
     val den10 = lit(10L) * col("inter") +
       lit(alphaTenths.toLong) * (col("sz0") - col("inter")) +
       lit(betaTenths.toLong) * (col("sz1") - col("inter"))
     scoreAndFilter(
-      paired.select("id0", "id1", "sz0", "sz1")
-        .join(sig.select(col("id").as("id0"), col("toks").as("toks0")), "id0")
-        .join(sig.select(col("id").as("id1"), col("toks").as("toks1")), "id1")
-        .withColumn("inter", inter.cast("long")),
+      hashedSetPairs("tversky", df, id, toks, blockKey, aim, maxK)
+        .withColumn("inter",
+          graft.expr.sortedIntersectCount(col("toks0"), col("toks1")).cast("long")),
       "tversky",
       round(lit(10L) * col("inter") / den10.cast("double"), 4),
       threshold, "id0", "id1", "inter", "sz0", "sz1", "tversky")
@@ -284,14 +268,10 @@ object Dedup {
     val w = Window.partitionBy("id").orderBy(col("df"), col("tok"))
     // the hashed set RIDES the prefix fan-out: shuffle volume is
     // O(corpus · prefix-length · set bytes) — LINEAR in the corpus — in
-    // exchange for never shuffling the candidate-pair stream, which is
-    // the quadratic-in-bucket-size term. Round 6 measured the old shape
-    // (bare (id, sz) pairs -> distinct() -> sets join -> verify) at 16.4
-    // of the query's 15.5-24.8 s: every generated candidate crossed the
-    // wire into the distinct. Verifying INSIDE the generation stage
-    // keeps the whole candidate stream in whole-stage codegen and only
-    // accepted pairs (plus their bounded cross-token duplicates) ever
-    // shuffle, into a final dropDuplicates.
+    // exchange for never shuffling the candidate-pair stream (round 6
+    // measured the bare-id shape, candidates -> distinct -> sets join ->
+    // verify, at 16.4 of the query's 15.5-24.8 s). Only accepted pairs
+    // (plus bounded cross-token duplicates) shuffle, into a dropDuplicates.
     val prefix = toks.join(dfreq, "tok")
       .withColumn("rn", row_number().over(w))
       .join(sig.select(col("id"), col("sz"), col("toks")), "id")
@@ -364,9 +344,8 @@ object Dedup {
                   t -> struct(t, CAST(size(filter(ts, x -> x = t)) AS LONG))))""")
             .as("m")))
     val paired = saltedSelfPairs(base, aim, maxK)
-    // fused codegen kernel — bit-identical to the former
-    // map_zip_with/aggregate HOF tree (interpreted lambdas per pair;
-    // see graft.core.SetOps.tfMinSumShared for the equivalence argument)
+    // fused codegen kernel (graft.core.SetOps.tfMinSumShared has its
+    // equivalence to the map_zip_with/aggregate HOF tree)
     val minSum = graft.expr.tfMinSumShared(col("m0"), col("m1"))
     wjThresholded(paired, minSum, col("tot0"), col("tot1"), thr)
   }
@@ -415,18 +394,6 @@ object Dedup {
     mins
   }
 
-  private def minhashBandKeys(sh: Array[String], bands: Int, rows: Int,
-      seed: Int): Array[String] = {
-    if (sh.isEmpty) return Array("b:empty")
-    val mins = minhashValues(sh, bands * rows, seed)
-    Array.tabulate(bands) { b =>
-      val sb = new StringBuilder(s"b$b")
-      var r = 0
-      while (r < rows) { sb.append(':').append(mins(b * rows + r)); r += 1 }
-      sb.toString
-    }
-  }
-
   /** Spread a narrow input across the cluster BEFORE a per-row UDF when
     * it arrives under-partitioned (a small corpus is one input split, so
     * a CPU-heavy signature UDF would run on ONE core — guide §2.5 input
@@ -439,20 +406,39 @@ object Dedup {
     if (df.rdd.getNumPartitions * 2 < par) df.repartition(par, key) else df
   }
 
+  /** The one MinHash signature builder: (doc, `mem` = the member set
+    * `members` cuts from the text, vals = its bands·rowsPerBand component
+    * minima, bks = its LSH band keys "b<band>:<v>:…:<v>"). The keys are
+    * cut from `vals`, so each component is hashed once per document; an
+    * empty member set has the one key "b:empty". */
+  private def minhashTable(df: DataFrame, id: String, text: String,
+      members: String => Array[String], mem: String, bands: Int,
+      rowsPerBand: Int, seed: Int): DataFrame = {
+    val memUdf = udf((t: String) => members(if (t == null) "" else t))
+    val valsUdf = udf((m: Seq[String]) => minhashValues(
+      if (m == null) Array.empty else m.toArray, bands * rowsPerBand, seed))
+    val keysUdf = udf((m: Seq[String], v: Seq[Int]) =>
+      if (m == null || m.isEmpty) Array("b:empty")
+      else Array.tabulate(bands) { b =>
+        val sb = new StringBuilder(s"b$b")
+        var r = 0
+        while (r < rowsPerBand) { sb.append(':').append(v(b * rowsPerBand + r)); r += 1 }
+        sb.toString
+      })
+    spreadForUdf(df, col(id))
+      .select(col(id).as("doc"), memUdf(col(text)).as(mem))
+      .withColumn("vals", valsUdf(col(mem)))
+      .withColumn("bks", keysUdf(col(mem), col("vals")))
+  }
+
   /** Per-document MinHash state: (doc, sh = bigram shingles,
     * bks = LSH band keys). The dump the DuckDB oracle replays the pairing
     * semantics from (candidates = share >= 1 band key; confirm = shingle
     * Jaccard) — the signature computation itself is gated by DedupSpec's
     * brute-force recall/precision oracle. */
   def minhashSignatures(df: DataFrame, id: String, text: String,
-      bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed): DataFrame = {
-    val shUdf = udf((t: String) => shingles2(if (t == null) "" else t))
-    val keysUdf = udf((sh: Seq[String]) =>
-      minhashBandKeys(if (sh == null) Array.empty else sh.toArray, bands, rowsPerBand, seed))
-    spreadForUdf(df, col(id))
-      .select(col(id).as("doc"), shUdf(col(text)).as("sh"))
-      .withColumn("bks", keysUdf(col("sh")))
-  }
+      bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed): DataFrame =
+    minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed).drop("vals")
 
   /** [[minhashSignatures]] plus the raw per-component minimum hash
     * values (`vals`, length bands·rowsPerBand) — the state the
@@ -460,18 +446,56 @@ object Dedup {
     * from the production signature table so the band keys stay the only
     * thing the LSH hot path carries. */
   def minhashComponentSignatures(df: DataFrame, id: String, text: String,
-      bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed): DataFrame = {
-    val nh = bands * rowsPerBand
-    val shUdf = udf((t: String) => shingles2(if (t == null) "" else t))
-    val valsUdf = udf((sh: Seq[String]) =>
-      minhashValues(if (sh == null) Array.empty else sh.toArray, nh, seed))
-    val keysUdf = udf((sh: Seq[String]) =>
-      minhashBandKeys(if (sh == null) Array.empty else sh.toArray, bands,
-        rowsPerBand, seed))
-    spreadForUdf(df, col(id))
-      .select(col(id).as("doc"), shUdf(col(text)).as("sh"))
-      .withColumn("vals", valsUdf(col("sh")))
-      .withColumn("bks", keysUdf(col("sh")))
+      bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed): DataFrame =
+    minhashTable(df, id, text, shingles2, "sh", bands, rowsPerBand, seed)
+
+  /** The band-key candidate → verify join of the LSH paths: ids (column
+    * `id` of `sig`) sharing a key of the key-array column `keys` pair up
+    * through [[saltedSelfPairs]] carrying only (bucket, id), one distinct
+    * collapses pairs found through several keys, and each `payload` column
+    * joins back once per side — O(bucket collisions), never O(n^2). With
+    * `newFlag` (a 0/1 column) only pairs touching a 1-row are generated:
+    * buckets without one drop in a semi join before pair generation, 0×0
+    * pairs on a bare-int filter before the distinct.
+    * Output: id0, id1, then the payload columns suffixed 0, then 1. */
+  private def bandKeyPairs(sig: DataFrame, id: String, keys: String,
+      payload: Seq[String], aim: Long,
+      newFlag: Option[String] = None): DataFrame = {
+    val ids = sig.select(Seq(explode(col(keys)).as("bk"), col(id).as("id")) ++
+      newFlag.map(col): _*)
+    val (base, touching) = newFlag.fold((ids, lit(true))) { nw =>
+      val touched = ids.where(col(nw) === 1).select("bk").distinct()
+      (ids.join(touched, Seq("bk"), "left_semi"), col(nw + "0") + col(nw + "1") >= 1)
+    }
+    def side(s: String) =
+      sig.select(col(id).as("id" + s) +: payload.map(p => col(p).as(p + s)): _*)
+    saltedSelfPairs(base, aim).where(touching)
+      .select("id0", "id1").dropDuplicates("id0", "id1")
+      .join(side("0"), "id0")
+      .join(side("1"), "id1")
+  }
+
+  /** The estimator audit behind [[minhashAccuracy]] and
+    * [[bbitMinhashAccuracy]]: over every LSH candidate pair, `n` counts
+    * the components `eq` holds for and `est` turns that count into the
+    * estimate, next to the exact shingle Jaccard and the absolute error.
+    * Unthresholded — the audit wants the misses too. The component count
+    * is a codegen'd zip_with/aggregate over two fixed-length int arrays. */
+  private def componentAudit(slot: String, df: DataFrame, id: String,
+      text: String, bands: Int, rowsPerBand: Int, seed: Int, aim: Long,
+      eq: (Column, Column) => Column, n: String, est: String,
+      estimate: Column => Column): DataFrame = {
+    val sig = RunScope.persist(slot,
+      minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed)
+        .withColumn("shh", hashedSet(col("sh"))))
+    val nEq = aggregate(
+      zip_with(col("vals0"), col("vals1"),
+        (a, b) => when(eq(a, b), 1L).otherwise(0L)),
+      lit(0L), (acc, x) => acc + x)
+    bandKeyPairs(sig, "doc", "bks", Seq("shh", "vals"), aim)
+      .select(col("id0"), col("id1"), nEq.as(n), estimate(nEq).as(est),
+        setJaccard("shh0", "shh1").as("jaccard"))
+      .withColumn("abs_err", round(abs(col(est) - col("jaccard")), 4))
   }
 
   /** MinHash estimator-accuracy audit: for every LSH candidate pair, the
@@ -480,12 +504,8 @@ object Dedup {
     * with the absolute error. The tuning readout that says whether
     * bands·rows is enough signature for the corpus before anyone trusts
     * the LSH recall at 100 TB — a fat error tail means more rows per
-    * band, not a lower threshold.
-    *
-    * Scale shape: identical to [[minhashLshPairs]] — pair generation
-    * carries bare (bucket, id) through the salted join; signatures join
-    * back once per side; the component-equality count is a codegen'd
-    * zip_with/aggregate over two fixed-length int arrays.
+    * band, not a lower threshold. Runs on [[bandKeyPairs]], like
+    * [[minhashLshPairs]].
     *
     * @return (id0, id1, n_eq, est_jaccard, jaccard, abs_err) per LSH
     *         candidate pair (unthresholded — the audit wants the
@@ -494,30 +514,8 @@ object Dedup {
       bands: Int = 8, rowsPerBand: Int = 4, seed: Int = 0xd5ed,
       aim: Long = PairAim): DataFrame = {
     val k = bands * rowsPerBand
-    val sig = RunScope.persist("minhash_acc",
-      minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed)
-        .withColumn("shh", hashedSet(col("sh"))))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
-    val pairs = saltedSelfPairs(ids, aim)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    val joined = pairs
-      .join(sig.select(col("doc").as("id0"), col("shh").as("sh0"),
-        col("vals").as("v0")), "id0")
-      .join(sig.select(col("doc").as("id1"), col("shh").as("sh1"),
-        col("vals").as("v1")), "id1")
-    val inter = graft.expr.sortedIntersectCount(col("sh0"), col("sh1"))
-      .cast("double")
-    val nEq = aggregate(
-      zip_with(col("v0"), col("v1"),
-        (a, b) => when(a === b, 1L).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-    joined.select(col("id0"), col("id1"), nEq.as("n_eq"),
-        round(nEq.cast("double") / k, 4).as("est_jaccard"),
-        round(inter / (size(col("sh0")) + size(col("sh1")) - inter), 4)
-          .as("jaccard"))
-      .withColumn("abs_err",
-        round(abs(col("est_jaccard") - col("jaccard")), 4))
+    componentAudit("minhash_acc", df, id, text, bands, rowsPerBand, seed, aim,
+      _ === _, "n_eq", "est_jaccard", nEq => round(nEq.cast("double") / k, 4))
   }
 
   /** b-bit MinHash estimator audit (Li & König, WWW 2010): store only the
@@ -531,13 +529,10 @@ object Dedup {
     * replays bit-for-bit in any engine; the unbiased correction can go
     * negative at tiny J — that is the estimator, reported raw.
     *
-    * Scale shape: identical to [[minhashAccuracy]] — pair generation
-    * carries bare (bucket, id) through the salted join, full signatures
-    * join back once per side, the b-bit compare is a codegen'd
-    * zip_with/aggregate with the mask folded into the comparison (the
-    * full values are dumped once; a production store would keep only the
-    * packed b-bit rows — the memory claim, not the compute path, is what
-    * changes).
+    * Same audit as [[minhashAccuracy]] with the mask folded into the
+    * component compare (the full values are dumped once; a production
+    * store would keep only the packed b-bit rows — the memory claim, not
+    * the compute path, is what changes).
     *
     * @return (id0, id1, n_eq_b, est_bbit, jaccard, abs_err) per LSH
     *         candidate pair. */
@@ -547,62 +542,46 @@ object Dedup {
     require(b >= 1 && b <= 16, s"b out of range: $b")
     val k = bands * rowsPerBand
     val mask = (1 << b) - 1
-    val sig = RunScope.persist("bbit_minhash",
-      minhashComponentSignatures(df, id, text, bands, rowsPerBand, seed)
-        .withColumn("shh", hashedSet(col("sh"))))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
-    val pairs = saltedSelfPairs(ids, aim)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    val joined = pairs
-      .join(sig.select(col("doc").as("id0"), col("shh").as("sh0"),
-        col("vals").as("v0")), "id0")
-      .join(sig.select(col("doc").as("id1"), col("shh").as("sh1"),
-        col("vals").as("v1")), "id1")
-    val inter = graft.expr.sortedIntersectCount(col("sh0"), col("sh1"))
-      .cast("double")
-    val nEqB = aggregate(
-      zip_with(col("v0"), col("v1"),
-        (x, y) => when(x.bitwiseAND(lit(mask)) === y.bitwiseAND(lit(mask)),
-          1L).otherwise(0L)),
-      lit(0L), (acc, x) => acc + x)
-    joined.select(col("id0"), col("id1"), nEqB.as("n_eq_b"),
-        round((nEqB * (1L << b) - k).cast("double") / (((1L << b) - 1) * k), 4)
-          .as("est_bbit"),
-        round(inter / (size(col("sh0")) + size(col("sh1")) - inter), 4)
-          .as("jaccard"))
-      .withColumn("abs_err",
-        round(abs(col("est_bbit") - col("jaccard")), 4))
+    componentAudit("bbit_minhash", df, id, text, bands, rowsPerBand, seed, aim,
+      (x, y) => x.bitwiseAND(lit(mask)) === y.bitwiseAND(lit(mask)),
+      "n_eq_b", "est_bbit",
+      nEqB => round((nEqB * (1L << b) - k).cast("double") / (((1L << b) - 1) * k), 4))
   }
 
   /** MinHash-LSH near-dup candidate pairs over word-bigram shingles:
-    * band-bucket join, then exact shingle-Jaccard confirm.
-    *
-    * Scale shape: the quadratic stage (bucket join + cross-bucket dedup)
-    * carries ONLY (bucket, id) — the shingle arrays never ride the
-    * pair-generation shuffle; they are joined back once per confirmed
-    * candidate side. Hot buckets fan out via [[saltedSelfPairs]]. Cost is
-    * O(bucket collisions), never O(n^2). */
+    * band-bucket join ([[bandKeyPairs]]: only (bucket, id) rides the
+    * salted pair generation; the hashed shingle sets join back once per
+    * candidate side), then exact shingle-Jaccard confirm. */
   def minhashLshPairs(df: DataFrame, id: String, text: String,
       threshold: Double, bands: Int = 8, rowsPerBand: Int = 4,
       seed: Int = 0xd5ed, aim: Long = PairAim): DataFrame = {
     val sig = RunScope.persist("minhash",
       minhashSignatures(df, id, text, bands, rowsPerBand, seed)
         .withColumn("shh", hashedSet(col("sh"))))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
-    val pairs = saltedSelfPairs(ids, aim)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    val inter = graft.expr.sortedIntersectCount(col("sh0"), col("sh1"))
-      .cast("double")
-    scoreAndFilter(
-      pairs
-        .join(sig.select(col("doc").as("id0"), col("shh").as("sh0")), "id0")
-        .join(sig.select(col("doc").as("id1"), col("shh").as("sh1")), "id1"),
-      "jaccard",
-      round(inter / (size(col("sh0")) + size(col("sh1")) - inter), 4), threshold,
-      "id0", "id1", "jaccard")
+    scoreAndFilter(bandKeyPairs(sig, "doc", "bks", Seq("shh"), aim),
+      "jaccard", setJaccard("shh0", "shh1"), threshold, "id0", "id1", "jaccard")
   }
+
+  /** Capped multiset expansion of a whitespace-token text: the n-th copy
+    * of a token (n ≤ tfCap) becomes the member "tok§(n-1)". */
+  private def tfExpand(t: String, tfCap: Int): Array[String] = {
+    val tf = new java.util.HashMap[String, Int]()
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    t.split(" ").foreach { tok =>
+      val n = tf.merge(tok, 1, (a, b) => a + b)
+      if (n <= tfCap) out += (tok + "§" + (n - 1))
+    }
+    out.toArray
+  }
+
+  /** (doc, mem, bks) weighted-minhash signature table: `mem` is the
+    * capped multiset expansion, `bks` its MinHash band keys. Public so
+    * the `wminhash_sig` oracle-aux dump replays the pairing independently. */
+  def weightedMinhashSignatures(df: DataFrame, id: String, text: String,
+      tfCap: Int = 8, bands: Int = 8, rowsPerBand: Int = 4,
+      seed: Int = 0xd5ed): DataFrame =
+    minhashTable(df, id, text, t => tfExpand(t, tfCap), "mem", bands,
+      rowsPerBand, seed).drop("vals")
 
   /** Weighted-MinHash LSH near-dup pairs — the SCALE PATH for
     * [[weightedJaccardPairs]] (which needs a caller-supplied block key):
@@ -615,56 +594,21 @@ object Dedup {
     * cap members, not 10^6) and is part of the documented semantics: the
     * CONFIRM score is the exact capped-tf weighted Jaccard.
     *
-    * Same scale shape as [[minhashLshPairs]]: signatures persisted once,
-    * pair generation carries bare (bucket, id), salted fan-out, exact
-    * min-sum confirm via the same sorted-long merge kernel over the
+    * Runs on [[bandKeyPairs]], like [[minhashLshPairs]]; the exact
+    * min-sum confirm is the same sorted-long merge kernel over the
     * expanded-member hash sets (member multiplicity is capped-tf by
     * construction, so set intersection == Σmin exactly). */
-  /** (doc, mem, bks) weighted-minhash signature table: `mem` is the
-    * capped multiset expansion, `bks` its MinHash band keys. Public so
-    * the driver's oracle-aux dump replays the pairing independently. */
-  def weightedMinhashSignatures(df: DataFrame, id: String, text: String,
-      tfCap: Int = 8, bands: Int = 8, rowsPerBand: Int = 4,
-      seed: Int = 0xd5ed): DataFrame = {
-    val expandUdf = udf((t: String) => {
-      val toks = (if (t == null) "" else t).split(" ")
-      val tf = new java.util.HashMap[String, Int]()
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      toks.foreach { tok =>
-        val n = tf.merge(tok, 1, (a, b) => a + b)
-        if (n <= tfCap) out += (tok + "§" + (n - 1))
-      }
-      out.toArray
-    })
-    val keysUdf = udf((sh: Seq[String]) =>
-      minhashBandKeys(if (sh == null) Array.empty else sh.toArray,
-        bands, rowsPerBand, seed))
-    spreadForUdf(df, col(id))
-      .select(col(id).as("doc"), expandUdf(col(text)).as("mem"))
-      .withColumn("bks", keysUdf(col("mem")))
-  }
-
   def weightedMinhashLshPairs(df: DataFrame, id: String, text: String,
       threshold: Double, tfCap: Int = 8, bands: Int = 8,
       rowsPerBand: Int = 4, seed: Int = 0xd5ed,
       aim: Long = PairAim): DataFrame = {
-    val thr = math.round(threshold * 1000000L)
     val sig = RunScope.persist("wminhash",
       weightedMinhashSignatures(df, id, text, tfCap, bands, rowsPerBand, seed)
         .withColumn("memh", hashedSet(col("mem")))
         .withColumn("sz", size(col("mem")).cast("long")))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"))
-    val pairs = saltedSelfPairs(ids, aim)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    val minSum = graft.expr.sortedIntersectCount(col("m0"), col("m1"))
-    wjThresholded(
-      pairs
-        .join(sig.select(col("doc").as("id0"), col("memh").as("m0"),
-          col("sz").as("sz0")), "id0")
-        .join(sig.select(col("doc").as("id1"), col("memh").as("m1"),
-          col("sz").as("sz1")), "id1"),
-      minSum, col("sz0"), col("sz1"), thr)
+    wjThresholded(bandKeyPairs(sig, "doc", "bks", Seq("memh", "sz"), aim),
+      graft.expr.sortedIntersectCount(col("memh0"), col("memh1")), col("sz0"), col("sz1"),
+      math.round(threshold * 1000000L))
   }
 
   /** INCREMENTAL MinHash-LSH dedup: near-dup pairs of (old ∪ new) that
@@ -681,11 +625,11 @@ object Dedup {
     *
     * Scale shape: signatures are computed for the union (the old side's
     * signatures would be served from the checkpoint store in production —
-    * the expensive stage here is pair generation, not signing); buckets
-    * containing NO new document are dropped by a semi join on bucket key
-    * BEFORE pair generation, so untouched buckets pay zero quadratic
-    * work; old×old pairs inside touched buckets die on a bare-int filter
-    * before the confirm joins. */
+    * the expensive stage here is pair generation, not signing);
+    * [[bandKeyPairs]] with the new-batch flag drops buckets containing NO
+    * new document before pair generation, so untouched buckets pay zero
+    * quadratic work, and old×old pairs inside touched buckets die before
+    * the confirm joins. */
   def minhashLshPairsDelta(oldDf: DataFrame, newDf: DataFrame, id: String,
       text: String, threshold: Double, bands: Int = 8, rowsPerBand: Int = 4,
       seed: Int = 0xd5ed, aim: Long = PairAim): DataFrame = {
@@ -704,22 +648,8 @@ object Dedup {
       minhashSignatures(all, "__id", "__t", bands, rowsPerBand, seed)
         .join(all.select(col("__id").as("doc"), col("nw")), "doc")
         .withColumn("shh", hashedSet(col("sh"))))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("doc").as("id"),
-      col("nw"))
-    val touched = ids.where(col("nw") === 1).select("bk").distinct()
-    val pairs = saltedSelfPairs(ids.join(touched, Seq("bk"), "left_semi"), aim)
-      .where(col("nw0") + col("nw1") >= 1)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    val inter = graft.expr.sortedIntersectCount(col("sh0"), col("sh1"))
-      .cast("double")
-    scoreAndFilter(
-      pairs
-        .join(sig.select(col("doc").as("id0"), col("shh").as("sh0")), "id0")
-        .join(sig.select(col("doc").as("id1"), col("shh").as("sh1")), "id1"),
-      "jaccard",
-      round(inter / (size(col("sh0")) + size(col("sh1")) - inter), 4),
-      threshold, "id0", "id1", "jaccard")
+    scoreAndFilter(bandKeyPairs(sig, "doc", "bks", Seq("shh"), aim, Some("nw")),
+      "jaccard", setJaccard("shh0", "shh1"), threshold, "id0", "id1", "jaccard")
   }
 
   /** 64-bit SimHash over word tokens (sign-sum of per-token hash bits). */
@@ -752,18 +682,22 @@ object Dedup {
     * Output: (id long, group_id long, is_canonical boolean). */
   def nearDupGroups(df: DataFrame, id: String, text: String,
       threshold: Double, bands: Int = 8, rowsPerBand: Int = 4,
-      seed: Int = 0xd5ed): DataFrame = {
-    val spark = df.sparkSession
+      seed: Int = 0xd5ed): DataFrame =
+    minLabelGroups(df.select(col(id).cast("long").as("id")),
+        minhashLshPairs(df, id, text, threshold, bands, rowsPerBand, seed))
+      .select(col("id"), col("grp").as("group_id"),
+        (col("id") === col("grp")).as("is_canonical"))
+
+  /** (id, grp) for each id of `ids`: grp is the min id of its connected
+    * component over the (id0, id1) `pairs`, an id in no pair its own
+    * group. */
+  private def minLabelGroups(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val spark = ids.sparkSession
     import spark.implicits._
-    val pairs = minhashLshPairs(df, id, text, threshold, bands, rowsPerBand, seed)
-      .select(col("id0").cast("long"), col("id1").cast("long"))
-      .as[(Long, Long)]
-    val comp = graft.cluster.ConnectedComponents.run(pairs)
-      .withColumnRenamed("node", "id")
-    df.select(col(id).cast("long").as("id"))
-      .join(comp, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("group_id"))
-      .withColumn("is_canonical", col("id") === col("group_id"))
+    val comp = graft.cluster.ConnectedComponents.run(pairs
+      .select(col("id0").cast("long"), col("id1").cast("long")).as[(Long, Long)])
+    ids.join(comp.withColumnRenamed("node", "id"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("grp"))
   }
 
   /** End-to-end corpus dedup FUNNEL — the composition a training-data
@@ -836,22 +770,20 @@ object Dedup {
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist, bucketed by
     * 16-bit bands (a pair within distance d <= 3 shares at least one of 4
-    * bands — pigeonhole), so no all-pairs comparison. Payload through the
-    * shuffle is one long per side. */
+    * bands — pigeonhole), so no all-pairs comparison. Runs on
+    * [[bandKeyPairs]]: a band shared by many exact copies fans out like
+    * any hot bucket, and the payload is one long per side. */
   def simhashPairs(df: DataFrame, id: String, text: String,
       maxDist: Int = 3): DataFrame = {
     require(maxDist <= 3, "4-band pigeonhole covers Hamming distance <= 3")
-    val sh = simhashSignatures(df, id, text)
-    val banded = sh.withColumn("band", explode(array((0 until 4).map(lit): _*)))
-      .withColumn("bkey", concat(col("band"), lit(":"),
-        expr("(sh >> (band * 16)) & 65535")))
-    val l = banded.select(col("bkey"), col("doc").as("id0"), col("sh").as("sh0"))
-    val r = banded.select(col("bkey"), col("doc").as("id1"), col("sh").as("sh1"))
-    l.join(r, "bkey").where(col("id0") < col("id1"))
-      .dropDuplicates("id0", "id1")
-      .withColumn("dist", bit_count(col("sh0").bitwiseXOR(col("sh1"))))
+    val sig = RunScope.persist("simhash",
+      simhashSignatures(df, id, text).withColumn("bks", array((0 until 4).map(b =>
+        concat(lit(s"$b:"), shiftright(col("sh"), b * 16).bitwiseAND(65535L))): _*)))
+    // scoreAndFilter's guard: dist is computed once (and stays nullable)
+    bandKeyPairs(sig, "doc", "bks", Seq("sh"), PairAim)
+      .select(col("id0"), col("id1"), when(monotonically_increasing_id() >= 0,
+        bit_count(col("sh0").bitwiseXOR(col("sh1")))).as("dist"))
       .where(col("dist") <= maxDist)
-      .select("id0", "id1", "dist")
   }
 
   /** Cosine similarity of two double-array columns (codegen'd dot/norm,
@@ -859,6 +791,11 @@ object Dedup {
     * oracle). */
   def cosine(a: Column, b: Column): Column =
     graft.expr.dotProduct(a, b) / (graft.expr.vectorNorm(a) * graft.expr.vectorNorm(b))
+
+  /** Rounded cosine of the v0/v1 vector columns from their norms
+    * nrm0/nrm1 (6 dp, the engine-exact convention). */
+  private def pairCosine: Column =
+    round(graft.expr.dotProduct(col("v0"), col("v1")) / (col("nrm0") * col("nrm1")), 6)
 
   /** EXACT embedding-cosine near-dup pairs above a threshold. An exact
     * threshold join over dense vectors is inherently all-pairs (cosine
@@ -872,32 +809,22 @@ object Dedup {
     val v = df.select(lit("1").as("bk"), col(id).as("id"),
       col(vec).cast("array<double>").as("v"))
       .withColumn("nrm", graft.expr.vectorNorm(col("v")))
-    scoreAndFilter(saltedSelfPairs(v, aim), "cos",
-      round(graft.expr.dotProduct(col("v0"), col("v1")) / (col("nrm0") * col("nrm1")), 6),
+    scoreAndFilter(saltedSelfPairs(v, aim), "cos", pairCosine,
       threshold, "id0", "id1", "cos")
   }
 
   /** APPROXIMATE embedding-cosine near-dup pairs — the 100-TB path: only
     * pairs sharing >= 1 sign-LSH bucket (graft.ann.Ann hyperplanes) are
-    * scored exactly. Candidate generation carries bare ids; vectors join
-    * back once per side. Recall vs the exact join is measured in
-    * TrainingOpsSpec. */
+    * scored exactly ([[bandKeyPairs]]: candidate generation carries bare
+    * ids; vectors join back once per side). Recall vs the exact join is
+    * measured in TrainingOpsSpec. */
   def embeddingCosinePairsApprox(df: DataFrame, id: String, vec: String,
       threshold: Double, tables: Int = 16, bits: Int = 6, dim: Int = 64,
       seed: Long = 0xa11L, aim: Long = PairAim): DataFrame = {
     val sig = RunScope.persist("cosine_lsh",
       graft.ann.Ann.signatures(df, id, vec, tables, bits, dim, seed))
-    val ids = sig.select(explode(col("bks")).as("bk"), col("vid").as("id"))
-    val pairs = saltedSelfPairs(ids, aim)
-      .select("id0", "id1")
-      .dropDuplicates("id0", "id1")
-    scoreAndFilter(
-      pairs
-        .join(sig.select(col("vid").as("id0"), col("v").as("v0"), col("nrm").as("nrm0")), "id0")
-        .join(sig.select(col("vid").as("id1"), col("v").as("v1"), col("nrm").as("nrm1")), "id1"),
-      "cos",
-      round(graft.expr.dotProduct(col("v0"), col("v1")) / (col("nrm0") * col("nrm1")), 6),
-      threshold, "id0", "id1", "cos")
+    scoreAndFilter(bandKeyPairs(sig, "vid", "bks", Seq("v", "nrm"), aim),
+      "cos", pairCosine, threshold, "id0", "id1", "cos")
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -923,22 +850,25 @@ object Dedup {
     * unbounded collects. */
   def semanticDedup(assignments: DataFrame, threshold: Double,
       aim: Long = PairAim): DataFrame = {
-    val spark = assignments.sparkSession
-    import spark.implicits._
     val v = assignments.select(col("list").cast("string").as("bk"),
       col("vid").as("id"), col("v"))
     val pairs = scoreAndFilter(saltedSelfPairs(v, aim), "cos",
       round(graft.expr.dotProduct(col("v0"), col("v1")), 6),
       threshold, "id0", "id1")
-    val comps = graft.cluster.ConnectedComponents.run(
-      pairs.select(col("id0").cast("long"), col("id1").cast("long"))
-        .as[(Long, Long)])
-    assignments.select(col("vid"))
-      .join(comps.withColumnRenamed("node", "vid"), Seq("vid"), "left")
-      .select(col("vid"),
-        coalesce(col("component"), col("vid")).as("grp"),
-        (coalesce(col("component"), col("vid")) === col("vid")).as("keep"))
+    minLabelGroups(assignments.select(col("vid").as("id")), pairs)
+      .select(col("id").as("vid"), col("grp"), (col("grp") === col("id")).as("keep"))
   }
+
+  /** (doc, h): the md5 of every `window`-char window of each document,
+    * every `stride` chars, generated map-side as one transform+explode
+    * (no join). Documents shorter than one window have none. */
+  private def md5Windows(df: DataFrame, id: String, text: String,
+      window: Int, stride: Int): DataFrame =
+    df.where(length(col(text)) >= window)
+      .select(col(id).as("doc"),
+        explode(transform(
+          sequence(lit(1), length(col(text)) - window + 1, lit(stride)),
+          p => md5(col(text).substr(p, lit(window)).cast("binary")))).as("h"))
 
   /** EXACT substring-duplication detector (the span-level complement of
     * document near-dedup, after Lee et al. 2022's "Deduplicating Training
@@ -948,9 +878,9 @@ object Dedup {
     * document reports its duplicated-window fraction — the
     * boilerplate/copy-paste signal a corpus cleaner thresholds on.
     *
-    * Scale shape: windows are generated map-side as a single
-    * transform+explode (no join), counted with one hash-aggregate on the
-    * window hash (partial map-side combine), and only DUPLICATED hashes
+    * Scale shape: [[md5Windows]] (map-side), counted with one
+    * hash-aggregate on the window hash (partial map-side combine), and
+    * only DUPLICATED hashes
     * flow into the membership join back to windows. Window hashing uses
     * md5 here so DuckDB can replay it; swap [[org.apache.spark.sql.functions.xxhash64]]
     * in for 8-byte keys at the 100-TB scale — the plan is unchanged.
@@ -958,12 +888,7 @@ object Dedup {
   def duplicatedSpans(df: DataFrame, id: String, text: String,
       window: Int = 40, stride: Int = 20, minDocs: Int = 2): DataFrame = {
     require(window > 0 && stride > 0 && minDocs >= 2)
-    val windows = df
-      .where(length(col(text)) >= window)
-      .select(col(id).as("doc"),
-        explode(transform(
-          sequence(lit(1), length(col(text)) - window + 1, lit(stride)),
-          p => md5(col(text).substr(p, lit(window)).cast("binary")))).as("h"))
+    val windows = md5Windows(df, id, text, window, stride)
     val dupHashes = windows.groupBy("h")
       .agg(count_distinct(col("doc")).as("nd"))
       .where(col("nd") >= minDocs)
@@ -1002,7 +927,6 @@ object Dedup {
   def winnowingFingerprints(df: DataFrame, id: String, text: String,
       k: Int = 12, w: Int = 8): DataFrame = {
     require(k > 0 && w > 1, s"need k > 0, w > 1: k=$k w=$w")
-    val W = org.apache.spark.sql.expressions.Window
     val grams = df
       .where(length(col(text)) >= k + w - 1)
       .select(col(id).as("doc"),
@@ -1011,9 +935,9 @@ object Dedup {
       .select(col("doc"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("h"))
     val winMins = grams
-      .withColumn("n", max(col("pos")).over(W.partitionBy("doc")))
+      .withColumn("n", max(col("pos")).over(Window.partitionBy("doc")))
       .withColumn("wmin", min(col("h")).over(
-        W.partitionBy("doc").orderBy("pos").rowsBetween(0, w - 1)))
+        Window.partitionBy("doc").orderBy("pos").rowsBetween(0, w - 1)))
       .where(col("pos") <= col("n") - w + 1)
       .select(col("doc"), col("pos").as("i"), col("wmin"))
     winMins.as("w").join(grams.as("g"),
@@ -1034,19 +958,14 @@ object Dedup {
     * first occurrences while dropping echoes (and, run with a corpus/
     * benchmark id split, the train-test contamination direction check).
     *
-    * Scale shape: same map-side window explode as [[duplicatedSpans]],
-    * one (hash → min doc) hash-agg, one equi-join back on the hash
+    * Scale shape: the same [[md5Windows]] as [[duplicatedSpans]], one
+    * (hash → min doc) hash-agg, one equi-join back on the hash
     * (partition-aligned with the agg's shuffle), one per-doc agg — no
     * windows over tokens, no pair enumeration. */
   def ngramNovelty(df: DataFrame, id: String, text: String,
       window: Int = 40, stride: Int = 20): DataFrame = {
     require(window > 0 && stride > 0)
-    val windows = df
-      .where(length(col(text)) >= window)
-      .select(col(id).as("doc"),
-        explode(transform(
-          sequence(lit(1), length(col(text)) - window + 1, lit(stride)),
-          p => md5(col(text).substr(p, lit(window)).cast("binary")))).as("h"))
+    val windows = md5Windows(df, id, text, window, stride)
     val firstDoc = windows.groupBy("h").agg(min(col("doc")).as("first_doc"))
     windows.join(firstDoc, Seq("h"))
       .groupBy("doc")

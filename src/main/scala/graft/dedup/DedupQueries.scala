@@ -24,6 +24,107 @@ object DedupQueries extends QueryFamily {
       Dedup.simhashSignatures(docs(s, dir), "doc_id", "text")),
   )
 
+  /** Oracle CTE `b`: first-token block key, id and `toks` per document. */
+  private def firstTokenBlocks(toks: String): String =
+    s"""b AS (
+           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
+                  $toks FROM documents)"""
+  private val distinctToks = "list_distinct(str_split(text, ' ')) AS toks"
+  /** The block self-join over `b`, one orientation per pair. */
+  private val blockSelfJoin = "FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id"
+
+  /** Rounded list Jaccard of two list columns (the engine's 4-dp value). */
+  private def listJaccardSql(a: String, b: String): String =
+    s"""round(CAST(len(list_intersect($a, $b)) AS DOUBLE)
+                    / (len($a) + len($b) - len(list_intersect($a, $b))), 4)"""
+
+  /** Signature-dump self-join: pairs of `m` rows sharing a band key. */
+  private def bandKeyJoin(m: String): String =
+    s"""FROM $m a JOIN $m b ON a.doc < b.doc
+             AND len(list_intersect(a.bks, b.bks)) > 0"""
+
+  private val minhashSigCte =
+    s"m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet')"
+
+  /** MinHash pairing replayed from the minhash_sig dump: `p` holds every
+    * candidate (shares >= 1 band key) with its shingle Jaccard. */
+  private val minhashJaccardCtes =
+    s"""$minhashSigCte,
+         p AS (
+           SELECT a.doc AS id0, b.doc AS id1,
+                  ${listJaccardSql("a.sh", "b.sh")} AS jaccard
+           ${bandKeyJoin("m")})"""
+
+  /** `p`: the confirmed (Jaccard >= 0.5) band-key pairs of the rows `m`. */
+  private val minhashPairCte =
+    s"""p AS (
+           SELECT a.doc AS id0, b.doc AS id1
+           ${bandKeyJoin("m")}
+           WHERE ${listJaccardSql("a.sh", "b.sh")}
+             >= 0.5)"""
+
+  /** Min-label closure of the pair CTE `p` over the nodes `seed`
+    * selects: `g` (id, group_id = min reachable id), which is the CC
+    * solver's component label. Needs WITH RECURSIVE. */
+  private def minLabelClosure(seed: String): String =
+    s"""e AS (SELECT id0 AS u, id1 AS v FROM p
+               UNION SELECT id1, id0 FROM p),
+         reach(id, r) AS (
+           $seed
+           UNION
+           SELECT e.v, reach.r FROM e JOIN reach ON e.u = reach.id),
+         g AS (SELECT id, min(r) AS group_id FROM reach GROUP BY id)"""
+
+  /** Near-dup groups of every document, replayed from the minhash_sig
+    * dump: CTEs m, p, e, reach and g (id, group_id); the caller writes
+    * WITH RECURSIVE. */
+  val nearDupGroupCtes: String =
+    s"""$minhashSigCte,
+         $minhashPairCte,
+         ${minLabelClosure("SELECT doc_id, doc_id FROM documents")}"""
+
+  /** CTEs `d` and `w`: the md5 of every 40-char window, every 20 chars. */
+  private val md5WindowCtes =
+    """d AS (SELECT doc_id, text, length(text) AS len FROM documents
+                    WHERE length(text) >= 40),
+         w AS (SELECT doc_id, md5(substring(text, CAST(p AS INT), 40)) AS h
+               FROM d, unnest(generate_series(1, len - 40 + 1, 20)) AS t(p))"""
+
+  private def firstToken = element_at(split(col("text"), " "), 1)
+  private def byPair(df: DataFrame) = df.orderBy(col("id0"), col("id1"))
+
+  private val minhashAccSig = s"$OracleAuxDir/minhash_acc_sig/*.parquet"
+
+  /** Estimator-audit replay over band-key candidate pairs of the
+    * minhash_acc_sig rows `m` (a CTE that `ctes` declares, or the dump
+    * itself): `n` counts the 32 dumped components for which `eq` holds,
+    * `est` = `estimate`, next to the shingle Jaccard and the error. */
+  private def componentAuditSql(ctes: String, m: String, eq: String,
+      n: String, estimate: String, est: String): String =
+    s"""WITH ${ctes}p AS (
+           SELECT a.doc AS id0, b.doc AS id1,
+                  CAST(list_sum(list_transform(range(1, 33),
+                    i -> CASE WHEN $eq
+                         THEN 1 ELSE 0 END)) AS BIGINT) AS $n,
+                  ${listJaccardSql("a.sh", "b.sh")} AS jaccard
+           ${bandKeyJoin(m)}),
+         q AS (SELECT id0, id1, $n,
+                      $estimate AS $est,
+                      jaccard
+               FROM p)
+         SELECT id0, id1, $n, $est, jaccard,
+                round(abs($est - jaccard), 4) AS abs_err
+         FROM q"""
+
+  /** Thresholded first-token-blocked Jaccard over the token lists `toks`. */
+  private def blockedJaccardSql(toks: String): String =
+    s"""WITH ${firstTokenBlocks(toks)},
+         p AS (
+           SELECT l.id AS id0, r.id AS id1,
+                  ${listJaccardSql("l.toks", "r.toks")} AS jaccard
+           $blockSelfJoin)
+         SELECT id0, id1, jaccard FROM p WHERE jaccard >= 0.5"""
+
   val queries: Seq[Query] = Seq(
     // exact dedup (hash-groupBy) on a 3-token prefix key
     Query("q_dedup_exact", (s, dir) =>
@@ -35,38 +136,24 @@ object DedupQueries extends QueryFamily {
          FROM documents GROUP BY 1"""),
     // n-gram Jaccard near-dup pairs (blocked on first token)
     Query("q_jaccard_pairs", (s, dir) =>
-      Dedup.jaccardPairs(docs(s, dir), "doc_id", "text",
-        element_at(split(col("text"), " "), 1), threshold = 0.5)
-        .orderBy(col("id0"), col("id1")),
-      """WITH b AS (
-           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
-                  list_distinct(str_split(text, ' ')) AS toks FROM documents),
-         p AS (
-           SELECT l.id AS id0, r.id AS id1,
-                  round(CAST(len(list_intersect(l.toks, r.toks)) AS DOUBLE)
-                    / (len(l.toks) + len(r.toks) - len(list_intersect(l.toks, r.toks))),
-                    4) AS jaccard
-           FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id)
-         SELECT id0, id1, jaccard FROM p WHERE jaccard >= 0.5"""),
+      byPair(Dedup.jaccardPairs(docs(s, dir), "doc_id", "text", firstToken,
+        threshold = 0.5)),
+      blockedJaccardSql(distinctToks)),
     // Tversky-index pairs (asymmetric Jaccard/Dice generalization,
     // alpha=0.8 / beta=0.2): prototype-side deletions cost 4x additions
     // — the "is B a variant of A" orientation; exact tenths arithmetic
     Query("q_tversky", (s, dir) =>
-      Dedup.tverskyPairs(docs(s, dir), "doc_id", "text",
-        element_at(split(col("text"), " "), 1), alphaTenths = 8,
-        betaTenths = 2, threshold = 0.75)
-        .orderBy(col("id0"), col("id1")),
+      byPair(Dedup.tverskyPairs(docs(s, dir), "doc_id", "text", firstToken,
+        alphaTenths = 8, betaTenths = 2, threshold = 0.75)),
       // same block join; Tversky denominator in exact tenths, one double
       // divide, 4-dp round before the threshold compare
-      """WITH b AS (
-           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
-                  list_distinct(str_split(text, ' ')) AS toks FROM documents),
+      s"""WITH ${firstTokenBlocks(distinctToks)},
          p AS (
            SELECT l.id AS id0, r.id AS id1,
                   CAST(len(list_intersect(l.toks, r.toks)) AS BIGINT) AS inter,
                   CAST(len(l.toks) AS INT) AS sz0,
                   CAST(len(r.toks) AS INT) AS sz1
-           FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id),
+           $blockSelfJoin),
          s AS (SELECT id0, id1, inter, sz0, sz1,
                       round(10.0 * inter / (10 * inter + 8 * (sz0 - inter)
                         + 2 * (sz1 - inter)), 4) AS tversky
@@ -77,8 +164,8 @@ object DedupQueries extends QueryFamily {
     // family): no blocking key, no LSH recall loss — the df-ordered
     // prefix IS the join key; all cuts are integer rationals
     Query("q_prefix_join", (s, dir) =>
-      Dedup.prefixFilterPairs(docs(s, dir), "doc_id", "text",
-        threshold = 0.7).orderBy(col("id0"), col("id1")),
+      byPair(Dedup.prefixFilterPairs(docs(s, dir), "doc_id", "text",
+        threshold = 0.7)),
       // full AllPairs/PPJoin replay: df-ordered prefixes, length filter,
       // exact-rational accept — every cut an integer cross-multiply
       """WITH toks AS (
@@ -114,41 +201,27 @@ object DedupQueries extends QueryFamily {
     // character-trigram Jaccard (one-pass codegen'd gram signature +
     // merge-scan confirm; same salted pairing)
     Query("q_jaccard_char3", (s, dir) =>
-      Dedup.jaccardPairsHashed(docs(s, dir), "doc_id",
-        graft.expr.hashedCharNgrams(col("text"), 3),
-        element_at(split(col("text"), " "), 1), threshold = 0.5)
-        .orderBy(col("id0"), col("id1")),
-      """WITH b AS (
-           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
-                  CASE WHEN length(text) < 3 THEN [text]
+      byPair(Dedup.jaccardPairsHashed(docs(s, dir), "doc_id",
+        graft.expr.hashedCharNgrams(col("text"), 3), firstToken,
+        threshold = 0.5)),
+      blockedJaccardSql("""CASE WHEN length(text) < 3 THEN [text]
                        ELSE list_distinct(list_transform(
                          range(1, length(text) - 1), i -> substr(text, i, 3)))
-                  END AS toks
-           FROM documents),
-         p AS (
-           SELECT l.id AS id0, r.id AS id1,
-                  round(CAST(len(list_intersect(l.toks, r.toks)) AS DOUBLE)
-                    / (len(l.toks) + len(r.toks) - len(list_intersect(l.toks, r.toks))),
-                    4) AS jaccard
-           FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id)
-         SELECT id0, id1, jaccard FROM p WHERE jaccard >= 0.5"""),
+                  END AS toks""")),
     // weighted (bag) Jaccard: tf-profile min/max overlap — discriminates
     // where token-set Jaccard saturates on the small-vocab corpus
     Query("q_weighted_jaccard", (s, dir) =>
-      Dedup.weightedJaccardPairs(docs(s, dir), "doc_id", "text",
-        element_at(split(col("text"), " "), 1), threshold = 0.5)
-        .orderBy(col("id0"), col("id1")),
+      byPair(Dedup.weightedJaccardPairs(docs(s, dir), "doc_id", "text",
+        firstToken, threshold = 0.5)),
       // bag-jaccard replay: per-doc tf via unnest+count, min-sum over the
       // pair's shared terms, den from the Σmax = totA+totB−Σmin identity;
       // the threshold is the integer cross-multiply, never the double
-      """WITH b AS (
-           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
-                  str_split(text, ' ') AS ts FROM documents),
+      s"""WITH ${firstTokenBlocks("str_split(text, ' ') AS ts")},
          tfc AS (SELECT id, term, count(*) AS tf
                  FROM (SELECT id, unnest(ts) AS term FROM b) GROUP BY 1, 2),
          tot AS (SELECT id, CAST(len(ts) AS BIGINT) AS tot FROM b),
          p AS (SELECT l.id AS id0, r.id AS id1
-               FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id),
+               $blockSelfJoin),
          ms AS (SELECT p.id0, p.id1,
                        CAST(SUM(LEAST(a.tf, c.tf)) AS BIGINT) AS wj_num
                 FROM p JOIN tfc a ON a.id = p.id0
@@ -164,19 +237,14 @@ object DedupQueries extends QueryFamily {
     // containment near-dup pairs (|A∩B|/min(|A|,|B|) — the subset/quote
     // duplication Jaccard misses; same hashed-set merge-scan kernel)
     Query("q_containment", (s, dir) =>
-      Dedup.containmentPairsHashed(docs(s, dir), "doc_id",
-        Dedup.hashedSet(split(col("text"), " ")),
-        element_at(split(col("text"), " "), 1), threshold = 0.6)
-        .orderBy(col("id0"), col("id1")),
-      """WITH b AS (
-           SELECT str_split(text, ' ')[1] AS bk, doc_id AS id,
-                  list_distinct(str_split(text, ' ')) AS toks
-           FROM documents),
+      byPair(Dedup.containmentPairsHashed(docs(s, dir), "doc_id",
+        Dedup.hashedSet(split(col("text"), " ")), firstToken, threshold = 0.6)),
+      s"""WITH ${firstTokenBlocks(distinctToks)},
          p AS (
            SELECT l.id AS id0, r.id AS id1,
                   round(CAST(len(list_intersect(l.toks, r.toks)) AS DOUBLE)
                     / least(len(l.toks), len(r.toks)), 4) AS containment
-           FROM b l JOIN b r ON l.bk = r.bk AND l.id < r.id)
+           $blockSelfJoin)
          SELECT id0, id1, containment FROM p WHERE containment >= 0.6"""),
     // C1 semantics, SQL-replayable form: Dice coefficient over distinct
     // token SETS (2|A∩B|/(|A|+|B|)) thresholded within blocks — the same
@@ -191,11 +259,10 @@ object DedupQueries extends QueryFamily {
         col("entity_id").as("id1"), col("toks").as("tk1"))
       val inter = graft.expr.sortedIntersectCount(col("tk0"), col("tk1"))
         .cast("double")
-      Dedup.scoreAndFilter(
+      byPair(Dedup.scoreAndFilter(
         l.join(r, "block_key").where(col("dp0") < col("dp1")),
         "dice", round(lit(2.0) * inter / (size(col("tk0")) + size(col("tk1"))), 4),
-        0.7, "id0", "id1", "dice")
-        .orderBy(col("id0"), col("id1"))
+        0.7, "id0", "id1", "dice"))
     },
       """WITH b AS (
            SELECT str_split(text, ' ')[1] AS bk, CAST(doc_id % 2 AS INT) AS dp,
@@ -234,89 +301,44 @@ object DedupQueries extends QueryFamily {
                 count(*) - count(DISTINCT d.k) AS n_removable
          FROM d JOIN g ON g.k = d.k"""),
     Query("q_minhash_pairs", (s, dir) =>
-      Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text", threshold = 0.5)
-        .orderBy(col("id0"), col("id1")),
+      byPair(Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text", threshold = 0.5)),
       // MinHash-LSH pairing replayed from the minhash_sig dump: candidates
       // share >= 1 band key, confirm = exact shingle Jaccard
-      s"""WITH m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1,
-                  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0)
+      s"""WITH $minhashJaccardCtes
          SELECT id0, id1, jaccard FROM p WHERE jaccard >= 0.5"""),
     // estimator-accuracy audit: k-component MinHash estimate vs exact
-    // shingle Jaccard per LSH candidate (unthresholded — misses matter)
+    // shingle Jaccard per LSH candidate (unthresholded — misses matter);
+    // the replay takes n_eq from positional equality of the dumped vals
     Query("q_minhash_acc", (s, dir) =>
-      Dedup.minhashAccuracy(docs(s, dir), "doc_id", "text")
-        .orderBy(col("id0"), col("id1")),
-      // estimator-accuracy replay: same pairing as q_minhash_pairs, n_eq
-      // from positional component equality over the dumped vals arrays
-      s"""WITH m AS (SELECT doc, sh, vals, bks
-                     FROM '$OracleAuxDir/minhash_acc_sig/*.parquet'),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1,
-                  CAST(list_sum(list_transform(range(1, 33),
-                    i -> CASE WHEN a.vals[i] = b.vals[i]
-                         THEN 1 ELSE 0 END)) AS BIGINT) AS n_eq,
-                  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                    / (len(a.sh) + len(b.sh)
-                       - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0),
-         q AS (SELECT id0, id1, n_eq,
-                      round(CAST(n_eq AS DOUBLE) / 32, 4) AS est_jaccard,
-                      jaccard
-               FROM p)
-         SELECT id0, id1, n_eq, est_jaccard, jaccard,
-                round(abs(est_jaccard - jaccard), 4) AS abs_err
-         FROM q"""),
-    // b-bit minhash (Li & König 2010): 4-bit components, collision
-    // estimate bias-corrected by (c - 2^-b)/(1 - 2^-b) in exact integers
-    // up to one final divide; audited against the exact shingle Jaccard
+      byPair(Dedup.minhashAccuracy(docs(s, dir), "doc_id", "text")),
+      componentAuditSql(s"""m AS (SELECT doc, sh, vals, bks
+                     FROM '$minhashAccSig'),
+         """, "m", "a.vals[i] = b.vals[i]", "n_eq",
+        "round(CAST(n_eq AS DOUBLE) / 32, 4)", "est_jaccard")),
+    // b-bit minhash (Li & König 2010): 4-bit components audited against
+    // the exact shingle Jaccard. The replay compares components under the
+    // low-4-bit mask (& 15 — two's complement in both engines), then the
+    // exact-integer bias correction (16·n_eq_b − 32)/480 for k=32, b=4
+    // (can go negative at tiny J: that IS the unbiased estimator)
     Query("q_bbit_minhash", (s, dir) =>
-      Dedup.bbitMinhashAccuracy(docs(s, dir), "doc_id", "text")
-        .orderBy(col("id0"), col("id1")),
-      // b-bit replay off the same component dump: components equal under
-      // the low-4-bit mask (& 15 — two's complement in both engines), then
-      // the exact-integer bias correction (16·n_eq_b − 32)/480 for k=32,
-      // b=4 (can go negative at tiny J: that IS the unbiased estimator)
-      s"""WITH p AS (
-           SELECT a.doc AS id0, b.doc AS id1,
-                  CAST(list_sum(list_transform(range(1, 33),
-                    i -> CASE WHEN (a.vals[i] & 15) = (b.vals[i] & 15)
-                         THEN 1 ELSE 0 END)) AS BIGINT) AS n_eq_b,
-                  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                    / (len(a.sh) + len(b.sh)
-                       - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-           FROM '$OracleAuxDir/minhash_acc_sig/*.parquet' a
-           JOIN '$OracleAuxDir/minhash_acc_sig/*.parquet' b
-             ON a.doc < b.doc AND len(list_intersect(a.bks, b.bks)) > 0),
-         q AS (SELECT id0, id1, n_eq_b,
-                      round(CAST(n_eq_b * 16 - 32 AS DOUBLE) / 480, 4)
-                        AS est_bbit,
-                      jaccard
-               FROM p)
-         SELECT id0, id1, n_eq_b, est_bbit, jaccard,
-                round(abs(est_bbit - jaccard), 4) AS abs_err
-         FROM q"""),
+      byPair(Dedup.bbitMinhashAccuracy(docs(s, dir), "doc_id", "text")),
+      componentAuditSql("", s"'$minhashAccSig'",
+        "(a.vals[i] & 15) = (b.vals[i] & 15)", "n_eq_b",
+        "round(CAST(n_eq_b * 16 - 32 AS DOUBLE) / 480, 4)", "est_bbit")),
     // weighted-minhash LSH: bag-similarity blocking WITHOUT a block key
-    // (multiset-expansion minhash); exact capped-tf confirm
+    // (multiset-expansion minhash); exact capped-tf confirm. In the
+    // wminhash_sig replay mem entries are unique ("tok§i"), so
+    // list_intersect IS the capped Σmin and the integer cut replays exactly
     Query("q_wjaccard_lsh", (s, dir) =>
-      Dedup.weightedMinhashLshPairs(docs(s, dir), "doc_id", "text",
-        threshold = 0.7).orderBy(col("id0"), col("id1")),
-      // weighted-LSH replay from the wminhash_sig dump: candidates share a
-      // band key; mem entries are unique ("tok§i"), so list_intersect IS
-      // the capped Σmin and the integer cut replays exactly
+      byPair(Dedup.weightedMinhashLshPairs(docs(s, dir), "doc_id", "text",
+        threshold = 0.7)),
       s"""WITH m AS (SELECT doc, mem, bks FROM '$OracleAuxDir/wminhash_sig/*.parquet'),
          p AS (
            SELECT a.doc AS id0, b.doc AS id1,
                   CAST(len(list_intersect(a.mem, b.mem)) AS INTEGER) AS wj_num,
                   CAST(len(a.mem) + len(b.mem)
                        - len(list_intersect(a.mem, b.mem)) AS BIGINT) AS wj_den
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0)
+           ${bandKeyJoin("m")})
          SELECT id0, id1, wj_num, wj_den,
                 round(CAST(wj_num AS DOUBLE) / wj_den, 4) AS wjaccard
          FROM p WHERE wj_num * 1000000 >= 700000 * wj_den"""),
@@ -326,25 +348,14 @@ object DedupQueries extends QueryFamily {
     // delta contract, same shape as q_link_delta)
     Query("q_minhash_delta", (s, dir) => {
       val d = docs(s, dir)
-      Dedup.minhashLshPairsDelta(d.where(col("doc_id") % 10 =!= 7),
-          d.where(col("doc_id") % 10 === 7), "doc_id", "text",
-          threshold = 0.5)
-        .orderBy(col("id0"), col("id1"))
+      byPair(Dedup.minhashLshPairsDelta(d.where(col("doc_id") % 10 =!= 7),
+        d.where(col("doc_id") % 10 === 7), "doc_id", "text", threshold = 0.5))
     },
-      // the delta contract stated as SQL: the full pairing replay
-      // restricted to pairs with >=1 endpoint in the new-batch slice
-      s"""WITH m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1,
-                  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0)
+      s"""WITH $minhashJaccardCtes
          SELECT id0, id1, jaccard FROM p
          WHERE jaccard >= 0.5 AND (id0 % 10 = 7 OR id1 % 10 = 7)"""),
     Query("q_simhash_pairs", (s, dir) =>
-      Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxDist = 3)
-        .orderBy(col("id0"), col("id1")),
+      byPair(Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxDist = 3)),
       // SimHash pairing replayed from the simhash_sig dump (4-band
       // pigeonhole is exact for maxDist<=3, so banded == brute force)
       s"""WITH s AS (SELECT doc, sh FROM '$OracleAuxDir/simhash_sig/*.parquet')
@@ -358,6 +369,10 @@ object DedupQueries extends QueryFamily {
     // construction and recall is the banding coverage — the number a
     // 100-TB dedup run tunes bands/rows against). Restricted to even
     // doc ids so the oracle's O(n^2) exact replay stays cheap at sf0.01.
+    // The replay's one all-pairs table over the even-doc signatures
+    // yields both sides (exact = jaccard >= t, LSH = exact AND >=1 shared
+    // band key); LSH is a subset of exact by construction, as the Spark
+    // full-outer join computes, so tp == n_lsh is faithful, not a shortcut.
     Query("q_neardup_eval", (s, dir) => {
       val sub = docs(s, dir).where(col("doc_id") % 2 === 0)
       val sig = Dedup.minhashSignatures(sub, "doc_id", "text")
@@ -377,17 +392,10 @@ object DedupQueries extends QueryFamily {
           when(col("n_exact") > 0, col("tp") / col("n_exact"))
             .otherwise(lit(0.0)).as("recall"))
     },
-      // LSH-eval replay: one all-pairs table over the even-doc signatures
-      // yields both sides — exact = jaccard >= t, LSH = exact AND >=1
-      // shared band key — so tp/precision/recall are filtered counts. The
-      // LSH set is a subset of exact by construction (same confirm
-      // threshold), which is exactly what the Spark full-outer-join
-      // computes, so tp == n_lsh is the faithful replay, not a shortcut.
       s"""WITH m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'
                      WHERE doc % 2 = 0),
          jp AS (
-           SELECT round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS j,
+           SELECT ${listJaccardSql("a.sh", "b.sh")} AS j,
                   len(list_intersect(a.bks, b.bks)) > 0 AS cand
            FROM m a JOIN m b ON a.doc < b.doc),
          ag AS (SELECT CAST(count(*) AS BIGINT) AS n_exact,
@@ -403,42 +411,23 @@ object DedupQueries extends QueryFamily {
     // near-dup group resolution: LSH pairs -> connected components ->
     // canonical representative; the oracle replays the pairing from the
     // minhash_sig dump (same params as q_minhash_pairs) and the
-    // transitive closure with a recursive CTE
+    // transitive closure with a recursive CTE (min reachable id per node
+    // == the CC solver's component label, which is also min member id)
     Query("q_neardup_groups", (s, dir) =>
       Dedup.nearDupGroups(docs(s, dir), "doc_id", "text", threshold = 0.5)
         .orderBy(col("id")),
-      // group resolution: same pairing replay as q_minhash_pairs, then the
-      // transitive closure as a recursive CTE (min reachable id per node ==
-      // the CC solver's component label, which is also min member id)
       s"""WITH RECURSIVE
-         m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0
-           WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4)
-             >= 0.5),
-         e AS (SELECT id0 AS u, id1 AS v FROM p
-               UNION SELECT id1, id0 FROM p),
-         reach(id, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT e.v, reach.r FROM e JOIN reach ON e.u = reach.id),
-         g AS (SELECT id, min(r) AS group_id FROM reach GROUP BY id)
+         $nearDupGroupCtes
          SELECT id, group_id, (id = group_id) AS is_canonical FROM g"""),
     // the staged dedup funnel (raw -> exact -> LSH near-dup) with doc +
-    // token counts per stage; the oracle replays exact survivorship from
-    // the text bytes and the near-dup stage from the signature dump
+    // token counts per stage; the oracle replays exact survivors (min doc
+    // per md5(text)) and the near-dup stage from the signature dump
     // restricted to exact survivors (signatures are per-doc, so subset
-    // pairing == full pairing filtered to survivor endpoints)
+    // pairing == full pairing filtered to survivor endpoints), min-label
+    // closure, keep component minima; three unioned stage rows
     Query("q_dedup_funnel", (s, dir) =>
       Dedup.dedupFunnel(docs(s, dir), "doc_id", "text", threshold = 0.5)
         .orderBy(col("stage_idx")),
-      // funnel replay: exact survivors = min doc per md5(text); near-dup
-      // stage = the minhash_sig pairing restricted to exact survivors
-      // (per-doc signatures make subset pairing == filtered full pairing),
-      // min-label closure, keep component minima; three unioned stage rows
       s"""WITH RECURSIVE
          d AS (SELECT doc_id AS id, text,
                       CAST(len(str_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -447,20 +436,8 @@ object DedupQueries extends QueryFamily {
          es AS (SELECT d.* FROM d JOIN ek ON d.id = ek.id),
          m0 AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'),
          m AS (SELECT m0.* FROM m0 JOIN es ON m0.doc = es.id),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0
-           WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4)
-             >= 0.5),
-         e AS (SELECT id0 AS u, id1 AS v FROM p
-               UNION SELECT id1, id0 FROM p),
-         reach(id, r) AS (
-           SELECT id, id FROM es
-           UNION
-           SELECT e.v, reach.r FROM e JOIN reach ON e.u = reach.id),
-         g AS (SELECT id, min(r) AS group_id FROM reach GROUP BY id),
+         $minhashPairCte,
+         ${minLabelClosure("SELECT id, id FROM es")},
          ns AS (SELECT es.* FROM es JOIN g ON es.id = g.id
                 WHERE g.id = g.group_id)
          SELECT 0 AS stage_idx, 'raw' AS stage,
@@ -472,13 +449,6 @@ object DedupQueries extends QueryFamily {
          UNION ALL
          SELECT 2, 'neardup', CAST(count(*) AS BIGINT),
                 CAST(COALESCE(sum(n_tokens), 0) AS BIGINT) FROM ns"""),
-    // CCNet-style line-level dedup over a deterministically synthesized
-    // multi-line corpus (the flat corpus has no newlines): every doc gets
-    // a shared boilerplate line, its 40-char prefix as a line, and every
-    // third doc a second banner. The oracle replays frequency counting +
-    // reassembly entirely in SQL (Spark keys the count by xxhash64 of the
-    // trimmed line — fixed-width shuffle payload; same decision absent a
-    // 64-bit collision).
     // exact substring-duplication detector (Lee et al. 2022 reduced to
     // its diagnostic core): 40-char windows every 20 chars, a window is
     // duplicated iff its hash appears in >= 2 distinct docs; per-doc
@@ -489,10 +459,7 @@ object DedupQueries extends QueryFamily {
       // windowed-hash substring duplication replayed from generate_series +
       // substring + md5 (both engines hash the same UTF-8 bytes to the same
       // lowercase hex)
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
-                    WHERE length(text) >= 40),
-         w AS (SELECT doc_id, md5(substring(text, CAST(p AS INT), 40)) AS h
-               FROM d, unnest(generate_series(1, len - 40 + 1, 20)) AS t(p)),
+      s"""WITH $md5WindowCtes,
          dup AS (SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
          per AS (SELECT doc_id, count(*) AS n_dup FROM w
                  WHERE h IN (SELECT h FROM dup) GROUP BY doc_id),
@@ -508,10 +475,7 @@ object DedupQueries extends QueryFamily {
         .orderBy(col("doc")),
       // novelty: same windowing, (hash -> min doc) first-occurrence
       // attribution; sum cast (DuckDB sum(int) widens)
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
-                    WHERE length(text) >= 40),
-         w AS (SELECT doc_id, md5(substring(text, CAST(p AS INT), 40)) AS h
-               FROM d, unnest(generate_series(1, len - 40 + 1, 20)) AS t(p)),
+      s"""WITH $md5WindowCtes,
          fd AS (SELECT h, min(doc_id) AS first_doc FROM w GROUP BY h)
          SELECT w.doc_id AS doc, CAST(count(*) AS BIGINT) AS n_win,
                 CAST(sum(CASE WHEN fd.first_doc < w.doc_id THEN 1 ELSE 0 END)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Query, QueryFamily}
 import graft.QueryInputs._
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, DedupQueries}
 
 /** LLM-data text operators: tokenization and BPE, quality and
   * language scores, LM and DSIR weights, PII redaction, contamination,
@@ -405,21 +405,7 @@ object TextQueries extends QueryFamily {
       // keep-best replay: same group closure, then a per-group argmax by
       // token count (ties to the smallest id) via a window
       s"""WITH RECURSIVE
-         m AS (SELECT doc, sh, bks FROM '$OracleAuxDir/minhash_sig/*.parquet'),
-         p AS (
-           SELECT a.doc AS id0, b.doc AS id1
-           FROM m a JOIN m b ON a.doc < b.doc
-             AND len(list_intersect(a.bks, b.bks)) > 0
-           WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4)
-             >= 0.5),
-         e AS (SELECT id0 AS u, id1 AS v FROM p
-               UNION SELECT id1, id0 FROM p),
-         reach(id, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT e.v, reach.r FROM e JOIN reach ON e.u = reach.id),
-         g AS (SELECT id, min(r) AS group_id FROM reach GROUP BY id),
+         ${DedupQueries.nearDupGroupCtes},
          sc AS (SELECT doc_id AS id,
                        CAST(len(str_split(text, ' ')) AS BIGINT) AS score
                 FROM documents),
@@ -519,6 +505,13 @@ object TextQueries extends QueryFamily {
          SELECT d.doc_id AS id, COALESCE(h.n_hits, 0) AS n_hits,
                 COALESCE(h.n_hits, 0) > 0 AS contaminated
          FROM d LEFT JOIN h USING (doc_id)"""),
+    // CCNet-style line-level dedup over a deterministically synthesized
+    // multi-line corpus (the flat corpus has no newlines): every doc gets
+    // a shared boilerplate line, its 40-char prefix as a line, and every
+    // third doc a second banner. The oracle replays frequency counting +
+    // reassembly entirely in SQL (Spark keys the count by xxhash64 of the
+    // trimmed line — fixed-width shuffle payload; same decision absent a
+    // 64-bit collision).
     Query("q_line_dedup", (s, dir) => {
       val corpus = docs(s, dir).select(col("doc_id"),
         concat(col("text"), lit("\nsubscribe to our newsletter\n"),

@@ -192,6 +192,18 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("simhash pairs: salted band join on (bk, salt0, salt1), no cartesian") {
+    // exact copies share all four bands, so a band can be a hot bucket:
+    // the pair join must be keyed on the salts, like every dedup pair path
+    val docs = spark.read.parquet(s"$sfTiny/documents.parquet").limit(200)
+    val plan = executed(graft.dedup.Dedup.simhashPairs(docs, "doc_id", "text"))
+    assert(!plan.contains("CartesianProduct"), plan)
+    assert(plan.linesIterator.exists(l =>
+      (l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin") ||
+        l.contains("BroadcastHashJoin")) &&
+        Seq("[bk#", "salt0#", "salt1#").forall(l.contains)), plan)
+  }
+
   test("similarity expressions evaluate once (no Filter/Project duplication)") {
     // the threshold filter must NOT be pushed through the scoring
     // projection — that re-evaluates the O(n) intersection / dot product

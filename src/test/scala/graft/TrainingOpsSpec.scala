@@ -858,6 +858,54 @@ class DedupSpec extends SparkSpec {
     assert(got == truth, s"got=${got.size} truth=${truth.size}")
   }
 
+  test("band-key LSH pairs == brute force over their own signatures under forced salting") {
+    import spark.implicits._
+    // twelve exact copies of one document make every band of its text a
+    // 13-row bucket, which aim = 50 salts (fan-out ceil(13 / sqrt(50)) = 2)
+    val base = documents.where(col("doc_id") < 300).select(col("doc_id"), col("text"))
+    val docs = base.unionByName(base.where(col("doc_id") === 0)
+      .crossJoin(spark.range(1, 13).toDF("k"))
+      .select((col("k") + 100000L).as("doc_id"), col("text")))
+    def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // (id0, id1, |A∩B|, |A∪B|) of every pair of signature rows that share
+    // at least one band key
+    def candidates(sig: DataFrame, mem: String) = {
+      val rows = sig.select(col("doc").cast("long"), col(mem), col("bks"))
+        .as[(Long, Seq[String], Seq[String])].collect()
+        .map { case (id, m, k) => (id, m.toSet, k.toSet) }
+      for {
+        (i, mi, ki) <- rows.toSeq; (j, mj, kj) <- rows.toSeq
+        if i < j && ki.exists(kj)
+        n = mi.intersect(mj).size.toLong
+      } yield (i, j, n, mi.size + mj.size - n)
+    }
+    def onceEach(got: Seq[(Long, Long)]) =
+      assert(got.distinct.length == got.length, "a pair is emitted twice")
+
+    val mh = Dedup.minhashLshPairs(docs, "doc_id", "text", 0.5, aim = 50L)
+      .select(col("id0").cast("long"), col("id1").cast("long"), col("jaccard"))
+      .as[(Long, Long, Double)].collect().toSeq
+    val mhWant = candidates(Dedup.minhashSignatures(docs, "doc_id", "text"), "sh")
+      .map { case (i, j, n, u) => (i, j, r4(n.toDouble / u)) }
+      .filter(_._3 >= 0.5).toSet
+    onceEach(mh.map(t => (t._1, t._2)))
+    assert(mh.toSet == mhWant, s"minhash: missed=${(mhWant -- mh).take(5)} " +
+      s"extra=${(mh.toSet -- mhWant).take(5)}")
+    assert(mhWant.count(_._1 == 0L) >= 12, "the copies must pair up")
+
+    val wm = Dedup.weightedMinhashLshPairs(docs, "doc_id", "text", 0.5, aim = 50L)
+      .select(col("id0").cast("long"), col("id1").cast("long"),
+        col("wj_num").cast("long"), col("wj_den"), col("wjaccard"))
+      .as[(Long, Long, Long, Long, Double)].collect().toSeq
+    val wmWant = candidates(Dedup.weightedMinhashSignatures(docs, "doc_id", "text"), "mem")
+      .filter { case (_, _, n, u) => n * 1000000L >= 500000L * u }
+      .map { case (i, j, n, u) => (i, j, n, u, r4(n.toDouble / u)) }.toSet
+    onceEach(wm.map(t => (t._1, t._2)))
+    assert(wm.toSet == wmWant, s"weighted: missed=${(wmWant -- wm).take(5)} " +
+      s"extra=${(wm.toSet -- wmWant).take(5)}")
+    assert(wmWant.count(_._1 == 0L) >= 12, "the copies must pair up")
+  }
+
   test("exact dedup groups partition the table") {
     import spark.implicits._
     val g = Dedup.exactGroups(documents, col("text"), col("doc_id"))
